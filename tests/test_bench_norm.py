@@ -1,15 +1,16 @@
-"""Unit coverage for bench.py's load-normalization core (round 16;
-round 17 adds the in-pass series leg, the combined pass_slowdowns,
-the codified quiet gate, and the reference-resolution protocol): the
-instrument the round trend rides on must not regress silently. Pure
-math — no Spark session."""
+"""Unit coverage for bench.py's pure parts: the per-query statistic, the
+SPARK_GRAFT_BENCH_ONLY check, and the compact final line the driver
+parses. No Spark session."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
-from bench import (external_busy_cores, load_normalize, normalize_by_pass,
-                   pass_slowdowns, quiet_verdict, resolve_ref, robust_stat)
+import bench
+from bench import compact_line, parse_only, robust_stat
+from data_engineering_projects_spark import contract
 
 
 def test_robust_stat_median_and_best_of():
@@ -19,224 +20,52 @@ def test_robust_stat_median_and_best_of():
     assert robust_stat([7.0]) == 7.0
 
 
-def test_relative_norm_rescales_loaded_pass_toward_quietest():
-    # pass 0 loaded 2x (cal 0.4 vs idle 0.2): its sample is halved;
-    # pass 1 quiet: untouched. Median over corrected samples.
-    samples = {"q": [2.0, 1.0, 1.0]}
-    passes = {"q": [0, 1, 2]}
-    cal = [0.4, 0.4, 0.2, 0.2]  # brackets: p0=0.4, p1=0.2, p2=0.2
-    out = load_normalize(samples, passes, cal)
-    assert out["q"] == 1.0      # corrected [1.0, 1.0, 1.0] -> 1.0
+def test_parse_only_returns_sorted_subset_or_empty():
+    registry = ["a_q", "b_q", "c_q"]
+    assert parse_only("", registry) == []
+    assert parse_only(" , ", registry) == []
+    assert parse_only("c_q, a_q,c_q", registry) == ["a_q", "c_q"]
 
 
-def test_relative_norm_cannot_correct_uniform_load():
-    # loaded THROUGHOUT: min-of-own-run ref equals every bracket, so
-    # the relative form returns raw — the r15 failure mode ...
-    samples = {"q": [2.0, 2.0, 2.0]}
-    passes = {"q": [0, 1, 2]}
-    cal = [0.4, 0.4, 0.4, 0.4]
-    assert load_normalize(samples, passes, cal)["q"] == 2.0
-    # ... which the absolute form corrects against the pinned idle ref
-    out = load_normalize(samples, passes, cal, ref=0.2)
-    assert out["q"] == 1.0
+def test_bench_rejects_unknown_names_before_a_session(monkeypatch, capsys):
+    def no_session(*_args, **_kwargs):
+        raise AssertionError("session started before the subset check")
+
+    monkeypatch.setattr(bench, "get_session", no_session)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY",
+                       "not_a_query_2,aws_tti_top10,not_a_query_1")
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code == 2
+    assert "not_a_query_1, not_a_query_2" in capsys.readouterr().err
 
 
-def test_bracket_takes_min_of_adjacent_samples():
-    # a load spike AT a bracket boundary must not penalize the quiet
-    # pass next to it: each pass uses min(cal[p], cal[p+1])
-    samples = {"q": [1.0]}
-    passes = {"q": [0]}
-    cal = [0.8, 0.2]            # spike before pass 0, quiet after
-    assert load_normalize(samples, passes, cal)["q"] == 1.0
+def test_compact_line_fits_capture_and_keeps_slowest_first():
+    contract.load_all()
+    names = sorted(contract.QUERIES, key=lambda n: (-len(n), n))[:129]
+    assert len(names) == 129
+    # distinct timings in an order unrelated to the names' order
+    timings = {n: round(0.123 + ((i * 37) % 129) * 0.0417, 3)
+               for i, n in enumerate(names)}
+    streaming = [n for n in names if n.startswith("streaming_")]
+    streaming_total = round(sum(timings[n] for n in streaming), 3)
+    total = round(sum(timings.values()), 3)
+    full = {"metric": "contract_suite_runtime", "value": total,
+            "unit": "sec", "sf": 0.1, "queries": timings,
+            "batch_total": round(total - streaming_total, 3),
+            "streaming_total": streaming_total,
+            "streaming_fixed_overhead": 0.506, "reps_completed": 3}
 
+    line = compact_line(full)
 
-def test_last_pass_bracket_clamps_to_final_sample():
-    samples = {"q": [1.0, 1.0]}
-    passes = {"q": [0, 1]}
-    cal = [0.2, 0.2, 0.4]       # only a trailing sample for pass 1
-    out = load_normalize(samples, passes, cal, ref=0.2)
-    # pass 1 bracket = min(cal[1], cal[2]) = 0.2 -> untouched
-    assert out["q"] == 1.0
-
-
-def test_absolute_norm_is_window_comparable():
-    # two windows of the same true work, one quiet one 1.5x loaded,
-    # must normalize to the same absolute total
-    quiet = load_normalize({"q": [1.0]}, {"q": [0]}, [0.2, 0.2],
-                           ref=0.2)
-    loaded = load_normalize({"q": [1.5]}, {"q": [0]}, [0.3, 0.3],
-                            ref=0.2)
-    assert quiet["q"] == pytest.approx(loaded["q"])
-
-# ---- round 17: in-pass load integral + combined slowdowns ----------------
-
-def test_external_busy_cores_basic_window():
-    # 100 jiffies/s clock; over 10s total busy grew 2000j, ours 1000j:
-    # external = 1000j / 10s / 100 = 1.0 core
-    series = [(0.0, 0.0, 0.0), (10.0, 2000.0, 1000.0)]
-    assert external_busy_cores(series, 0.0, 10.0, clk=100.0) == \
-        pytest.approx(1.0)
-
-
-def test_external_busy_cores_widens_to_bracketing_samples():
-    # window [4, 6] has no interior samples: widen to [0, 10]
-    series = [(0.0, 0.0, 0.0), (10.0, 32000.0, 0.0)]
-    assert external_busy_cores(series, 4.0, 6.0, clk=100.0) == \
-        pytest.approx(32.0)
-
-
-def test_external_busy_cores_uses_window_samples_only():
-    # load confined to [10, 20] must not leak into the [0, 10] window
-    series = [(0.0, 0.0, 0.0), (10.0, 0.0, 0.0), (20.0, 16000.0, 0.0)]
-    assert external_busy_cores(series, 0.0, 10.0, clk=100.0) == \
-        pytest.approx(0.0)
-    assert external_busy_cores(series, 10.0, 20.0, clk=100.0) == \
-        pytest.approx(16.0)
-
-
-def test_external_busy_cores_clamps_negative_and_short_series():
-    # ours > busy (rounding jitter) clamps to 0; <2 samples -> None
-    series = [(0.0, 0.0, 0.0), (10.0, 100.0, 200.0)]
-    assert external_busy_cores(series, 0.0, 10.0, clk=100.0) == 0.0
-    assert external_busy_cores([(0.0, 0.0, 0.0)], 0.0, 1.0) is None
-    assert external_busy_cores([], 0.0, 1.0) is None
-
-
-def test_pass_slowdowns_corrects_by_series_integral_only():
-    # pass 0: brackets lull quiet (0.2 = ref) but sustained E=16 between
-    # them -> series corrects (1 + 0.075*16 = 2.2): the r16 window-B
-    # under-correction closed. pass 1: bracket spike (0.4 = 2x) with a
-    # QUIET series must NOT inflate the correction — the r17 calibration
-    # measured the probe over-responding to spin load (1.48x bracket at
-    # a 1.14x suite); such windows are the quiet gate's job.
-    s = pass_slowdowns([0.2, 0.4, 0.4], 0.2, [16.0, 0.0],
-                       k_ext=0.075)
-    assert s[0] == pytest.approx(2.2)
-    assert s[1] == pytest.approx(1.0)
-
-
-def test_pass_slowdowns_floor_at_one_and_bracket_fallback():
-    # a dead sampler (None) falls back to the bracket leg; a bracket
-    # FASTER than ref (warm luck) must not inflate samples
-    s = pass_slowdowns([0.15, 0.4, 0.4], 0.2, [None, None],
-                       k_ext=0.075)
-    assert s[0] == 1.0                      # min(0.15, 0.4)/0.2 < 1
-    assert s[1] == pytest.approx(2.0)       # min(0.4, 0.4)/0.2
-
-
-def test_normalize_by_pass_divides_each_sample_by_its_pass():
-    samples = {"q": [2.2, 1.0]}
-    passes = {"q": [0, 1]}
-    out = normalize_by_pass(samples, passes, [2.2, 1.0])
-    assert out["q"] == 1.0      # corrected [1.0, 1.0] -> best-of 1.0
-
-
-def test_sustained_load_window_corrects_to_quiet_reference():
-    # the r16 window-B failure shape, end to end: raw 2.2x throughout,
-    # brackets lull at 1.05x (under-correct), series sees E=16
-    samples = {"q": [2.2, 2.2, 2.2]}
-    passes = {"q": [0, 1, 2]}
-    cal = [0.21, 0.21, 0.21, 0.21]
-    slow = pass_slowdowns(cal, 0.2, [16.0, 16.0, 16.0], k_ext=0.075)
-    out = normalize_by_pass(samples, passes, slow)
-    assert out["q"] == pytest.approx(1.0, rel=0.01)
-
-
-def test_quiet_verdict_gates_on_series_and_brackets():
-    ref = 0.2
-    ok, _ = quiet_verdict([0.3, 0.5], [0.2, 0.21, 0.2], ref)
-    assert ok
-    bad_series, why = quiet_verdict([8.0, 9.0], [0.2, 0.2, 0.2], ref)
-    assert not bad_series and "external load" in why
-    bad_bracket, why = quiet_verdict([0.0, 0.0], [0.3, 0.31, 0.3], ref)
-    assert not bad_bracket and "bracket" in why
-    # dead sampler: series leg abstains, brackets still gate
-    ok2, _ = quiet_verdict([None, None], [0.2, 0.2, 0.2], ref)
-    assert ok2
-
-
-def test_resolve_ref_prefers_file_at_matching_cores():
-    got = resolve_ref({"ref_mc_idle": 0.218, "k_ext": 0.07,
-                       "n_cores": 32, "date": "2026-08-16"}, 32)
-    assert got["value"] == 0.218 and got["k_ext"] == 0.07
-    assert got["source"] == "BENCH_ref.json"
-
-
-def test_resolve_ref_rejects_mismatched_probe_cores():
-    # a file measured at 32 partitions does not describe a 16-core
-    # probe; at 32 cores the pinned fallback applies
-    got = resolve_ref({"ref_mc_idle": 0.218, "n_cores": 16}, 32)
-    assert got["source"] == "pinned-r16"
-    # at any OTHER core count the resolver degrades gracefully instead
-    # of asserting (round 18: the assert killed SPARK_GRAFT_CPUS=8 runs
-    # AFTER the full suite executed, before any JSON printed — the
-    # driver's scaling block came back empty)
-    got16 = resolve_ref({"ref_mc_idle": 0.218, "n_cores": 32}, 16)
-    assert got16["value"] is None
-    assert got16["source"] == "unavailable"
-    assert got16["n_cores"] == 16
-
-
-def test_resolve_ref_matches_non32_reference():
-    # a reference re-pinned at 8 cores serves an 8-core run directly
-    got = resolve_ref({"ref_mc_idle": 0.61, "k_ext": 0.05,
-                       "n_cores": 8, "date": "2026-08-18"}, 8)
-    assert got["value"] == 0.61 and got["source"] == "BENCH_ref.json"
-
-
-def test_resolve_ref_pinned_fallback_without_file():
-    got = resolve_ref(None, 32)
-    assert got["source"] == "pinned-r16" and got["value"] == 0.21
-
-
-def test_quiet_verdict_uses_steady_brackets():
-    # the real r17 anchor shape: pre-pass-1 bracket structurally cold
-    # (1.42x) while the steady band sits at 1.01-1.16x — the gate must
-    # judge host load from the steady samples (spread_steady precedent)
-    ref = 0.2045
-    cal = [0.2898, 0.2221, 0.2072, 0.2378]
-    ok, _ = quiet_verdict([0.15, 0.92, 0.75], cal, ref)
-    assert ok
-    # but a steadily-loaded band still fails regardless of sample 0
-    bad, why = quiet_verdict([0.2, 0.2], [0.20, 0.31, 0.30, 0.31], ref)
-    assert not bad and "bracket" in why
-
-
-def test_classify_load_three_classes():
-    """The 2x2 the round-17 windows measured: high external jiffies ->
-    spin (series corrects); low ext but uniformly elevated brackets ->
-    steal (brackets correct, validated 1.2%/1.4% on two refused
-    windows); both low -> quiet."""
-    from bench import classify_load
-
-    ref = 0.2173
-    # spin: 16 hogs visible to the ledger
-    cls, me, mr = classify_load([16.2, 16.5, 16.1],
-                                [0.30, 0.32, 0.31, 0.33], ref)
-    assert cls == "spin" and me == 16.2
-    # steal: the 2026-08-17 refused-window shape (ext ~1 core,
-    # brackets ~1.8x)
-    cls, me, mr = classify_load([0.83, 1.35, 0.84],
-                                [0.368, 0.4179, 0.2424, 0.39], ref)
-    assert cls == "steal" and mr > 1.1
-    # quiet: the anchor-window shape
-    cls, me, mr = classify_load([0.5, 0.8, 0.6],
-                                [0.21, 0.19, 0.20, 0.20], ref)
-    assert cls == "quiet" and mr <= 1.1
-
-
-def test_classify_load_spin_wins_over_steal_and_handles_no_series():
-    """ext >= threshold classifies spin even with elevated brackets
-    (under pure spin the probe over-responds — that's the class where
-    trusting it would over-correct ~25%); a dead sampler (no ext
-    samples) can still classify steal/quiet from brackets alone."""
-    from bench import classify_load
-
-    ref = 0.2173
-    cls, _, _ = classify_load([8.0, 9.0, 8.5],
-                              [0.40, 0.42, 0.41, 0.43], ref)
-    assert cls == "spin"
-    cls, _, _ = classify_load([None, None], [0.40, 0.42, 0.41, 0.43], ref)
-    assert cls == "steal"
-    cls, _, _ = classify_load([None], [0.21, 0.20, 0.21], ref)
-    assert cls == "quiet"
+    assert len(line.encode()) <= 2000
+    got = json.loads(line)
+    assert {"metric", "value", "unit", "sf", "n_queries", "batch_total",
+            "streaming_total", "streaming_fixed_overhead", "reps",
+            "queries"} <= set(got)
+    assert got["n_queries"] == 129 and got["reps"] == 3
+    kept = list(got["queries"])
+    slowest = sorted(timings, key=lambda n: -timings[n])
+    assert 0 < len(kept) < 129
+    assert kept == slowest[:len(kept)]
+    assert all(got["queries"][n] == timings[n] for n in kept)
