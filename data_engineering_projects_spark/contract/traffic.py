@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.cleaning import clean_range
 from ..functions import metrics as M
 from ..functions.determinism import (
-    DEC_AVG_SQL, FOLD_AVG_SQL, dec_avg, fold_avg)
+    DEC_AVG_SQL, FOLD_AVG_SQL, HALF_ROUND_SQL, dec_avg, fold_avg, half_round)
 from ..sources import load_table
 from . import query
 
@@ -191,11 +191,12 @@ def _congestion_hourly(spark, sf_dir) -> DataFrame:
     return enriched
 
 
-@query("dbt_congestion_hourly", _CONGESTION_CTE + """
-SELECT location_id, recorded_hour, ROUND(avg_speed, 6) AS avg_speed,
+@query("dbt_congestion_hourly", _CONGESTION_CTE + f"""
+SELECT location_id, recorded_hour,
+       {HALF_ROUND_SQL.format(c='avg_speed', d=6)} AS avg_speed,
        total_volume, incident_count, max_severity, speed_limit, lanes,
-       ROUND(congestion_raw, 6) + 0.0 AS congestion_index,
-       ROUND(speed_ratio_raw, 6) AS speed_ratio
+       {HALF_ROUND_SQL.format(c='congestion_raw', d=6)} + 0.0 AS congestion_index,
+       {HALF_ROUND_SQL.format(c='speed_ratio_raw', d=6)} AS speed_ratio
 FROM congestion
 """)
 def dbt_congestion_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,25 +213,33 @@ def dbt_congestion_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ROUND(-0.0, 6)`` preserves ``-0.0`` while Spark's BigDecimal ROUND
     normalizes to ``+0.0``. Both sides therefore add ``+ 0.0`` after the
     ROUND (IEEE 754: ``-0.0 + 0.0 = +0.0``; every other value unchanged)
-    so a negative zero can never reach either engine's output."""
+    so a negative zero can never reach either engine's output.
+
+    The 6dp ROUNDs are :func:`half_round`: once ``value`` carries more
+    than 2 decimals, ``avg_speed`` is a 6dp sum over a count and can sit
+    on a 6dp half-boundary, where the engines' own ROUNDs disagree."""
     e = _congestion_hourly(spark, sf_dir)
     return e.select("location_id", "recorded_hour",
-                    F.round("avg_speed", 6).alias("avg_speed"),
+                    half_round(F.col("avg_speed"), 6).alias("avg_speed"),
                     "total_volume", "incident_count", "max_severity",
                     "speed_limit", "lanes",
-                    (F.round("congestion_raw", 6) + F.lit(0.0))
+                    (half_round(F.col("congestion_raw"), 6) + F.lit(0.0))
                     .alias("congestion_index"),
-                    F.round("speed_ratio_raw", 6).alias("speed_ratio"))
+                    half_round(F.col("speed_ratio_raw"), 6).alias("speed_ratio"))
 
 
 @query("dbt_daily_congestion_rank", _CONGESTION_CTE + f"""
-, daily AS (
+, daily_raw AS (
   SELECT location_id, CAST(recorded_hour AS DATE) AS day,
-         ROUND({FOLD_AVG_SQL.format(c='congestion_raw')}, 3) + 0.0
-           AS avg_daily_congestion,
-         ROUND({FOLD_AVG_SQL.format(c='avg_speed')}, 1) AS avg_daily_speed
+         {FOLD_AVG_SQL.format(c='congestion_raw')} AS congestion,
+         {FOLD_AVG_SQL.format(c='avg_speed')} AS speed
   FROM congestion WHERE congestion_raw IS NOT NULL
-  GROUP BY location_id, CAST(recorded_hour AS DATE))
+  GROUP BY location_id, CAST(recorded_hour AS DATE)),
+daily AS (
+  SELECT location_id, day,
+         {HALF_ROUND_SQL.format(c='congestion', d=3)} + 0.0 AS avg_daily_congestion,
+         {HALF_ROUND_SQL.format(c='speed', d=1)} AS avg_daily_speed
+  FROM daily_raw)
 SELECT * FROM (
   SELECT location_id, day, avg_daily_congestion, avg_daily_speed,
          RANK() OVER (PARTITION BY day ORDER BY avg_daily_congestion DESC)
@@ -257,13 +266,20 @@ def dbt_daily_congestion_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dbt_congestion_hourly`` already guards. Both sides add ``+ 0.0``
     after the ROUND (IEEE: ``-0.0 + 0.0 = +0.0``, all other values
     unchanged; compare semantics and rank ties unaffected since
-    ``-0.0 == 0.0`` in ordering)."""
+    ``-0.0 == 0.0`` in ordering).
+
+    The ROUNDs are :func:`half_round`: a mean of 6dp hourly speeds can
+    sit on a 1dp half-boundary, where the engines' own ROUNDs disagree
+    (perfbench's scaled events at seed 210: 54.4 vs 54.5)."""
     daily = (_congestion_hourly(spark, sf_dir)
              .filter(F.col("congestion_raw").isNotNull())
              .groupBy("location_id", F.to_date("recorded_hour").alias("day"))
-             .agg((F.round(fold_avg(F.col("congestion_raw")), 3) + F.lit(0.0))
-                  .alias("avg_daily_congestion"),
-                  F.round(fold_avg(F.col("avg_speed")), 1).alias("avg_daily_speed")))
+             .agg(fold_avg(F.col("congestion_raw")).alias("congestion"),
+                  fold_avg(F.col("avg_speed")).alias("speed"))
+             .select("location_id", "day",
+                     (half_round(F.col("congestion"), 3) + F.lit(0.0))
+                     .alias("avg_daily_congestion"),
+                     half_round(F.col("speed"), 1).alias("avg_daily_speed")))
     w = Window.partitionBy("day").orderBy(F.desc("avg_daily_congestion"))
     return (daily.withColumn("congestion_rank", F.rank().over(w))
                  .filter(F.col("congestion_rank") <= 10)

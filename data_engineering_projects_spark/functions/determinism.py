@@ -108,6 +108,27 @@ def fold_sum(col: Column) -> Column:
 FOLD_SUM_SQL = "SUM({c} ORDER BY {c})"
 
 
+def half_round(col: Column, digits: int) -> Column:
+    """``ROUND(col, digits)`` half away from zero, spelled as IEEE double
+    operations that Spark and DuckDB perform bit-identically:
+    ``sign(x) * floor(|x| * 10^d + 0.5) / 10^d``.
+
+    Plain ``ROUND`` of a derived double diverges between the engines on
+    a decimal half-boundary: Spark rounds the shortest repr HALF_UP,
+    DuckDB rounds the float product ``x * 10^d``. A mean of 6dp values
+    lands there (``(96.013224 + 12.886776) / 2`` is the double
+    ``54.449999999999996``: Spark ``ROUND(.., 1)`` gives 54.4, DuckDB
+    54.5). Use this where a contract output must round a derived double;
+    a tiny negative still rounds to ``-0.0``, so add ``+ 0.0`` after it."""
+    p = F.lit(float(10 ** digits))
+    return F.signum(col) * F.floor(F.abs(col) * p + F.lit(0.5)) / p
+
+
+#: DuckDB rendering of :func:`half_round` (format with c=column, d=digits).
+HALF_ROUND_SQL = ("(SIGN({c}) * FLOOR(ABS({c}) * CAST(1e{d} AS DOUBLE)"
+                  " + CAST(0.5 AS DOUBLE)) / CAST(1e{d} AS DOUBLE))")
+
+
 def spark_pct_sql(lst: str, cnt: str, p: float) -> str:
     """DuckDB SQL for an exact percentile that is bit-identical to
     Spark ``F.percentile`` BY CONSTRUCTION — for use in oracles whose

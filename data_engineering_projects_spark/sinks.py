@@ -11,10 +11,8 @@ name. Parity testing sinks to parquet/saveAsTable (BASELINE.md).
 from __future__ import annotations
 
 import math
-import os
-import shutil
-import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -37,43 +35,31 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
     writer.parquet(path)
 
 
-def estimate_parquet_bytes_per_row(df: DataFrame, sample_rows: int = 10_000,
-                                   tmp_dir: str | None = None) -> float:
-    """Measure COMPRESSED parquet bytes/row by writing a bounded sample.
-
-    Catalyst's ``sizeInBytes`` estimates the in-memory (uncompressed) width,
-    which over-counts parquet output by 3–10× for text-heavy tables — sizing
-    file counts off it yields pathologically small files. Writing
-    ``limit(sample_rows)`` once and measuring the actual footprint is one
-    bounded job (a few MB of IO regardless of table size) and is accurate
-    to within the sample's compressibility skew.
-
-    Returns bytes/row; 0.0 for an empty input (callers treat that as
-    "one file").
-    """
-    base = tmp_dir or tempfile.gettempdir()
-    probe = os.path.join(base, f"__compact_probe_{uuid.uuid4().hex}")
+@contextmanager
+def _staged(df: DataFrame, path: str, target_file_bytes: int,
+            max_files: int):
+    """Run ``df``'s plan exactly once: write it flat to a staging directory
+    beside ``path`` on the destination filesystem and yield ``(staged,
+    n_files)`` — the stage re-read with ``df``'s schema, and the file count
+    that puts ~``target_file_bytes`` of its exact compressed size into each
+    output file (capped at ``max_files``). The stage is deleted on exit,
+    whether or not the write succeeded."""
+    spark = df.sparkSession
+    stage = f"{path.rstrip('/')}._staging-{uuid.uuid4().hex}"
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(stage)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     try:
-        import pyarrow.parquet as pq
-        sample = df.limit(sample_rows).coalesce(1)
-        sample.write.mode("overwrite").parquet(probe)
-        n = 0
-        size = 0
-        for root, _dirs, files in os.walk(probe):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    size += os.path.getsize(p)
-                    n += pq.read_metadata(p).num_rows
-        return (size / n) if n else 0.0
+        df.write.parquet(stage)
+        size = fs.getContentSummary(jpath).getLength()
+        yield (spark.read.schema(df.schema).parquet(stage),
+               max(1, min(max_files, math.ceil(size / target_file_bytes))))
     finally:
-        shutil.rmtree(probe, ignore_errors=True)
+        fs.delete(jpath, True)
 
 
 def write_compacted(df: DataFrame, path: str,
                     target_file_bytes: int = 128 << 20,
                     layout_cols: list[str] | None = None,
-                    sample_rows: int = 10_000,
                     mode: str = "overwrite",
                     partition_by: list[str] | None = None,
                     max_files: int = 100_000) -> int:
@@ -84,9 +70,15 @@ def write_compacted(df: DataFrame, path: str,
     KB-sized files per partition (NameNode/listing pressure, per-file open
     cost dominates scans) and (b) one monster file per partition (no read
     parallelism). Spark's default file count is whatever the last shuffle
-    produced — unrelated to output size. This sink sizes the file count
-    from MEASURED compressed bytes/row (one bounded sample job +
-    one count job), then:
+    produced — unrelated to output size.
+
+    Cost model: ``df``'s upstream plan runs ONCE, landing flat in a stage
+    beside ``path``; the file count is the stage's exact compressed size
+    over ``target_file_bytes``; the final layout is one output-sized
+    rewrite from the stage on the destination filesystem. At 100 TB that
+    is one upstream pass plus one rewrite of the output, where sizing
+    from a row count and a bytes/row sample re-ran the upstream plan
+    three times. The layout:
 
     - ``layout_cols`` given → ``repartitionByRange`` + ``sortWithinPartitions``
       on those columns: every output file covers a disjoint key range, so
@@ -96,25 +88,15 @@ def write_compacted(df: DataFrame, path: str,
     - otherwise → round-robin ``repartition(n)``: uniform file sizes even
       under upstream skew.
 
-    Returns the file count used. Caps at ``max_files`` (sizing noise on a
-    huge input should never schedule an absurd shuffle width).
+    ``mode`` and ``partition_by`` apply to the final write only. Returns
+    the file count used, capped at ``max_files`` (a tiny target on a huge
+    input should never schedule an absurd shuffle width).
     """
-    rows = df.count()
-    if rows == 0:
-        df.coalesce(1).write.mode(mode).parquet(path)
-        return 1
-    bpr = estimate_parquet_bytes_per_row(df, sample_rows=sample_rows)
-    n_files = max(1, min(max_files,
-                         math.ceil(rows * max(bpr, 1.0) / target_file_bytes)))
-    if layout_cols:
-        out = (df.repartitionByRange(n_files, *layout_cols)
-                 .sortWithinPartitions(*layout_cols))
-    else:
-        out = df.repartition(n_files)
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    with _staged(df, path, target_file_bytes, max_files) as (staged, n_files):
+        out = (staged.repartitionByRange(n_files, *layout_cols) if layout_cols
+               else staged.repartition(n_files))
+        write_parquet(out, path, mode=mode, partition_by=partition_by,
+                      sort_within_partitions=layout_cols)
     return n_files
 
 
@@ -239,8 +221,7 @@ def zorder_code(df: DataFrame, cols: list[str], bits: int = 16,
 
 
 def write_zordered(df: DataFrame, path: str, zorder_cols: list[str],
-                   target_file_bytes: int = 128 << 20,
-                   bits: int = 16, sample_rows: int = 10_000,
+                   target_file_bytes: int = 128 << 20, bits: int = 16,
                    mode: str = "overwrite", rank: str = "minmax",
                    max_files: int = 100_000) -> int:
     """Z-order clustered parquet sink: multi-dimensional locality so
@@ -253,26 +234,21 @@ def write_zordered(df: DataFrame, path: str, zorder_cols: list[str],
     ``repartitionByRange`` on the code (each output file covers a
     compact Z-curve segment, i.e. a small hyper-rectangle of the key
     space) → sort within files by the code → drop the helper column.
-    File count is sized from measured compressed bytes/row exactly like
-    :func:`write_compacted`.
 
     The scale story: a 100 TB events table queried by BOTH time range
     and entity id can't be partitioned to serve either predicate well;
     z-ordering the two keys lets footer stats skip most files for
-    either. Cost is one full shuffle at write time — the same price as
-    any clustering — plus one min/max agg and one sizing sample.
+    either. Cost model, as in :func:`write_compacted`: ``df``'s upstream
+    plan runs once into a stage beside ``path``, which sizes the file
+    count from its exact compressed bytes; the scaling aggregate (min/max
+    or ``approxQuantile``) and the clustered rewrite — one full shuffle,
+    the price of any clustering — both read the stage, not ``df``.
     """
-    rows = df.count()
-    if rows == 0:
-        df.coalesce(1).write.mode(mode).parquet(path)
-        return 1
-    bpr = estimate_parquet_bytes_per_row(df, sample_rows=sample_rows)
-    n_files = max(1, min(max_files,
-                         math.ceil(rows * max(bpr, 1.0) / target_file_bytes)))
-    code, _ = zorder_code(df, zorder_cols, bits=bits, rank=rank)
-    out = (df.withColumn("__zorder__", code)
-             .repartitionByRange(n_files, "__zorder__")
-             .sortWithinPartitions("__zorder__")
-             .drop("__zorder__"))
-    out.write.mode(mode).parquet(path)
+    with _staged(df, path, target_file_bytes, max_files) as (staged, n_files):
+        code, _ = zorder_code(staged, zorder_cols, bits=bits, rank=rank)
+        (staged.withColumn("__zorder__", code)
+               .repartitionByRange(n_files, "__zorder__")
+               .sortWithinPartitions("__zorder__")
+               .drop("__zorder__")
+               .write.mode(mode).parquet(path))
     return n_files

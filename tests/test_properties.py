@@ -192,6 +192,33 @@ def test_plus_zero_kills_signed_zero_on_both_engines(spark):
     assert repr(s) == repr(d) == "0.0"
 
 
+def test_half_round_agrees_where_engine_round_diverges(spark):
+    """half_round is bit-identical on Spark and DuckDB, including on the
+    decimal half-boundaries where the engines' ROUNDs part ways: the
+    daily mean (96.013224 + 12.886776) / 2 = 54.449999999999996 (Spark
+    ROUND gives 54.4, DuckDB 54.5), a 6dp-mean quotient on a 6dp
+    boundary, and negative and tiny-negative congestion values."""
+    import duckdb
+    from data_engineering_projects_spark.functions.determinism import (
+        HALF_ROUND_SQL, half_round)
+    cases = [((96.013224 + 12.886776) / 2, 1), ((32.849571 + 0.0) / 2, 6),
+             (-0.0125, 3), (-0.0004, 3), (0.616992 / 192, 6), (0.0, 3)]
+    df = spark.createDataFrame(
+        [tuple(x for x, _ in cases)],
+        ", ".join(f"x{i} double" for i in range(len(cases))))
+    got = list(df.select(*[half_round(F.col(f"x{i}"), d)
+                           for i, (_, d) in enumerate(cases)]).first())
+    sql = ", ".join(HALF_ROUND_SQL.format(c=f"CAST({x!r} AS DOUBLE)", d=d)
+                    for x, d in cases)
+    want = list(duckdb.sql(f"SELECT {sql}").fetchone())
+    assert [repr(v) for v in got] == [repr(v) for v in want]
+    assert want[0] == 54.5 and want[2] == -0.013
+    x = repr(cases[0][0])
+    s = spark.sql(f"SELECT ROUND(CAST({x} AS DOUBLE), 1) AS r").first()["r"]
+    d = duckdb.sql(f"SELECT ROUND(CAST({x} AS DOUBLE), 1)").fetchone()[0]
+    assert (s, d) == (54.4, 54.5)            # plain ROUND: engines disagree
+
+
 @settings(max_examples=8, deadline=None)
 @given(st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)),
                 min_size=1, max_size=25))

@@ -210,27 +210,90 @@ def _parquet_files(path):
 
 
 def test_write_compacted_sizes_files_from_measured_bytes(spark, tmp_path):
-    """File count must come from MEASURED compressed bytes/row x rows /
-    target, not from whatever partitioning the input happened to have."""
-    from data_engineering_projects_spark.sinks import (
-        estimate_parquet_bytes_per_row, write_compacted,
-    )
+    """File count must come from MEASURED compressed bytes / target, not
+    from whatever partitioning the input happened to have."""
+    import os
+    from data_engineering_projects_spark.sinks import write_compacted
     df = (spark.range(0, 20_000, 1, 16)
           .withColumn("payload", F.sha2(F.col("id").cast("string"), 256)))
-    bpr = estimate_parquet_bytes_per_row(df, sample_rows=5_000)
-    assert bpr > 0
-    target = int(bpr * 20_000 / 4)  # aim for ~4 files
+    plain = tmp_path / "plain"
+    df.write.parquet(str(plain))
+    size = sum(os.path.getsize(f) for f in _parquet_files(plain))
+    target = size // 4  # aim for ~4 files
     out = tmp_path / "compacted"
     n = write_compacted(df, str(out), target_file_bytes=target)
     files = _parquet_files(out)
     assert n == len(files)
     assert 2 <= n <= 8, n  # sizing noise tolerated, 16->~4 compaction real
     # uniform layout: no file more than ~3x the smallest
-    import os
     sizes = [os.path.getsize(f) for f in files]
     assert max(sizes) <= 3 * min(sizes), sizes
     got = spark.read.parquet(str(out))
     assert got.count() == 20_000
+
+
+def test_compacted_and_zordered_sinks_run_the_input_plan_once(spark, tmp_path):
+    """The staged sinks evaluate ``df`` exactly once: a Python UDF that
+    counts its calls sees each row once per write, so a sizing count or
+    a bytes/row sample pass over ``df`` would show up as extra calls."""
+    from pyspark.sql.types import LongType
+    calls = spark.sparkContext.accumulator(0)
+
+    def plus_one(x):
+        calls.add(1)
+        return x + 1
+
+    df = spark.range(0, 500, 1, 2).withColumn(
+        "y", F.udf(plus_one, LongType())("id"))
+    sinks.write_compacted(df, str(tmp_path / "c"))
+    assert calls.value == 500
+    sinks.write_zordered(df, str(tmp_path / "z"), ["id", "y"])
+    assert calls.value == 1_000
+
+
+def test_write_compacted_staging_contract(spark, tmp_path):
+    """The stage beside ``path`` never outlives the call, failures still
+    propagate, ``mode`` applies to the final write, and the re-read of
+    the stage keeps every type and value."""
+    import datetime
+    import decimal
+    import glob
+    from pyspark.sql.utils import AnalysisException
+    from data_engineering_projects_spark.sinks import write_compacted
+
+    def stages():
+        return glob.glob(str(tmp_path / "*._staging-*"))
+
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [("01", datetime.datetime(2024, 1, 2, 3, 4, 5, 6),
+          decimal.Decimal("12.345678")),
+         ("10", datetime.datetime(2024, 2, 3, 4, 5, 6), None)],
+        "part STRING, ts TIMESTAMP, amount DECIMAL(18,6)")
+    write_compacted(df, out, partition_by=["part"])
+    assert stages() == []
+    back = spark.read.schema(df.schema).parquet(out)
+    assert sorted(back.select(*df.columns).collect()) == sorted(df.collect())
+    assert sorted(p.name for p in (tmp_path / "t").glob("part=*")) \
+        == ["part=01", "part=10"]
+    flat = spark.read.parquet(out).schema
+    assert flat["ts"].dataType == df.schema["ts"].dataType
+    assert flat["amount"].dataType == df.schema["amount"].dataType
+
+    write_compacted(df, out, mode="append", partition_by=["part"])
+    assert spark.read.parquet(out).count() == 4
+
+    with pytest.raises(AnalysisException):
+        write_compacted(df, out, mode="errorifexists")
+    assert stages() == []
+
+    def boom(x):
+        raise ValueError("udf failed")
+
+    bad = spark.range(3).withColumn("y", F.udf(boom, "long")("id"))
+    with pytest.raises(Exception, match="udf failed"):
+        write_compacted(bad, str(tmp_path / "bad"))
+    assert stages() == []
 
 
 def test_write_compacted_range_layout_gives_disjoint_file_ranges(spark, tmp_path):
