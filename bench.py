@@ -24,8 +24,9 @@ Protocol:
   inflates at most one of its samples. Streaming queries are sampled on
   the first pass only: their wall time is dominated by fixed
   micro-batch/sink start-stop cost, measured apart as
-  "streaming_fixed_overhead" (a 1-row no-op through the same
-  staged-parquet/availableNow/memory-sink harness, best of two).
+  "streaming_fixed_overhead" (a 1-row parquet table streamed as a no-op
+  through the same file-stream/availableNow/memory-sink harness, best of
+  two).
 - The next pass starts only if seconds-since-process-start plus 1.5x the
   last pass fits $SPARK_GRAFT_BENCH_DEADLINE (default 545; the driver
   kills bench about 580 s after process start).
@@ -46,6 +47,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -54,7 +56,7 @@ sys.path.insert(0, HERE)
 
 from data_engineering_projects_spark import contract
 from data_engineering_projects_spark.session import (free_local_checkpoint,
-                                                     get_session)
+                                                     get_session, scratch_dir)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -180,21 +182,29 @@ def main() -> None:
     timings = {n: round(robust_stat(samples[n]), 3) for n in names}
     total = round(sum(timings.values()), 3)
     # Fixed streaming overhead, measured explicitly (r6 verdict #3): a
-    # 1-row no-op query through the SAME staged-parquet -> availableNow
-    # -> memory-sink harness the contract streaming queries use. Its
-    # time is pure session/sink start-stop cost — none of it is
-    # data-proportional — so streaming_total decomposes as
-    # ~n_streams x streaming_fixed_overhead + data work.
+    # 1-row parquet table streamed as a no-op through the SAME
+    # table_and_stream -> availableNow -> memory-sink harness the contract
+    # streaming queries use. Its time is pure session/sink start-stop
+    # cost — none of it is data-proportional — so streaming_total
+    # decomposes as ~n_streams x streaming_fixed_overhead + data work.
     from data_engineering_projects_spark.contract.sessions import (
         _run_stream_to_memory)
+    from data_engineering_projects_spark.sources import table_and_stream
+
+    one_dir = scratch_dir("depa_bench_noop_")
+    spark.range(1).selectExpr("CAST(id AS LONG) AS id") \
+        .write.parquet(f"{one_dir}/one.parquet")
 
     def noop_stream_once() -> float:
-        one = spark.range(1).selectExpr("CAST(id AS LONG) AS id")
         t0 = time.perf_counter()
-        _run_stream_to_memory(spark, one, "noopfixed", lambda s: s)
+        _, one = table_and_stream(spark, one_dir, "one")
+        _run_stream_to_memory(spark, one, 1, "noopfixed", lambda s: s)
         return time.perf_counter() - t0
 
-    streaming_fixed = round(min(noop_stream_once(), noop_stream_once()), 3)
+    try:
+        streaming_fixed = round(min(noop_stream_once(), noop_stream_once()), 3)
+    finally:
+        shutil.rmtree(one_dir, ignore_errors=True)
     streaming = [n for n in names if n.startswith("streaming_")]
     streaming_total = round(sum(timings[n] for n in streaming), 3)
     full = {

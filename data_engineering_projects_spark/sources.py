@@ -31,7 +31,35 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one star-schema parquet table with deterministic types.
+    """Read one star-schema parquet table with deterministic types
+    (see :func:`_typed` for the ``events.ts`` fix)."""
+    tune(spark)
+    return _typed(spark.read.parquet(f"{sf_dir}/{name}.parquet"), name)
+
+
+def table_and_stream(spark: SparkSession, sf_dir: str,
+                     name: str) -> tuple[DataFrame, DataFrame]:
+    """:func:`load_table`'s frame and its streaming twin — the same typed
+    frame, as a parquet file stream over the table's own files (no
+    copy) — over one schema inference (a Spark job): the file stream
+    needs a declared schema, and it takes the batch read's. The batch
+    frame serves to count the rows the stream will admit.
+
+    A directory table streams its directory. A single-file table streams
+    its parent directory with ``pathGlobFilter`` set to its file name:
+    the file source rejects a file path ("Option 'basePath' must be a
+    directory"), and the filter keeps sibling files out."""
+    tune(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    raw = spark.read.parquet(path)
+    reader = spark.readStream.schema(raw.schema)
+    if not _is_dir(spark, path):
+        reader, path = reader.option("pathGlobFilter", f"{name}.parquet"), sf_dir
+    return _typed(raw, name), _typed(reader.parquet(path), name)
+
+
+def _typed(df: DataFrame, name: str) -> DataFrame:
+    """Deterministic types for a raw table read, batch or stream.
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark's
     vectorized reader rejects; we read it via the nanosAsLong legacy conf
@@ -39,8 +67,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     no precision loss at 1e18 magnitudes), matching DuckDB/pandas µs
     semantics bit-for-bit.
     """
-    tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -130,6 +156,14 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(conf).exists(p)
+
+
+def _is_dir(spark: SparkSession, path: str) -> bool:
+    """True when the existing ``path`` is a directory, on any Hadoop
+    filesystem (local, s3a://, hdfs://)."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.getFileStatus(p).isDirectory()
 
 
 def read_jsonl(spark: SparkSession, paths: list[str] | str, schema=None,

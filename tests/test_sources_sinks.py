@@ -12,7 +12,7 @@ from pyspark.sql.types import (
 
 from data_engineering_projects_spark.sources import read_parquet_evolved
 from data_engineering_projects_spark.sources import (
-    load_table, read_csv_glob, register_views,
+    load_table, read_csv_glob, register_views, table_and_stream,
 )
 from data_engineering_projects_spark import sinks
 from data_engineering_projects_spark.sinks import write_parquet
@@ -48,6 +48,49 @@ def test_register_views(spark, sf_dir):
         SELECT r.r_name, COUNT(*) AS n FROM nation n
         JOIN region r ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name""")
     assert got.count() == 5
+
+
+def _stream_rows(spark, stream, tmp_path, name: str) -> list:
+    """Every row an availableNow run of ``stream`` admits."""
+    q = (stream.writeStream.format("memory").queryName(name)
+         .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    try:
+        return spark.table(name).collect()
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def test_table_and_stream_equals_load_table(spark, sf_dir, tmp_path):
+    """A single-file table (the test-data layout, which streams its
+    parent directory behind ``pathGlobFilter``) and a Spark-written
+    directory table both stream the schema and rows that ``load_table``
+    reads — including the events ``ts`` fix."""
+    from collections import Counter
+
+    # the raw read keeps ts as the stored nanos (bigint) for load_table
+    # to convert, exactly as in the single-file table
+    spark.read.parquet(f"{sf_dir}/events.parquet").repartition(3) \
+        .write.parquet(str(tmp_path / "dir" / "events.parquet"))
+    for i, sf in enumerate((sf_dir, str(tmp_path / "dir"))):
+        want = load_table(spark, sf, "events")
+        batch, got = table_and_stream(spark, sf, "events")
+        assert got.schema == batch.schema == want.schema
+        assert dict(got.dtypes)["ts"] == "timestamp"
+        rows = _stream_rows(spark, got, tmp_path, f"table_stream_{i}")
+        assert Counter(rows) == Counter(want.collect())
+
+
+def test_table_stream_admits_no_sibling_file(spark, sf_dir, tmp_path):
+    """A sibling of a single-file table (``events_old.parquet``) sits in
+    the streamed directory but is not admitted."""
+    import shutil
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events_old.parquet")
+    _, stream = table_and_stream(spark, str(tmp_path), "events")
+    rows = _stream_rows(spark, stream, tmp_path, "table_stream_sibling")
+    assert len(rows) == load_table(spark, sf_dir, "events").count() > 0
 
 
 def test_typed_props_view_parses_once_and_prunes(spark, sf_dir):

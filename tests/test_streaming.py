@@ -319,7 +319,7 @@ def test_state_partition_sizing(spark):
     assert spark.conf.get(key) == before
 
 
-def test_flush_batch_skip_is_result_identical(spark):
+def test_flush_batch_skip_is_result_identical(spark, tmp_path):
     """``flush_batch=False`` (round 17) suppresses the empty
     watermark-advance micro-batch for streams that emit in the data
     batch (dropDuplicates / inner stream-stream join). The rows must be
@@ -334,6 +334,11 @@ def test_flush_batch_skip_is_result_identical(spark):
          + F.make_dt_interval(secs=F.col("doc_id").cast("double")))
         .alias("ts"),
         (F.col("doc_id") % 50).alias("fp"))
+    d.write.parquet(str(tmp_path / "in"))
+    n_rows = d.count()
+
+    def stream():
+        return spark.readStream.schema(d.schema).parquet(str(tmp_path / "in"))
 
     def agg(stream):
         return (stream.withWatermark("ts", "1 hour")
@@ -341,14 +346,85 @@ def test_flush_batch_skip_is_result_identical(spark):
 
     with_flush = sorted(
         r["fp"] for r in
-        _run_stream_to_memory(spark, d, "flushT", agg).collect())
+        _run_stream_to_memory(spark, stream(), n_rows, "flushT", agg)
+        .collect())
     assert spark.conf.get(key) == before
     without = sorted(
         r["fp"] for r in
-        _run_stream_to_memory(spark, d, "flushF", agg,
+        _run_stream_to_memory(spark, stream(), n_rows, "flushF", agg,
                               flush_batch=False).collect())
     assert spark.conf.get(key) == before
     assert with_flush == without and len(without) > 0
+
+
+def test_conf_scopes_cover_start_only(spark, tmp_path, monkeypatch):
+    """The state-partition and flush-batch scopes wrap only ``start()``:
+    the query clones the session there, so the stream runs at the sized
+    state-partition count and without the flush batch, while the session
+    is back at its own values once ``start()`` has returned."""
+    from datetime import datetime
+
+    from data_engineering_projects_spark.contract import sessions
+    from data_engineering_projects_spark.session import (
+        sized_shuffle_partitions)
+
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.streaming.noDataMicroBatches.enabled")
+    before = tuple(spark.conf.get(k) for k in keys)
+    with sized_shuffle_partitions(spark, 150_000) as sized:
+        pass
+    assert sized != int(before[0])  # else the check below proves nothing
+    rows = [(datetime(2024, 1, 1, h), h % 3) for h in range(10)]
+    df = spark.createDataFrame(rows, "ts timestamp, user_id long")
+    df.write.parquet(str(tmp_path / "in"))
+    seen = []
+    real_assert = sessions._assert_single_batch
+
+    def spy(q, name):  # runs after the stream terminated
+        seen.append((q, tuple(spark.conf.get(k) for k in keys)))
+        real_assert(q, name)
+
+    monkeypatch.setattr(sessions, "_assert_single_batch", spy)
+    out = sessions._run_stream_to_memory(
+        spark, spark.readStream.schema(df.schema).parquet(str(tmp_path / "in")),
+        150_000, "scope",
+        lambda s: (s.withWatermark("ts", "1 hour")
+                   .dropDuplicatesWithinWatermark(["user_id"])),
+        flush_batch=False)
+    assert out.count() == 3
+    (q, conf_after_start), = seen
+    assert conf_after_start == before
+    assert len(q.recentProgress) == 1  # no flush batch
+    ops = [op for p in q.recentProgress for op in p["stateOperators"]]
+    assert ops and {op["numShufflePartitions"] for op in ops} == {sized}
+
+
+def test_streaming_call_drops_its_sink_view(spark):
+    """A streaming contract call leaves no ``depa_stream_*`` temp view
+    behind, and the frame it returns still holds the sink's rows."""
+    from data_engineering_projects_spark import contract
+
+    from .oracle import compare
+    contract.load_all()
+    df = contract.QUERIES["streaming_dedup_first"](spark, SF)
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("depa_stream_")]
+    compare(df, contract.ORACLES["streaming_dedup_first"], SF)
+
+
+def test_streaming_call_writes_no_stage(spark, monkeypatch):
+    """Contract streams read the table's own files: the only scratch
+    directory a call creates is its checkpoint, also for the
+    stream-stream join, whose two sides filter one events stream."""
+    from data_engineering_projects_spark import contract
+    from data_engineering_projects_spark.contract import sessions
+    contract.load_all()
+    made = []
+    real = sessions.scratch_dir
+    monkeypatch.setattr(sessions, "scratch_dir",
+                        lambda prefix: made.append(prefix) or real(prefix))
+    assert contract.QUERIES["streaming_click_attribution"](spark, SF).count() > 0
+    assert made == ["depa_stream_ck_attr_"]
 
 
 def test_streaming_query_restores_shuffle_partitions(spark):

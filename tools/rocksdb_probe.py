@@ -14,8 +14,8 @@ partition's entire state map on the executor HEAP between batches —
 state volume is bounded by executor memory and large state churns GC.
 RocksDB moves state off-heap with incremental changelog checkpointing,
 which is the production choice once per-executor state exceeds a few
-GB. The interplay with ``_with_state_partitions`` (state sized to
-staged rows) is recorded here: the sizing rule bounds the
+GB. The interplay with ``_with_state_partitions`` (state sized to the
+rows the stream admits) is recorded here: the sizing rule bounds the
 per-partition state either provider holds, so the two knobs compose —
 partition count controls snapshot/maintenance fan-out, the provider
 controls where each store's bytes live.
@@ -62,10 +62,10 @@ def main() -> int:
     for provider, label in [(default_provider, "hdfs"), (ROCKSDB, "rocksdb")]:
         spark.conf.set(PROVIDER_KEY, provider)
         for name in QUERIES:
-            # warm pass (JIT, parquet staging path, provider init), then
-            # timed pass; each _run_stream_to_memory call stages fresh
-            # input and a fresh checkpoint, so no state is reused across
-            # passes or providers.
+            # warm pass (JIT, file-stream source, provider init), then
+            # timed pass; each _run_stream_to_memory call streams the
+            # table's own files into a fresh checkpoint, so no state is
+            # reused across passes or providers.
             contract.QUERIES[name](spark, args.base)
             t0 = time.perf_counter()
             df = contract.QUERIES[name](spark, args.base)

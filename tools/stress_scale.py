@@ -43,7 +43,7 @@ volume the partition-sizing rule (`contract/sessions.py::
 _with_state_partitions`) computes from. Output rows must scale ~k
 (per-user windows replicate under new users); wall time should grow
 sub-linearly while the rule raises the state partition count with the
-staged volume.
+admitted volume.
 
 Fixture: NOT driver data — a clearly-marked local derivation under
 /tmp. Each scaled table unions k id-shifted copies of the sf0.1
