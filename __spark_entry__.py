@@ -35,8 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # correctness files are readable; it snapshots the round-6 computation:
 # the fixed round-5 red row ``docs_select_token_budget`` (oracle
 # window-SUM now CAST AS BIGINT) first, then the 34 r03-stale queries,
-# then the 44 r04-stale queries. Registry FROZEN at 128 per round-5
-# VERDICT #3.
+# then the r04-stale ones.
 _FRONT_R6 = [
     # round-5 red row, fixed (VERDICT r5 #1) — must be re-checked first
     "docs_select_token_budget",
@@ -61,11 +60,10 @@ _FRONT_R6 = [
     "azure_variability_top10", "bq_tti_trend_lag", "dbt_fk_orphans",
     "dbt_outlier_3sigma", "dbt_profile_events", "dbt_stg_volume_clean",
     "dedup_clusters", "dedup_embed_cosine", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_minhash_sweep", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_simhash_pairs", "docs_length_band",
+    "dedup_minhash_lsh", "dedup_ngram_jaccard",
+    "dedup_simhash_pairs", "docs_length_band",
     "docs_mixture_sample", "docs_pack_chunks", "docs_sample_stratified",
     "docs_split_assign", "docs_unigram_score", "embed_knn_blas",
-    "embed_knn_brute", "embed_knn_ivf", "embed_knn_ivf_sweep",
     "embed_label_centroids", "embed_normalize_quantize",
     "events_gap_fill_hourly", "events_rolling_7d", "events_salted_dim_join",
     "events_value_ntiles", "events_zscore_hourly",
@@ -293,15 +291,8 @@ def _ordered(d: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry swaps (rounds 11-13): contract.RETIRED entries stay
-    # importable for tests/tooling but leave the driver registry (count
-    # stays 128); swapped-in queries with no driver row yet
-    # (subset_star_closure, events_sketch_drift at r13) are fronted
-    # automatically by the staleness order.
-    from data_engineering_projects_spark.contract import RETIRED
-    return _ordered({k: v for k, v in QUERIES.items() if k not in RETIRED})
+    return _ordered(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    from data_engineering_projects_spark.contract import RETIRED
-    return _ordered({k: v for k, v in ORACLES.items() if k not in RETIRED})
+    return _ordered(ORACLES)

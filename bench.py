@@ -55,6 +55,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 from data_engineering_projects_spark import contract
+from data_engineering_projects_spark.contract import extensions
 from data_engineering_projects_spark.session import (free_local_checkpoint,
                                                      get_session, scratch_dir)
 
@@ -123,9 +124,7 @@ def _sf_from_dir(d: str) -> float:
 
 def main() -> None:
     contract.load_all()
-    # time exactly the driver-facing registry (RETIRED stays registered
-    # for warmup/tests but is not a registry query)
-    registry = sorted(set(contract.QUERIES) - contract.RETIRED)
+    registry = sorted(contract.QUERIES)
     only = parse_only(os.environ.get("SPARK_GRAFT_BENCH_ONLY", ""), registry)
     names = only or registry
     reps_target = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
@@ -148,7 +147,7 @@ def main() -> None:
     # warm the text/hash expression paths (regex tokenize, md5, HOFs) —
     # their first execution pays several seconds of JVM JIT that would
     # otherwise be charged to whichever dedup query runs first.
-    noop(contract.QUERIES["dedup_simhash"](spark, SF_DIR))
+    noop(extensions.dedup_simhash(spark, SF_DIR))
 
     def run_once(name: str) -> float:
         t0 = time.perf_counter()

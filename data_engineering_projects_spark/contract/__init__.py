@@ -1,5 +1,7 @@
 """The driver contract registry: named (PySpark query, DuckDB oracle SQL)
-pairs exported through ``__spark_entry__``.
+pairs exported through ``__spark_entry__``. ``QUERIES`` is exactly the
+driver-facing set and is frozen at 129 entries; COVERAGE.md records the
+registry swaps that kept it there.
 
 Conventions that make the order-insensitive value-hash comparison stable
 (SURVEY.md §5.2, §7.4):
@@ -63,55 +65,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-#: Registry swaps (the registry is FROZEN at 128 driver-facing entries
-#: per the round-5 verdict; the round-10 verdict sanctions RECORDED
-#: swaps of redundant entries to give the extension tier driver rows —
-#: see COVERAGE.md "round-11/round-12 registry swap"). Retired queries
-#: stay registered here (plan-shape tests and stress tooling still
-#: exercise them, and ``dedup_simhash_pairs`` calls ``dedup_simhash`` as
-#: its first stage) but are EXCLUDED from the driver-facing registry in
-#: ``__spark_entry__`` and from bench timing, keeping the driver count
-#: at 128.
-#:
-#: Round 11:
-#: - ``embed_knn_ivf`` → ``embed_pq_adc_topk``: the cell-restricted IVF
-#:   search shape remains covered by ``embed_knn_ivf_nprobe`` (same
-#:   shape + probe selection).
-#: - ``dedup_simhash`` → ``orders_scd2_current``: the per-doc simhash
-#:   signature relation remains covered as ``dedup_simhash_pairs``'s
-#:   first stage (identical code path).
-#:
-#: Round 12 (r11 verdict #1, redundancy candidates named there):
-#: - ``dedup_minhash_sweep`` → ``docs_pii_scrub``: every band/row
-#:   configuration in the sweep reuses the signature/band/verify chain
-#:   ``dedup_minhash_lsh`` keeps driver-checked at the production
-#:   configuration; the sweep stays pinned in tests + stress tooling.
-#: - ``embed_knn_ivf_sweep`` → ``corpus_extend_admissions``: the
-#:   monotone nprobe-growth property remains covered by
-#:   ``embed_knn_ivf_nprobe`` (same train/assign/search path, probe
-#:   selection included) and the sweep's property test.
-#: Round 13 (r12 verdict #4 — graduating the last two deterministic,
-#: oracle-renderable tier-2 components; z-order's pruning effect stays a
-#: pytest/stress contract, being a file-count metric rather than a
-#: relation — decision recorded in COVERAGE.md):
-#: - ``dedup_clusters_chain`` → ``subset_star_closure``: connected
-#:   components stay DOUBLE-covered by two independent driver-checked
-#:   algorithms (``dedup_clusters`` min-label propagation,
-#:   ``dedup_clusters_star`` star contraction — both against the same
-#:   min-label oracle); the chain variant's unique value (shrinking
-#:   edge-list iteration) remains pinned by its own tests and the
-#:   iterative stress family.
-#: - ``embed_knn_brute`` → ``events_sketch_drift``: the brute-force
-#:   cosine top-k result contract remains driver-checked via
-#:   ``embed_knn_blas`` (SAME oracle SQL, same rank/rounding rules);
-#:   HOF==BLAS equality is pinned in tests/test_similarity.py, and the
-#:   IVF recall grid measures against the brute baseline in stress.
-RETIRED: frozenset[str] = frozenset({
-    "embed_knn_ivf", "dedup_simhash",
-    "dedup_minhash_sweep", "embed_knn_ivf_sweep",
-    "dedup_clusters_chain", "embed_knn_brute",
-})
 
 
 def query(name: str, oracle: str | None = None):

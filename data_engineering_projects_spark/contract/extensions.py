@@ -817,57 +817,6 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_members"))
 
 
-@query("dedup_clusters_chain", """
-WITH RECURSIVE nodes AS (SELECT doc_id FROM documents),
-edges AS (SELECT a.doc_id AS u, b.doc_id AS v
-          FROM nodes a JOIN nodes b ON b.doc_id = a.doc_id + 1
-          WHERE a.doc_id % 64 <> 63),
-reach AS (
-  SELECT doc_id AS node, doc_id AS anc FROM nodes
-  UNION
-  SELECT r.node, e.u FROM reach r JOIN edges e ON e.v = r.anc),
-lab AS (SELECT node AS doc_id, MIN(anc) AS cluster_id FROM reach
-        GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS n_members
-FROM lab
-""")
-def dedup_clusters_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADVERSARIAL long-chain connected components — the graph shape
-    fixed-k min-label propagation provably cannot label (a planted
-    64-node path has diameter 63; k=8 propagation reaches only 8 hops),
-    pinning the log-diameter star-contraction path
-    (operators/clustering.py::connected_components_star) as more than a
-    same-answer alternate on clique-ish graphs.
-
-    Fixture: a deterministic path graph over the REAL doc_id domain —
-    edge (id, id+1) whenever both exist and id % 64 != 63, i.e. chains
-    of 64 consecutive ids (the dedup analog: a drifting near-dup chain
-    A~B~C~… where only adjacent pairs clear the similarity bar).
-    cluster_id = component minimum = the chain head; isolated ids (a
-    segment head with no successor) keep themselves. The oracle CANNOT
-    be the fixed-k CTE here by construction — it is a recursive-CTE
-    ancestor closure (terminates: ancestors are bounded by the chain),
-    an independent algorithm agreeing on the exact labels.
-
-    Scale: star contraction converges in O(log d) rounds — ~6 joins for
-    d=63 vs 63 for propagation; every round is one groupBy + equi-join
-    on the shrinking edge list with localCheckpoint lineage truncation.
-    At 100 TB the same operator handles unknown-diameter pair graphs
-    (the reason it exists)."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    nxt = (d.select(F.col("doc_id").alias("u"),
-                    (F.col("doc_id") + F.lit(1)).alias("v"))
-           .filter(F.col("u") % 64 != 63))
-    edges = nxt.join(d.select(F.col("doc_id").alias("v")), "v")
-    labels = connected_components_star(edges, "u", "v")
-    out = (d.join(labels, d.doc_id == labels.id, "left")
-           .select("doc_id",
-                   F.coalesce("label", "doc_id").alias("cluster_id")))
-    w = Window.partitionBy("cluster_id")
-    return out.withColumn("n_members", F.count(F.lit(1)).over(w))
-
-
 _CONTAM_K = 5  #: n-gram order for eval-set contamination (verbatim overlap)
 _CONTAM_EVAL_MOD = 50  #: doc_id % MOD == 0 plays the held-out eval set
 
@@ -988,11 +937,12 @@ def _simhash_sql() -> str:
     return f"WITH {_simhash_cte()}\nSELECT doc_id, simhash FROM sims"
 
 
-@query("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash document signatures: 16-bit sign-aggregated token hashes.
     One explode + one groupBy with 16 conditional sums — a single shuffle
-    keyed by doc_id; signature width is constant regardless of doc size."""
+    keyed by doc_id; signature width is constant regardless of doc size.
+    The first stage of ``dedup_simhash_pairs``, not a registered query;
+    tests/test_contract_parity.py checks it against ``_simhash_sql()``."""
     d = widen(load_table(spark, sf_dir, "documents"))
     tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     th = tok.select("doc_id", md5_hash64(F.col("tok"), seed=9).alias("h"))
@@ -1073,41 +1023,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COS = cosine_sql("q.embedding", "c.embedding")
 
 
-@query("embed_knn_brute", f"""
-WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id, embedding FROM embeddings),
-sims AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {_COS} AS sim
-  FROM q JOIN c ON q.vec_id <> c.vec_id)
-SELECT query_id, neighbor_id, ROUND(sim, 6) + 0.0 AS sim, knn_rank FROM (
-  SELECT query_id, neighbor_id, sim,
-         RANK() OVER (PARTITION BY query_id
-                      ORDER BY ROUND(sim, 9) DESC, neighbor_id) AS knn_rank
-  FROM sims)
-WHERE knn_rank <= 5
-""")
-def embed_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for a 10-query set: the exactness baseline.
-    The query side broadcasts; similarity is a JVM zip_with/aggregate fold
-    (no Python, no shuffle); per-query top-k is a rank window partitioned
-    by query. Rank orders by ROUND(sim, 9): summation-order ulps can never
-    reorder neighbors across engines."""
-    e = widen(load_table(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"))
-    sims = (F.broadcast(q).crossJoin(c)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id",
-                    cosine_similarity(F.col("q_emb"), F.col("c_emb")).alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc(F.round("sim", 9)), "neighbor_id")
-    return (sims.withColumn("knn_rank", F.rank().over(w))
-                .filter(F.col("knn_rank") <= 5)
-                .select("query_id", "neighbor_id", F.round("sim", 6).alias("sim"),
-                        "knn_rank"))
-
-
 @query("embed_knn_blas", f"""
 WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
 c AS (SELECT vec_id, embedding FROM embeddings),
@@ -1123,53 +1038,16 @@ SELECT query_id, neighbor_id, ROUND(sim, 6) + 0.0 AS sim, knn_rank FROM (
 WHERE knn_rank <= 5
 """)
 def embed_knn_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BLAS physical strategy for the same logical top-k as
-    ``embed_knn_brute`` — Arrow-batched mapInPandas, one numpy GEMM per
-    corpus batch, per-batch rank-with-ties<=k partial top-k, final exact
-    rank over the surviving candidates (operators.similarity). Checked
-    against the identical SQL oracle as the HOF path: two independent
-    implementations must agree to the hash."""
+    """Brute-force cosine top-5 for a 10-query set, the exactness baseline,
+    by the BLAS physical strategy: Arrow-batched mapInPandas, one numpy
+    GEMM per corpus batch, per-batch rank-with-ties<=k partial top-k,
+    final exact rank over the surviving candidates (operators.similarity).
+    The HOF strategy (``cosine_topk_hof``) is pinned equal to this one in
+    tests/test_similarity.py."""
     from ..operators.similarity import cosine_topk_blas
     e = widen(load_table(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < 10)
     return cosine_topk_blas(q, e, k=5)
-
-
-@query("embed_knn_ivf", f"""
-WITH q AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id, label, embedding FROM embeddings),
-sims AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {_COS} AS sim
-  FROM q JOIN c ON q.label = c.label AND q.vec_id <> c.vec_id)
-SELECT query_id, neighbor_id, ROUND(sim, 6) + 0.0 AS sim, knn_rank FROM (
-  SELECT query_id, neighbor_id, sim,
-         RANK() OVER (PARTITION BY query_id
-                      ORDER BY ROUND(sim, 9) DESC, neighbor_id) AS knn_rank
-  FROM sims)
-WHERE knn_rank <= 3
-""")
-def embed_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: restrict the search to the query's partition (the
-    ``label`` column plays the coarse-quantizer cell id). The candidate set
-    shrinks by ~|cells|× versus brute force — the scale path when cells are
-    pre-assigned; ``operators.similarity`` holds the centroid-assignment
-    variant."""
-    e = widen(load_table(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("label"),
-        F.col("embedding").alias("q_emb"))
-    c = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("label").alias("c_label"), F.col("embedding").alias("c_emb"))
-    sims = (c.join(F.broadcast(q), (F.col("label") == F.col("c_label"))
-                   & (F.col("query_id") != F.col("neighbor_id")))
-             .select("query_id", "neighbor_id",
-                     cosine_similarity(F.col("q_emb"), F.col("c_emb")).alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc(F.round("sim", 9)), "neighbor_id")
-    return (sims.withColumn("knn_rank", F.rank().over(w))
-                .filter(F.col("knn_rank") <= 3)
-                .select("query_id", "neighbor_id", F.round("sim", 6).alias("sim"),
-                        "knn_rank"))
 
 
 @query("embed_knn_ivf_nprobe", f"""
@@ -1204,7 +1082,7 @@ WHERE knn_rank <= 3
 def embed_knn_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search with the recall knob engaged: nprobe=2 — each query
     probes its TWO nearest cells by centroid cosine instead of only its
-    own (``embed_knn_ivf``), trading 2× candidate cost for recall exactly
+    own, trading 2× candidate cost for recall exactly
     like FAISS nprobe. Oracle-pinned end-to-end: centroids are the exact
     dec_avg per-(label, dim) means (bit-identical doubles on both
     engines), probe selection orders by ROUND(csim, 9) with the label
@@ -1402,12 +1280,6 @@ def embed_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer a 5-query top-5 by asymmetric distance computation: per-query
     (m × k) distance tables, m positional lookups per corpus row, no
     float vector read at scan time.
-
-    Swapped INTO the frozen 128-registry in round 11 for
-    ``embed_knn_ivf`` (judge-sanctioned swap: that row's cell-restricted
-    search shape stays covered by ``embed_knn_ivf_nprobe`` +
-    ``embed_knn_ivf_sweep``; the retired query remains registered for
-    tests/stress — see contract.RETIRED and COVERAGE.md).
 
     The oracle replays the IDENTICAL pipeline in SQL — init, rounded
     assignment with code tiebreak, dec_avg recompute, code
@@ -1912,196 +1784,6 @@ def docs_levenshtein_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       20).cast("bigint"))
             .filter(F.col("edit_dist") >= 0)
             .select("doc_a", "doc_b", "edit_dist"))
-
-
-@query("embed_knn_ivf_sweep", f"""
-WITH cent0 AS (
-  SELECT label, dim,
-         {DEC_AVG_SQL.format(c='CAST(embedding[dim] AS DOUBLE)', s=6)} AS m
-  FROM embeddings, range(1, 65) t(dim)
-  GROUP BY label, dim),
-cent AS (SELECT label, list(m ORDER BY dim) AS centroid FROM cent0 GROUP BY label),
-q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-qc AS (SELECT q.vec_id AS query_id, q.embedding AS q_emb, c.label,
-              {cosine_sql('q.embedding', 'c.centroid')} AS csim
-       FROM q CROSS JOIN cent c),
-ranked AS (
-  SELECT query_id, q_emb, label,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(csim, 9) DESC, label) AS r
-  FROM qc),
-probes AS (
-  SELECT n.nprobe, ranked.query_id, ranked.q_emb, ranked.label
-  FROM ranked JOIN (VALUES (1), (2), (4)) n(nprobe) ON ranked.r <= n.nprobe),
-sims AS (
-  SELECT p.nprobe, p.query_id, c.vec_id AS neighbor_id,
-         {cosine_sql('p.q_emb', 'c.embedding')} AS sim
-  FROM probes p JOIN embeddings c
-    ON c.label = p.label AND c.vec_id <> p.query_id)
-SELECT nprobe, query_id, neighbor_id, ROUND(sim, 6) + 0.0 AS sim, knn_rank FROM (
-  SELECT nprobe, query_id, neighbor_id, sim,
-         RANK() OVER (PARTITION BY nprobe, query_id
-                      ORDER BY ROUND(sim, 9) DESC, neighbor_id) AS knn_rank
-  FROM sims)
-WHERE knn_rank <= 3
-""")
-def embed_knn_ivf_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF recall/cost knob as a parameter sweep: nprobe in {1, 2, 4}
-    under ONE oracle, so the monotone candidate-set growth (each larger
-    nprobe's result is computed from a superset of cells) is pinned
-    end-to-end rather than asserted. Shares the exact-decimal centroid
-    build and ROUND(csim, 9) probe ordering with ``embed_knn_ivf_nprobe``;
-    the sweep axis rides the same plan as an exploded literal array, so
-    the corpus-side search join runs ONCE over the union of probed cells
-    (<= 7 cells/query), not once per sweep point.
-
-    Scale: identical to the single-nprobe query — probe selection is a
-    broadcast NLJ against the tiny coarse-quantizer table (allowlisted),
-    search stays a cell-keyed equi-join."""
-    e = widen(load_table(spark, sf_dir, "embeddings"))
-    cent = (e.select("label", F.posexplode("embedding").alias("pos", "val"))
-            .groupBy("label", "pos")
-            .agg(dec_avg(F.col("val").cast("double")).alias("m"))
-            .groupBy("label")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("dm"))
-            .select("label", F.transform("dm", lambda s: s["m"]).alias("centroid")))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("csim", 9)), "label")
-    probes = (q.crossJoin(F.broadcast(cent))
-              .withColumn("csim",
-                          cosine_similarity(F.col("q_emb"), F.col("centroid")))
-              .withColumn("r", F.row_number().over(wq))
-              .select("query_id", "q_emb", "label", "r")
-              .withColumn("nprobe",
-                          F.explode(F.array(F.lit(1), F.lit(2), F.lit(4))))
-              .filter(F.col("r") <= F.col("nprobe"))
-              .select("nprobe", "query_id", "q_emb", "label"))
-    c = e.select(F.col("vec_id").alias("neighbor_id"),
-                 F.col("label").alias("c_label"),
-                 F.col("embedding").alias("c_emb"))
-    sims = (c.join(F.broadcast(probes),
-                   (F.col("c_label") == F.col("label"))
-                   & (F.col("neighbor_id") != F.col("query_id")))
-            .select("nprobe", "query_id", "neighbor_id",
-                    cosine_similarity(F.col("q_emb"), F.col("c_emb"))
-                    .alias("sim")))
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc(F.round("sim", 9)), "neighbor_id")
-    # + 0.0 after the ROUND on BOTH engines (see _final_topk): a cosine a
-    # few ulps below zero rounds to -0.0 in DuckDB but +0.0 in Spark's
-    # BigDecimal ROUND; IEEE -0.0 + 0.0 = +0.0 normalizes both sides.
-    return (sims.withColumn("knn_rank", F.rank().over(w))
-            .filter(F.col("knn_rank") <= 3)
-            .select("nprobe", "query_id", "neighbor_id",
-                    (F.round("sim", 6) + F.lit(0.0)).alias("sim"),
-                    "knn_rank"))
-
-
-#: LSH banding configurations for the (bands x rows) sweep: all use the
-#: same 8 minima, regrouped — (8,1) high-recall, (4,2), (2,4) high-precision.
-_MH_SWEEP = [(8, 1), (4, 2), (2, 4)]
-
-
-def _minhash_sweep_sql() -> str:
-    def key(i: int, r: int) -> str:
-        hs = [f"h{i * r + j}" for j in range(r)]
-        if r == 1:
-            return f"CONCAT({hs[0]})"
-        return "CONCAT(" + ", ':', ".join(hs) + ")"
-
-    arms = []
-    for b, r in _MH_SWEEP:
-        for i in range(b):
-            arms.append(f"SELECT doc_id, {b} AS n_bands, {r} AS rows_per_band, "
-                        f"{i} AS band, {key(i, r)} AS band_key FROM mh")
-    return f"""
-bands AS ({" UNION ALL ".join(arms)}),
-cand AS (
-  SELECT a.n_bands, a.rows_per_band, a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.n_bands = b.n_bands AND a.rows_per_band = b.rows_per_band
-   AND a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-  GROUP BY ALL),
-ver AS (
-  SELECT c.n_bands, c.rows_per_band,
-         CAST(len(list_intersect(da.shs, db.shs)) AS DOUBLE)
-           / (len(da.shs) + len(db.shs)
-              - len(list_intersect(da.shs, db.shs))) AS j
-  FROM cand c JOIN docs da ON c.doc_a = da.doc_id
-              JOIN docs db ON c.doc_b = db.doc_id)
-"""
-
-
-@query("dedup_minhash_sweep",
-       _DOCS_CTE.rstrip() + ", " + _mh_cte_sql() + ","
-       + _minhash_sweep_sql().rstrip() + """
-SELECT n_bands, rows_per_band,
-       CAST(COUNT(*) AS BIGINT) AS n_candidates,
-       CAST(SUM(CASE WHEN j >= 0.1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_verified
-FROM ver GROUP BY n_bands, rows_per_band
-""")
-def dedup_minhash_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH precision/recall knob as a parameter sweep (the MinHash
-    analog of ``embed_knn_ivf_sweep``): the SAME 8 per-doc minima
-    regrouped into (bands x rows) = (8,1) / (4,2) / (2,4) band keys —
-    collision probability per band is J^rows, so fewer, wider bands trade
-    recall for candidate volume — with candidate counts and
-    exact-Jaccard-verified counts per configuration under one oracle.
-    Pins that the tuning axis actually moves the candidate set the way
-    the S-curve says it must (monotone in the test suite).
-
-    One signature computation feeds every configuration (the band
-    explosion is 8+4+2 structs per doc); candidates stay a band-bucket
-    equi-join per config, and only aggregate counts reach the driver.
-    Deliberately UNCAPPED (unlike `_mh_candidates`): this query's whole
-    point is to measure raw candidate volume per configuration, and a
-    bucket cap would distort the measured S-curve knob."""
-    def perm(a, b):
-        return lambda h: (F.lit(a) * (h % _MH_P) + F.lit(b)) % _MH_P
-
-    sets = _shared_shingle_sets(spark, sf_dir)
-    # persisted: the signature transform feeds both self-join sides
-    mh = sets.filter(F.size("shs") > 0).select(
-        "doc_id",
-        *[F.array_min(F.transform("shs", perm(a, b))).alias(f"h{i}")
-          for i, (a, b) in enumerate(_MH_AB)]).persist()
-    structs = []
-    for nb, r in _MH_SWEEP:
-        for i in range(nb):
-            key = F.concat_ws(
-                ":", *[F.col(f"h{i * r + j}").cast("string")
-                       for j in range(r)])
-            structs.append(F.struct(
-                F.lit(nb).alias("n_bands"), F.lit(r).alias("rows_per_band"),
-                F.lit(i).alias("band"), key.alias("band_key")))
-    bands = (mh.select("doc_id", F.explode(F.array(*structs)).alias("bk"))
-             .select("doc_id", "bk.n_bands", "bk.rows_per_band",
-                     "bk.band", "bk.band_key"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (a.join(b, (F.col("a.n_bands") == F.col("b.n_bands"))
-                   & (F.col("a.rows_per_band") == F.col("b.rows_per_band"))
-                   & (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.n_bands").alias("n_bands"),
-                    F.col("a.rows_per_band").alias("rows_per_band"),
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    da = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("sa"))
-    db = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("sb"))
-    n_common = F.size(F.array_intersect("sa", "sb"))
-    j = n_common.cast("double") / (F.size("sa") + F.size("sb") - n_common)
-    return (cand.join(da, "doc_a").join(db, "doc_b")
-            .withColumn("j", j)
-            .groupBy("n_bands", "rows_per_band")
-            .agg(F.count(F.lit(1)).alias("n_candidates"),
-                 F.sum((F.col("j") >= 0.1).cast("int")).cast("bigint")
-                 .alias("n_verified")))
 
 
 #: Per-source sampling rates (per mille) for the mixture query: the

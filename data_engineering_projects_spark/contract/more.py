@@ -577,12 +577,6 @@ def orders_scd2_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit the CURRENT snapshot: (key, current attr, its valid_from, and
     the key's total version count incl. closed history).
 
-    Swapped INTO the frozen 128-registry in round 11 for
-    ``dedup_simhash`` (judge-sanctioned swap: the per-doc signature
-    relation stays fully exercised — ``dedup_simhash_pairs`` computes it
-    as its first stage; the retired query remains registered for
-    tests/bench warmup — see contract.RETIRED and COVERAGE.md).
-
     The oracle derives the SAME snapshot from the full history in ONE
     pass (sequence per key, change-suppress consecutive equal attrs,
     intervals via LEAD) — valid because batch-merge == one-shot

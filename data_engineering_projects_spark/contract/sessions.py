@@ -1024,8 +1024,8 @@ def streaming_foreachbatch_upsert(spark: SparkSession,
     Scale: this is the canonical exactly-once streaming upsert shape —
     foreachBatch gives batch-level idempotency, the merge rewrites only
     the partitions the batch touches (O(batch) write amplification per
-    trigger), and on a lake format the same hook becomes Delta
-    MERGE INTO (plans/models.py::_delta_merge). State lives in the
+    trigger), and on a lake format the same hook becomes a Delta
+    MERGE INTO. State lives in the
     table, not the stream — no watermark needed for latest-state CDC."""
     import os
     import shutil

@@ -2,7 +2,7 @@
 
 Two physical strategies for the same logical top-k-by-cosine operator:
 
-1. **HOF path** (``contract.extensions.embed_knn_brute``): zip_with /
+1. **HOF path** (:func:`cosine_topk_hof`): zip_with /
    aggregate expressions — zero Python, best when the candidate set is
    already small (post-LSH / post-IVF).
 2. **BLAS path** (:func:`cosine_topk_blas`): Arrow-batched ``mapInPandas``
@@ -15,8 +15,8 @@ Two physical strategies for the same logical top-k-by-cosine operator:
 IVF (inverted-file) indexing: :func:`ivf_train` learns cell centroids with
 distributed Lloyd iterations (groupBy avg — no driver-side vectors except
 the k centroids themselves), :func:`ivf_assign` tags every corpus vector
-with its nearest cell, and a search restricted to the query's cell is the
-``embed_knn_ivf`` contract query shape.
+with its nearest cell, and a search restricted to the query's nearest
+cells is the ``embed_knn_ivf_nprobe`` contract query shape.
 
 Reference note: the reference repo has no vector search at all (SURVEY.md
 §2 — absence); this module is part of the training-data-pipeline

@@ -231,24 +231,21 @@ class ModelGraph:
             # upsert (dbt merge / delete+insert): drop existing rows whose
             # unique_key reappears in this batch, union the batch. Write
             # amplification, best to worst:
-            #   1. Delta MERGE INTO (file-pruned rewrite of matching files
-            #      only) when the delta-spark runtime is on the session —
-            #      see _delta_merge.
-            #   2. Partition-pruned parquet merge when partition_by is a
+            #   1. Partition-pruned parquet merge when partition_by is a
             #      subset of unique_key: ONLY partitions present in this
             #      batch are read, anti-joined, and dynamically
             #      overwritten; every other partition's files are never
             #      touched — O(batch partitions) per run, the 100×-safe
             #      default without a lake format.
-            #   3. Full-snapshot rewrite (the only option for an
+            #   2. Full-snapshot rewrite (the only option for an
             #      unpartitioned table on plain parquet) — O(table),
-            #      documented; adopt Delta/Iceberg past that scale.
+            #      documented; a Delta/Iceberg MERGE INTO (file-pruned
+            #      rewrite of matching files only) is the lake-format
+            #      replacement past that scale.
             if not m.unique_key:
                 raise ValueError(
                     f"model {m.name}: merge strategy requires unique_key")
-            if self._delta_merge(spark, m, df, path):
-                pass
-            elif m.partition_by and set(m.partition_by) <= set(m.unique_key):
+            if m.partition_by and set(m.partition_by) <= set(m.unique_key):
                 self._merge_pruned(spark, m, df, path)
             else:
                 existing = spark.read.parquet(path)
@@ -284,46 +281,11 @@ class ModelGraph:
             if not m.partition_by:
                 raise ValueError(
                     f"model {m.name}: insert_overwrite requires partition_by")
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                  "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           "dynamic")
-            try:
-                (df.write.mode("overwrite")
-                   .partitionBy(*m.partition_by).parquet(path))
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                               prev)
+            (df.write.mode("overwrite")
+               .option("partitionOverwriteMode", "dynamic")
+               .partitionBy(*m.partition_by).parquet(path))
         else:  # pragma: no cover - constructor validates
             raise ValueError(f"unknown incremental strategy {strategy!r}")
-
-    @staticmethod
-    def _delta_merge(spark: SparkSession, m: Model, df: DataFrame,
-                     path: str) -> bool:
-        """dbt merge as a real Delta ``MERGE INTO`` when (a) the OSS
-        ``delta-spark`` package is importable AND (b) the session was
-        built with the Delta SQL extension + catalog (both required for
-        the jars to be on the classpath). Returns False — caller falls
-        back to parquet — when either is absent or ``path`` is not a
-        Delta table. At lake scale this is the right default: MERGE
-        rewrites only the files whose key range matches the batch (file
-        pruning from the ON clause), no snapshot copy, ACID commit."""
-        try:
-            from delta.tables import DeltaTable  # optional public dep
-        except ImportError:
-            return False
-        ext = spark.conf.get("spark.sql.extensions", "") or ""
-        if "DeltaSparkSessionExtension" not in ext:
-            return False
-        if not DeltaTable.isDeltaTable(spark, path):
-            return False
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in m.unique_key)
-        (DeltaTable.forPath(spark, path).alias("t")
-         .merge(df.alias("s"), cond)
-         .whenMatchedUpdateAll()
-         .whenNotMatchedInsertAll()
-         .execute())
-        return True
 
     @staticmethod
     def _merge_pruned(spark: SparkSession, m: Model, df: DataFrame,
@@ -393,14 +355,11 @@ class ModelGraph:
         merged = (existing.join(keys, list(m.unique_key), "left_anti")
                   .unionByName(df)
                   .localCheckpoint())
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             (merged.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
              .partitionBy(*pcols).parquet(path))
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             # Dataset.unpersist() only touches cache-manager entries and
             # is a no-op for localCheckpoint blocks — free them properly
             free_local_checkpoint(merged)

@@ -299,7 +299,9 @@ def _fast_local_dir() -> str | None:
       pre-upgrade session touches its blockmgr tree constantly, so the
       idle check cannot yank scratch from under in-flight jobs
       (review-found);
-    - the 16 GiB headroom bar then applies to the post-reclaim mount.
+    - the headroom bar then applies to the post-reclaim mount: 16 GiB
+      free, or half the mount's size when that is less (a 15.7 GiB
+      ``/dev/shm`` could never clear a flat 16 GiB bar).
 
     What this deliberately does NOT do (decision recorded in
     SCALING.md): list a disk dir second in ``spark.local.dir`` — Spark
@@ -337,7 +339,8 @@ def _fast_local_dir() -> str | None:
             if stale:
                 shutil.rmtree(p, ignore_errors=True)
         st = os.statvfs(shm)
-        if st.f_bavail * st.f_frsize > 16 << 30:
+        bar = min(16 << 30, st.f_blocks * st.f_frsize // 2)
+        if st.f_bavail * st.f_frsize > bar:
             d = os.path.join(shm, f"spark-local-{os.getpid()}")
             os.makedirs(d, exist_ok=True)
             if not getattr(_fast_local_dir, "_atexit_registered", False):

@@ -34,21 +34,28 @@ def test_oracles_subset_of_queries():
 
 
 def test_registry_swap_invariants():
-    """Swap contract (rounds 11+12): the driver-facing registry stays
-    frozen at a PINNED size — growth is a deliberate act that bumps the
-    pin here (128 through r16; 129 from round 17's
-    embed_ivf_extend_health) — RETIRED names are excluded from it
-    (but remain registered for tests/tooling), and every swapped-in
-    query is present with an oracle."""
+    """The registry is frozen at a PINNED size (growth is a deliberate act
+    that bumps the pin here): ``contract.QUERIES``, the driver's
+    ``queries()`` and ``oracle_sql()`` hold the same 129 names, and every
+    swapped-in query has an oracle."""
     import __spark_entry__ as e
 
     qs, osql = e.queries(), e.oracle_sql()
-    assert len(qs) == 129 and len(osql) == 129
-    assert not (set(qs) & contract.RETIRED)
-    assert contract.RETIRED <= set(contract.QUERIES)  # still registered
+    assert len(contract.QUERIES) == 129
+    assert set(qs) == set(osql) == set(contract.QUERIES)
     for name in ("embed_pq_adc_topk", "orders_scd2_current",
                  "docs_pii_scrub", "corpus_extend_admissions"):
         assert name in qs and name in osql
+
+
+def test_simhash_stage_matches_oracle(spark, sf_dir):
+    """``dedup_simhash`` is not registered, but ``dedup_simhash_pairs``
+    consumes it as its first stage: pin the per-doc signatures on their
+    own so a wrong stage is told apart from a wrong banding."""
+    from data_engineering_projects_spark.contract.extensions import (
+        _simhash_sql, dedup_simhash)
+    from .oracle import compare
+    compare(dedup_simhash(spark, sf_dir), _simhash_sql(), sf_dir)
 
 
 def test_staleness_order_rotates_correctly():

@@ -409,3 +409,47 @@ def test_merge_replay_is_idempotent(spark, tmp_path):
                    spark.read.parquet(str(tmp_path / "rp_events"))
                    .select("part", "id", "v").collect())
     assert once == twice == [("p1", 1, "a"), ("p1", 2, "b2"), ("p2", 3, "c")]
+
+
+def test_dynamic_overwrite_is_per_write_not_session_conf(spark, tmp_path,
+                                                         monkeypatch):
+    """insert_overwrite and the partition-pruned merge ask for dynamic
+    partition overwrite on their own writer: the session's
+    partitionOverwriteMode is never written, so a concurrent caller on the
+    same session never runs under a flipped overwrite mode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    conf_type = type(spark.conf)
+    real_set = conf_type.set
+    written = []
+
+    def spy(self, k, v):
+        written.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(conf_type, "set", spy)
+    session_mode = spark.conf.get(key)
+    batches = [[("d1", 1, "a"), ("d2", 2, "b")], [("d2", 2, "b2")]]
+    state = {"i": 0}
+    g = ModelGraph(warehouse_dir=str(tmp_path))
+
+    @g.model(materialization="incremental", partition_by=["day"],
+             incremental_strategy="insert_overwrite")
+    def io_events(spark, vars):
+        return spark.createDataFrame(
+            batches[state["i"]], "day string, id long, v string")
+
+    @g.model(materialization="incremental", unique_key=["day", "id"],
+             partition_by=["day"], incremental_strategy="merge")
+    def pm_events(spark, vars):
+        return spark.createDataFrame(
+            batches[state["i"]], "day string, id long, v string")
+
+    g.run(spark)
+    state["i"] = 1
+    out = g.run(spark)
+    for name in ("io_events", "pm_events"):
+        assert sorted((r["day"], r["id"], r["v"])
+                      for r in out[name].collect()) == \
+            [("d1", 1, "a"), ("d2", 2, "b2")]
+    assert key not in written
+    assert spark.conf.get(key) == session_mode

@@ -88,12 +88,18 @@ def test_whole_stage_codegen_active(spark, sf_dir):
 def test_dedup_queries_never_cartesian(spark, sf_dir):
     """Every dedup operator must candidate-generate via equi-joins
     (inverted index / band buckets / sign buckets) — an O(n²) cross join
-    would be fatal at corpus scale. embed_knn_brute is the deliberate
-    exception (tiny broadcast query side)."""
-    for name in ["dedup_ngram_jaccard", "dedup_minhash_lsh",
-                 "dedup_embed_cosine", "dedup_exact", "dedup_simhash",
-                 "docs_levenshtein_near", "dedup_incremental_ingest"]:
-        p = plan(contract.QUERIES[name](spark, sf_dir))
+    would be fatal at corpus scale. ``dedup_simhash`` is the first stage
+    of ``dedup_simhash_pairs``, not a registered query."""
+    from data_engineering_projects_spark.contract.extensions import (
+        dedup_simhash)
+    frames = {name: contract.QUERIES[name](spark, sf_dir)
+              for name in ["dedup_ngram_jaccard", "dedup_minhash_lsh",
+                           "dedup_embed_cosine", "dedup_exact",
+                           "docs_levenshtein_near",
+                           "dedup_incremental_ingest"]}
+    frames["dedup_simhash"] = dedup_simhash(spark, sf_dir)
+    for name, df in frames.items():
+        p = plan(df)
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
 
@@ -109,11 +115,6 @@ def test_cap_hot_lists_ride_broadcast_anti_joins(spark, sf_dir):
         p = plan(contract.QUERIES[name](spark, sf_dir))
         anti = re.findall(r"(\w+Join) LeftAnti", p)
         assert anti and all(j == "BroadcastHashJoin" for j in anti), (name, p)
-
-
-def test_knn_brute_broadcasts_query_side(spark, sf_dir):
-    p = plan(contract.QUERIES["embed_knn_brute"](spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p, p
 
 
 def test_sessionize_single_shuffle_key(spark, sf_dir):
@@ -160,15 +161,10 @@ def test_split_assign_no_shuffle(spark, sf_dir):
 #: quantile-band shape) — a single-row NLJ, not an O(n*m) cartesian.
 _ONE_ROW_BROADCAST_OK = {"dbt_outlier_3sigma", "docs_length_band",
                          "text_tfidf_top_terms",
-                         # documented exactness baseline: the bounded
-                         # query set broadcast against the corpus IS the
-                         # brute-force definition; blas/ivf are the scale
-                         # paths
-                         "embed_knn_brute",
                          # IVF probe selection: queries x the (tiny by
                          # construction) coarse-quantizer centroid table —
                          # the search itself stays a cell-keyed equi-join
-                         "embed_knn_ivf_nprobe", "embed_knn_ivf_sweep",
+                         "embed_knn_ivf_nprobe",
                          # ADC scan: the broadcast side is the per-QUERY
                          # distance-table relation (bounded by the query
                          # set, kilobytes); the corpus side reads codes
@@ -229,7 +225,7 @@ _PUSHED_FILTER_PINNED = [
     "star_region_revenue", "star_exclusive_late_supplier",
     "star_customers_without_orders", "dbt_fk_orphans",
     "events_range_join_clicks", "orders_with_bigticket_items",
-    "customers_cohort_setops", "dedup_embed_cosine", "embed_knn_brute",
+    "customers_cohort_setops", "dedup_embed_cosine",
 ]
 
 

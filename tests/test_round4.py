@@ -85,42 +85,12 @@ def test_levenshtein_near_finds_planted_pairs(spark, sf_dir):
     assert all(0 <= r.edit_dist <= 20 for r in rows)
 
 
-def test_ivf_sweep_recall_is_monotone_in_nprobe(spark, sf_dir):
-    """More probed cells can only improve the candidate set: for each
-    query, the rank-1 similarity at nprobe=N+ must be >= at nprobe=N,
-    and every (neighbor, sim) found at nprobe=1 appears at nprobe=4's
-    candidate superset unless displaced by a strictly better neighbor."""
-    rows = _rows(spark, sf_dir, "embed_knn_ivf_sweep")
-    best: dict = {}
-    for r in rows:
-        if r.knn_rank == 1:
-            best.setdefault(r.query_id, {})[r.nprobe] = r.sim
-    assert best, "sweep returned no rank-1 rows"
-    for per_q in best.values():
-        assert per_q[1] <= per_q[2] <= per_q[4]
-
-
 def test_pack_chunks_window_is_keyed_not_global(spark, sf_dir):
     """The packing cumsum must shuffle by source (parallel across
     shards), never collapse to a single partition."""
     df = contract.QUERIES["docs_pack_chunks"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, plan
-
-
-def test_minhash_sweep_scurve_is_monotone(spark, sf_dir):
-    """Wider bands (more rows per band) can only shrink the candidate
-    set (collision prob per band is J^rows), and verified pairs are a
-    subset of candidates at every setting."""
-    rows = {(r.n_bands, r.rows_per_band): r
-            for r in _rows(spark, sf_dir, "dedup_minhash_sweep")}
-    assert set(rows) == {(8, 1), (4, 2), (2, 4)}
-    assert (rows[(8, 1)].n_candidates >= rows[(4, 2)].n_candidates
-            >= rows[(2, 4)].n_candidates)
-    for r in rows.values():
-        assert 0 <= r.n_verified <= r.n_candidates
-    # high-recall setting must catch at least as many true pairs
-    assert rows[(8, 1)].n_verified >= rows[(2, 4)].n_verified
 
 
 def test_profile_long_form_is_consistent(spark, sf_dir):

@@ -35,20 +35,6 @@ def test_chain_defeats_fixed_k_but_not_star(spark):
     assert fixed != star
 
 
-def test_clusters_chain_contract_shape(spark, queries):
-    """Every doc labeled, heads are their own cluster, chain segments of
-    64 consecutive ids share their head's label."""
-    out = queries["dedup_clusters_chain"](spark, SF_DIR)
-    rows = {r["doc_id"]: (r["cluster_id"], r["n_members"])
-            for r in out.collect()}
-    n = len(rows)
-    assert n > 0
-    for doc_id, (cluster_id, n_members) in rows.items():
-        head = (doc_id // 64) * 64
-        assert cluster_id == head
-        assert n_members == min(64, n - head)
-
-
 def test_p95_approx_within_bound_all_true(spark, queries):
     out = queries["star_pricing_p95_approx"](spark, SF_DIR).collect()
     assert len(out) > 0
@@ -176,16 +162,6 @@ def test_pagerank_mass_conserved_no_dangling(spark):
         "src long, dst long, w double")
     total = sum(r["r"] for r in pagerank(nodes, edges).collect())
     assert abs(total - 1.0) < 1e-9
-
-
-def test_delta_merge_hook_falls_back_without_delta(spark, tmp_path):
-    """In an environment without the delta-spark runtime the Delta hook
-    must report False (parquet fallback), never raise."""
-    from data_engineering_projects_spark.plans.models import Model, ModelGraph
-
-    m = Model("t", lambda s, v: None, unique_key=("id",))
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    assert ModelGraph._delta_merge(spark, m, df, str(tmp_path / "t")) is False
 
 
 def test_token_budget_selects_prefix_of_quality_order(spark, queries):

@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
+
 
 def test_fast_local_dir_guard(monkeypatch):
     from data_engineering_projects_spark.session import _fast_local_dir
@@ -18,9 +20,35 @@ def test_fast_local_dir_guard(monkeypatch):
     # a real dir with headroom -> a created subdir under it
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", tempfile.gettempdir())
     d = _fast_local_dir()
-    if d is not None:  # None only if tmp itself lacks 16 GiB headroom
+    if d is not None:  # None only if tmp itself lacks headroom
         assert os.path.isdir(d)
         assert d.startswith(tempfile.gettempdir())
+
+
+@pytest.mark.parametrize("size_gib,free_gib,routed", [
+    (15.7, 15.7, True),    # whole small tmpfs free: half-size bar
+    (15.7, 4, False),
+    (100, 17, True),       # large mount: the 16 GiB bar
+    (100, 15, False),
+])
+def test_fast_local_dir_headroom_bar(monkeypatch, tmp_path, size_gib,
+                                     free_gib, routed):
+    """The headroom bar is min(16 GiB, half the mount's size)."""
+    from types import SimpleNamespace
+
+    from data_engineering_projects_spark.session import _fast_local_dir
+
+    gib = 1 << 30
+    monkeypatch.setattr(os, "statvfs", lambda p: SimpleNamespace(
+        f_frsize=4096, f_blocks=int(size_gib * gib) // 4096,
+        f_bavail=int(free_gib * gib) // 4096))
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", str(tmp_path))
+    d = _fast_local_dir()
+    if routed:
+        assert d is not None and os.path.isdir(d)
+        assert d.startswith(str(tmp_path))
+    else:
+        assert d is None
 
 
 def test_scratch_dir_always_writable(monkeypatch):

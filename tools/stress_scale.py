@@ -6,10 +6,11 @@ Two families, selected with ``--family``:
 queries are iterative, and their cost at scale grows in PER-ROUND work
 (rows), not in ROUND COUNT:
 
-- ``dedup_clusters_chain`` — star-contraction connected components over
-  planted 64-id chains; rounds track log(diameter). Replicating the
-  doc_id domain adds MORE chains of the same diameter, so rounds must
-  stay flat while per-round time scales with rows.
+- ``dedup_clusters_star`` — star-contraction connected components over
+  the MinHash-LSH pair graph; rounds track log(diameter). The documents
+  copies get the candidates family's rotation (below), so the pair graph
+  is k disjoint copies of the 1x graph: rounds must stay flat while
+  per-round time scales with rows.
 - ``embed_top_eigenvector`` — 3 fixed power-iteration rounds.
 - ``events_pagerank_types`` — 5 fixed PageRank rounds over the
   schema-bounded event-type node set.
@@ -31,10 +32,10 @@ search must scale LINEARLY in corpus size, never quadratically:
   rows ratio would prove cross-copy candidate leakage; a super-linear
   time ratio would expose an all-pairs step hiding behind the sf0.1
   constants.
-- ``embed_knn_ivf`` — vectors copied verbatim under shifted vec_ids;
-  the 10 probe queries stay fixed (``vec_id < 10``), each label cell
-  grows k×, so per-query candidate cost (and wall time) must grow ~k —
-  the IVF cost model (cell size), never corpus pair count.
+- ``embed_knn_ivf_nprobe`` — vectors copied verbatim under shifted
+  vec_ids; the 10 probe queries stay fixed (``vec_id < 10``), each
+  label cell grows k×, so per-query candidate cost (and wall time) must
+  grow ~k — the IVF cost model (cell size), never corpus pair count.
 
 ``streaming`` (round 8) — the watermarked rollups and the
 stream-stream join on k-fold events with SHIFTED user ids, so state
@@ -47,12 +48,11 @@ admitted volume.
 
 Fixture: NOT driver data — a clearly-marked local derivation under
 /tmp. Each scaled table unions k id-shifted copies of the sf0.1
-parquet (ids offset by k * 10^9 per copy; the offset is a multiple of
-64, so the planted chain structure of ``dedup_clusters_chain`` repeats
-verbatim per copy and component diameters are unchanged). Outside the
-candidates-family documents rotation, timestamps, text, and vectors
-are copied as-is: the iterative queries key on ids/types/dims, and
-value distributions are irrelevant to their plan shape.
+parquet (ids offset by k * 10^9 per copy). Outside the documents
+rotation (candidates and iterative families), timestamps, text, and
+vectors are copied as-is: the other iterative queries key on
+ids/types/dims, and value distributions are irrelevant to their plan
+shape.
 
 Usage::
 
@@ -80,10 +80,10 @@ sys.path.insert(0, REPO)
 _OFFSET = 1_000_000_000  # multiple of 64: chain layout repeats per copy
 
 FAMILIES = {
-    "iterative": ["dedup_clusters_chain", "embed_top_eigenvector",
+    "iterative": ["dedup_clusters_star", "embed_top_eigenvector",
                   "events_pagerank_types"],
     "candidates": ["dedup_minhash_lsh", "dedup_ngram_jaccard",
-                   "embed_knn_ivf"],
+                   "embed_knn_ivf_nprobe"],
     "streaming": ["streaming_hourly_rollup", "streaming_session_rollup",
                   "streaming_click_attribution"],
     # special-cased in main(): the full dedup path run END-TO-END with
@@ -1947,7 +1947,8 @@ def main() -> int:
                   else f"/tmp/depa_stress_{base_tag}_{args.family}_x{mult}")
         if mult > 1:
             build_fixture(args.base, mult, sf_dir,
-                          rotate_docs=args.family == "candidates",
+                          rotate_docs=args.family in ("candidates",
+                                                      "iterative"),
                           shift_users=args.family == "streaming")
         for name in queries:
             rounds_box.clear()
