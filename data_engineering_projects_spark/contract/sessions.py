@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.determinism import DEC_AVG_SQL, DEC_SUM_SQL, dec_avg, dec_sum
 from ..functions.text import FINGERPRINT_SQL
 from ..sources import load_table, table_and_stream
-from ..session import scratch_dir
+from ..session import scoped_conf, scratch_dir
 from . import query
 
 EV = "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events"
@@ -422,14 +422,18 @@ def _with_state_partitions(spark: SparkSession, n_rows: int):
     ``session.sized_shuffle_partitions`` (one shared rows-per-partition
     constant — see that module): every streaming stateful operator
     instantiates one state store PER shuffle partition (a stream-stream
-    join holds four), each with a fixed per-micro-batch snapshot cost
-    (~70 ms measured on this container) that is pure overhead when the
-    partition holds little state, and unlike batch the count is frozen
-    into the checkpoint at first start — AQE can never coalesce it, so
-    it must be chosen deliberately from the rows the stream admits.
-    Measured on the sf0.1 interval join: 32 -> 8 state partitions cut
-    wall time 9.5 s -> 2.5 s with identical results. Restores the
-    session value on exit."""
+    join holds four), and each store commits a delta file and its
+    checksum every micro-batch: a fixed per-store cost that is pure
+    overhead when the partition holds little state. Unlike batch the
+    count is frozen into the checkpoint at first start — AQE can never
+    coalesce it, so it must be chosen deliberately from the rows the
+    stream admits. Measured at sf0.1, 4 cores: about 5-10 ms per store
+    commit (the rollup's 4 stores 21-33 ms, the join's 16 stores
+    148 ms); before ``_local_checkpoint_files`` it was about 90 ms, all
+    but a few ms of it the ``readlink`` fork per checkpoint file. The
+    round-8 measurement on the sf0.1 interval join, 32 -> 8 state
+    partitions cutting wall time 9.5 s -> 2.5 s with identical results,
+    was taken with that fork. Restores the session value on exit."""
     from ..session import sized_shuffle_partitions
     return sized_shuffle_partitions(spark, n_rows)
 
@@ -457,21 +461,22 @@ def _run_stream_to_memory(spark: SparkSession, stream: DataFrame,
     would otherwise return a silently partial memory table (round-3
     ADVICE).
 
-    The two conf scopes (state partitions, flush batch) wrap only
-    ``start()``: the query clones the session there, so the stream runs
-    with the scoped values while the session holds them for the start
-    call only. The sink's temp view is dropped before returning; the
-    returned frame keeps the sink's rows.
+    The three conf scopes (state partitions, flush batch, checkpoint
+    file manager) wrap only ``start()``: the query clones the session
+    there, so the stream runs with the scoped values while the session
+    holds them for the start call only. The sink's temp view is dropped
+    before returning; the returned frame keeps the sink's rows.
 
-    The checkpoint is routed through ``scratch_dir`` (round 17,
-    optimization guide §6): with no explicit location Spark creates the
-    temp checkpoint under ``java.io.tmpdir`` (/tmp — disk-backed here),
-    and every micro-batch pays fsync latency for the offset log, commit
-    log, file-source log and one state-store snapshot per partition on
-    that mount (on a real cluster this is node-local NVMe / object
-    store; the checkpoint of a DURABLE stream stays on reliable storage
-    — these contract runs are one-shot by construction, enforced via
-    _assert_single_batch)."""
+    The checkpoint is a one-shot ``scratch_dir``, removed on return (a
+    DURABLE stream's checkpoint stays on reliable storage — these
+    contract runs are one-shot by construction, enforced via
+    _assert_single_batch). Every micro-batch writes an offset-log entry,
+    a commit-log entry and a delta file per state store there. Their
+    cost was never the medium: per-batch commit times were the same on
+    ``/dev/shm`` and on the root disk. It was a ``readlink`` fork per
+    file in Spark's default checkpoint manager, which
+    ``_local_checkpoint_files`` removes: at sf0.1, 4 cores, the offset-
+    and commit-log writes fell from about 30 ms to 5-17 ms each."""
     import shutil
 
     _STREAM_SEQ[0] += 1
@@ -482,7 +487,8 @@ def _run_stream_to_memory(spark: SparkSession, stream: DataFrame,
                   .queryName(name).option("checkpointLocation", ck)
                   .outputMode("append").trigger(availableNow=True))
         with _no_data_batches(spark, flush_batch), \
-                _with_state_partitions(spark, n_rows):
+                _with_state_partitions(spark, n_rows), \
+                _local_checkpoint_files(spark):
             q = writer.start()
         if not q.awaitTermination(300):
             q.stop()
@@ -507,21 +513,48 @@ def _no_data_batches(spark: SparkSession, flush_batch: bool):
     default, is a no-op here). But an inner stream-stream join,
     dropDuplicates, or a stateless enrich emits every row in the data
     batch itself; for those the empty batch is pure state-eviction
-    overhead (~0.5-1 s of per-store snapshot + planning per query,
-    measured) that a one-shot run never benefits from —
+    overhead that a one-shot run never benefits from —
     ``flush_batch=False`` skips it via the engine's supported conf.
+    Measured at sf0.1, 4 cores, with ``_local_checkpoint_files``: the
+    empty batch's trigger is 176 ms for the dedup and 747 ms for the
+    interval join, most of it ``addBatch`` (the eviction pass over every
+    store: 132 and 567 ms) and planning (21 and 153 ms); its state
+    commits are 112 and 79 ms. Before that change the store commits
+    were about 90 ms each, from the ``readlink`` fork per file.
     Results are bit-identical either way (interleaved A/B pinned in
     tests); session value restored on exit."""
     if flush_batch:
         yield
         return
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with scoped_conf(spark, "spark.sql.streaming.noDataMicroBatches.enabled",
+                      "false"):
         yield
-    finally:
-        spark.conf.set(key, prev)
+
+
+#: Spark's checkpoint file manager that writes through the Hadoop
+#: FileSystem API (Spark 4.1 package name).
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                         "checkpointing.FileSystemBasedCheckpointFileManager")
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _local_checkpoint_files(spark: SparkSession):
+    """Scoped ``spark.sql.streaming.checkpointFileManagerClass`` =
+    FileSystem-based, for the contract streams, whose checkpoints are
+    one-shot local ``scratch_dir``s. Spark's default manager writes
+    each checkpoint file through Hadoop's FileContext, whose rename on a
+    local ``file:`` path asks ``RawLocalFileSystem.getFileLinkStatus``,
+    which forks a ``readlink`` process when native Hadoop is not loaded:
+    one fork per state-store delta, checksum, offset-log and commit-log
+    file. The FileSystem manager renames with ``FileSystem.rename``,
+    which on a local path is an atomic, overwriting POSIX rename; Spark's
+    own checkpoint checksum files are still written. Durable and cluster
+    checkpoints (``streaming/jobs.py``, the stream-loss probe) keep the
+    default manager: on HDFS its FileContext rename is an atomic
+    overwrite, and an ``hdfs://`` or ``s3a://`` path never reaches
+    ``RawLocalFileSystem``. Session value restored on exit."""
+    return scoped_conf(spark, CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
+
 
 
 def _assert_single_batch(q, name: str) -> None:
@@ -831,9 +864,11 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # holds FOUR state stores per partition, so sizing matters most here.
     # flush_batch=False: an INNER stream-stream join emits each pair in
     # the data batch that completes it — the empty watermark-advance
-    # batch only evicts all four stores' state, ~0.8 s of snapshot +
-    # planning a one-shot run never benefits from (interleaved A/B
-    # 3.52 -> 2.64 s median, rows identical).
+    # batch only evicts all four stores' state: about 0.75 s at sf0.1,
+    # 4 cores (567 ms eviction pass, 153 ms planning, 79 ms state
+    # commit) that a one-shot run never benefits from (interleaved A/B
+    # 3.52 -> 2.64 s median, rows identical, measured before the
+    # checkpoint-manager scope).
     return _run_stream_to_memory(
         spark, ev_stream, ev.filter(is_click | is_purchase).count(), "attr",
         agg, flush_batch=False)
@@ -1083,10 +1118,12 @@ def streaming_foreachbatch_upsert(spark: SparkSession,
         name = f"depa_stream_upsert_{_STREAM_SEQ[0]}"
         stream = (spark.readStream.schema(ev.schema)
                   .option("maxFilesPerTrigger", "1").parquet(staged))
-        q = (stream.writeStream.foreachBatch(upsert)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(staged, "_ckpt"))
-             .queryName(name).start())
+        writer = (stream.writeStream.foreachBatch(upsert)
+                  .trigger(availableNow=True)
+                  .option("checkpointLocation", os.path.join(staged, "_ckpt"))
+                  .queryName(name))
+        with _local_checkpoint_files(spark):
+            q = writer.start()
         if not q.awaitTermination(300):
             q.stop()
             raise RuntimeError(

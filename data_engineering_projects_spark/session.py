@@ -70,20 +70,33 @@ def sized_shuffle_partitions(spark: SparkSession, n_rows: int,
     moves to cluster cores — the rule sizes state per partition, it
     does not cap parallelism."""
     key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
     try:
-        ceiling = int(prev)
+        ceiling = int(spark.conf.get(key))
     except ValueError:  # e.g. "auto" on some builds
         ceiling = 200
     # floor of 4, but never above a deliberately smaller session
     # ceiling (e.g. shuffle.partitions=2 on tiny local runs)
     sized = max(min(4, ceiling),
                 min(ceiling, -(-n_rows // rows_per_partition)))
-    spark.conf.set(key, sized)
-    try:
+    with scoped_conf(spark, key, str(sized)):
         yield sized
+
+
+@_contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set session conf ``key`` to ``value`` for the block, then restore
+    the session's value, or unset the key again when the session had
+    none. Same serial-use-only contract as
+    :func:`sized_shuffle_partitions` (the conf is session-global)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
     finally:
-        spark.conf.set(key, prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 @_contextmanager
@@ -105,13 +118,8 @@ def aqe_disabled(spark: SparkSession):
     every later query keeps AQE's runtime re-planning. Same
     serial-use-only contract as :func:`sized_shuffle_partitions` (the
     conf is session-global)."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
         yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def free_local_checkpoint(df, deep: bool = False) -> bool:
@@ -174,9 +182,16 @@ def free_local_checkpoint(df, deep: bool = False) -> bool:
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-created session (e.g. the
-    driver's); all keys used here are runtime-settable."""
+    driver's); all keys used here are runtime-settable. Runs once per
+    session (a per-session flag, as in
+    :func:`ensure_package_on_executors`), so the table reads that call
+    it write no session conf after the first, and a read inside a scope
+    such as :func:`aqe_disabled` leaves the scope's value in place."""
+    if getattr(spark, "_depa_tuned", False):
+        return spark
     for k, v in _RUNTIME_CONFS.items():
         spark.conf.set(k, v)
+    spark._depa_tuned = True
     return spark
 
 

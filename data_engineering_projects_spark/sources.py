@@ -32,7 +32,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema parquet table with deterministic types
-    (see :func:`_typed` for the ``events.ts`` fix)."""
+    (see :func:`_typed` for the ``events.ts`` fix). The session's first
+    read applies :func:`session.tune`; later reads write no conf."""
     tune(spark)
     return _typed(spark.read.parquet(f"{sf_dir}/{name}.parquet"), name)
 

@@ -75,8 +75,6 @@ def test_whole_stage_codegen_active(spark, sf_dir):
     """The hot path stays inside codegen stages. AQE defers stage planning,
     so assert on the non-adaptive plan ('*(n)' = codegen stage markers)."""
     df = contract.QUERIES["star_pricing_summary"](spark, sf_dir)
-    # load_table -> tune() re-asserts AQE, so disable it *after* building the
-    # DataFrame; physical planning happens lazily at explain time.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         p = plan(df, "simple")

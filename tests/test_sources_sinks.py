@@ -93,6 +93,35 @@ def test_table_stream_admits_no_sibling_file(spark, sf_dir, tmp_path):
     assert len(rows) == load_table(spark, sf_dir, "events").count() > 0
 
 
+def test_table_read_writes_no_session_conf(spark, sf_dir, monkeypatch):
+    """``session.tune`` runs once per session: the first table read of a
+    fresh session applies it (a vanilla session still reads the NANOS
+    ``events.ts``), and later reads write no session conf, so a read
+    inside ``aqe_disabled`` leaves AQE off for the rest of that scope."""
+    from data_engineering_projects_spark.session import aqe_disabled
+
+    fresh = spark.newSession()
+    fresh.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    conf_type = type(spark.conf)
+    real_set = conf_type.set
+    written = []
+
+    def spy(self, k, v):
+        written.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(conf_type, "set", spy)
+    assert load_table(fresh, sf_dir, "events").first() is not None
+    assert "spark.sql.legacy.parquet.nanosAsLong" in written
+    with aqe_disabled(fresh):
+        written.clear()
+        load_table(fresh, sf_dir, "orders")
+        table_and_stream(fresh, sf_dir, "events")
+        load_table(spark, sf_dir, "orders")
+        assert written == []
+        assert fresh.conf.get("spark.sql.adaptive.enabled") == "false"
+
+
 def test_typed_props_view_parses_once_and_prunes(spark, sf_dir):
     """The typed event-props source: struct field equals the per-call JSON
     path extraction, and a query that never touches the struct carries no

@@ -358,10 +358,13 @@ def test_flush_batch_skip_is_result_identical(spark, tmp_path):
 
 
 def test_conf_scopes_cover_start_only(spark, tmp_path, monkeypatch):
-    """The state-partition and flush-batch scopes wrap only ``start()``:
-    the query clones the session there, so the stream runs at the sized
-    state-partition count and without the flush batch, while the session
-    is back at its own values once ``start()`` has returned."""
+    """The state-partition, flush-batch and checkpoint-manager scopes
+    wrap only ``start()``: the query clones the session there, so the
+    stream runs at the sized state-partition count, without the flush
+    batch and with the FileSystem-based checkpoint manager, while the
+    session is back at its own values once ``start()`` has returned. An
+    unknown manager class fails the start loudly, which shows the stream
+    reads the key."""
     from datetime import datetime
 
     from data_engineering_projects_spark.contract import sessions
@@ -369,8 +372,9 @@ def test_conf_scopes_cover_start_only(spark, tmp_path, monkeypatch):
         sized_shuffle_partitions)
 
     keys = ("spark.sql.shuffle.partitions",
-            "spark.sql.streaming.noDataMicroBatches.enabled")
-    before = tuple(spark.conf.get(k) for k in keys)
+            "spark.sql.streaming.noDataMicroBatches.enabled",
+            sessions.CHECKPOINT_MANAGER_KEY)
+    before = tuple(spark.conf.get(k, None) for k in keys)
     with sized_shuffle_partitions(spark, 150_000) as sized:
         pass
     assert sized != int(before[0])  # else the check below proves nothing
@@ -381,22 +385,89 @@ def test_conf_scopes_cover_start_only(spark, tmp_path, monkeypatch):
     real_assert = sessions._assert_single_batch
 
     def spy(q, name):  # runs after the stream terminated
-        seen.append((q, tuple(spark.conf.get(k) for k in keys)))
+        stream_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
+        seen.append((q, tuple(spark.conf.get(k, None) for k in keys),
+                     stream_conf.get(sessions.CHECKPOINT_MANAGER_KEY, None)))
         real_assert(q, name)
 
+    def run():
+        return sessions._run_stream_to_memory(
+            spark,
+            spark.readStream.schema(df.schema).parquet(str(tmp_path / "in")),
+            150_000, "scope",
+            lambda s: (s.withWatermark("ts", "1 hour")
+                       .dropDuplicatesWithinWatermark(["user_id"])),
+            flush_batch=False)
+
     monkeypatch.setattr(sessions, "_assert_single_batch", spy)
-    out = sessions._run_stream_to_memory(
-        spark, spark.readStream.schema(df.schema).parquet(str(tmp_path / "in")),
-        150_000, "scope",
-        lambda s: (s.withWatermark("ts", "1 hour")
-                   .dropDuplicatesWithinWatermark(["user_id"])),
-        flush_batch=False)
-    assert out.count() == 3
-    (q, conf_after_start), = seen
+    assert run().count() == 3
+    (q, conf_after_start, manager), = seen
     assert conf_after_start == before
+    assert manager == sessions.FS_CHECKPOINT_MANAGER
     assert len(q.recentProgress) == 1  # no flush batch
     ops = [op for p in q.recentProgress for op in p["stateOperators"]]
     assert ops and {op["numShufflePartitions"] for op in ops} == {sized}
+
+    monkeypatch.setattr(sessions, "FS_CHECKPOINT_MANAGER",
+                        "no.such.CheckpointFileManager")
+    with pytest.raises(Exception, match="no.such.CheckpointFileManager"):
+        run()
+    assert len(seen) == 1
+    assert tuple(spark.conf.get(k, None) for k in keys) == before
+
+
+def test_durable_streams_keep_the_default_checkpoint_manager(spark, tmp_path):
+    """Only the contract harness's one-shot local checkpoints switch the
+    checkpoint file manager. ``streaming/jobs.py`` and
+    ``tools/cluster_stream_loss_probe.py`` start streams whose
+    checkpoints can be durable or on a cluster; they keep Spark's
+    default manager (FileContext's atomic overwrite rename on HDFS and
+    S3A): no source outside ``contract/sessions.py`` names the key, and
+    a ``streaming/jobs.py`` stream runs with the key unset."""
+    import pathlib
+
+    from data_engineering_projects_spark.contract import sessions
+    from data_engineering_projects_spark.streaming.jobs import (
+        quality_gated_sink)
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    naming = sorted(
+        str(f.relative_to(repo))
+        for d in ("data_engineering_projects_spark", "tools")
+        for f in (repo / d).rglob("*.py")
+        if "CheckpointFileManager" in f.read_text()
+        or "checkpointFileManagerClass" in f.read_text())
+    assert naming == ["data_engineering_projects_spark/contract/sessions.py"]
+    assert (repo / "data_engineering_projects_spark/streaming/jobs.py").exists()
+    assert (repo / "tools/cluster_stream_loss_probe.py").exists()
+
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    df.write.parquet(str(tmp_path / "in"))
+    q = quality_gated_sink(
+        spark.readStream.schema(df.schema).parquet(str(tmp_path / "in")),
+        [], str(tmp_path / "out"), str(tmp_path / "ck"))
+    try:
+        stream_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
+        assert stream_conf.get(sessions.CHECKPOINT_MANAGER_KEY, None) is None
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+
+
+def test_upsert_stream_starts_in_the_checkpoint_scope(spark, monkeypatch):
+    """``streaming_foreachbatch_upsert`` starts its own stream on a local
+    staged checkpoint, inside the same checkpoint-manager scope as the
+    memory-sink harness."""
+    from data_engineering_projects_spark import contract
+    from data_engineering_projects_spark.contract import sessions
+    contract.load_all()
+    entered = []
+    real = sessions._local_checkpoint_files
+    monkeypatch.setattr(sessions, "_local_checkpoint_files",
+                        lambda s: entered.append(s) or real(s))
+    assert contract.QUERIES["streaming_foreachbatch_upsert"](spark, SF).count() > 0
+    assert entered == [spark]
 
 
 def test_streaming_call_drops_its_sink_view(spark):
