@@ -435,8 +435,7 @@ def test_durable_streams_keep_the_default_checkpoint_manager(spark, tmp_path):
         str(f.relative_to(repo))
         for d in ("data_engineering_projects_spark", "tools")
         for f in (repo / d).rglob("*.py")
-        if "CheckpointFileManager" in f.read_text()
-        or "checkpointFileManagerClass" in f.read_text())
+        if "checkpointfilemanager" in f.read_text().lower())
     assert naming == ["data_engineering_projects_spark/contract/sessions.py"]
     assert (repo / "data_engineering_projects_spark/streaming/jobs.py").exists()
     assert (repo / "tools/cluster_stream_loss_probe.py").exists()
