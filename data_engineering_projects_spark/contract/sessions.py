@@ -1,7 +1,7 @@
 """Batch sessionization + as-of date arithmetic queries.
 
-``events_sessionize`` is the batch counterpart of
-``streaming.sessionize_stream``: the gaps-and-islands pattern — a lag
+``events_sessionize`` is the batch counterpart of the
+``streaming_session_rollup`` stream: the gaps-and-islands pattern — a lag
 window flags session starts, a running sum numbers sessions, a groupBy
 rolls them up. Three window/agg passes over one shuffle key (user_id):
 the canonical distributed sessionization shape.
@@ -549,10 +549,11 @@ def _local_checkpoint_files(spark: SparkSession):
     file. The FileSystem manager renames with ``FileSystem.rename``,
     which on a local path is an atomic, overwriting POSIX rename; Spark's
     own checkpoint checksum files are still written. Durable and cluster
-    checkpoints (``streaming/jobs.py``, the stream-loss probe) keep the
-    default manager: on HDFS its FileContext rename is an atomic
-    overwrite, and an ``hdfs://`` or ``s3a://`` path never reaches
-    ``RawLocalFileSystem``. Session value restored on exit."""
+    checkpoints (streams started outside this harness, such as the
+    stream-loss probe's) keep the default manager: on HDFS its
+    FileContext rename is an atomic overwrite, and an ``hdfs://`` or
+    ``s3a://`` path never reaches ``RawLocalFileSystem``. Session value
+    restored on exit."""
     return scoped_conf(spark, CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
 
 
@@ -584,9 +585,10 @@ HAVING date_trunc('hour', MIN(ts)) + INTERVAL 1 HOUR <= cutoff
 """)
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming, oracle-checked at full value strictness: the
-    watermarked hourly rollup (streaming/jobs.py::hourly_rollup_stream
-    shape) run with ``trigger(availableNow=True)`` over the events
-    table's own files as a file stream, append mode into a memory sink.
+    watermarked hourly rollup (``streaming.jobs.windowed_value_rollup``
+    over 1-hour tumbling windows) run with ``trigger(availableNow=True)``
+    over the events table's own files as a file stream, append mode into
+    a memory sink.
 
     The oracle replays the append-mode emission rule exactly: with one
     input batch, the final watermark is ``max(ts) - 2 hours`` and the
@@ -601,18 +603,12 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the unbounded-ingest path — state is keyed by
     (window, type) across executors and the watermark bounds it; the
     memory sink is the test double for a real table/Kafka sink."""
+    from ..streaming.jobs import windowed_value_rollup
+
     ev, ev_stream = table_and_stream(spark, sf_dir, "events")
 
     def agg(stream: DataFrame) -> DataFrame:
-        return (stream.withWatermark("ts", "2 hours")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.col("value").cast("decimal(18,2)"))
-                      .alias("dec_total"))
-                .select(F.col("w.start").alias("window_start"), "event_type",
-                        F.col("n").cast("bigint").alias("n"),
-                        F.round(F.col("dec_total").cast("double"), 3)
-                         .alias("total_value")))
+        return windowed_value_rollup(stream, F.window("ts", "1 hour"))
 
     return _run_stream_to_memory(spark, ev_stream, ev.count(), "rollup", agg)
 
@@ -647,19 +643,13 @@ def streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     2× the live windows per key (length/slide); the watermark still
     bounds it — overlapping windows change the state constant, not the
     growth class."""
+    from ..streaming.jobs import windowed_value_rollup
+
     ev, ev_stream = table_and_stream(spark, sf_dir, "events")
 
     def agg(stream: DataFrame) -> DataFrame:
-        return (stream.withWatermark("ts", "2 hours")
-                .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"),
-                         "event_type")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.col("value").cast("decimal(18,2)"))
-                      .alias("dec_total"))
-                .select(F.col("w.start").alias("window_start"), "event_type",
-                        F.col("n").cast("bigint").alias("n"),
-                        F.round(F.col("dec_total").cast("double"), 3)
-                         .alias("total_value")))
+        return windowed_value_rollup(stream,
+                                     F.window("ts", "2 hours", "1 hour"))
 
     return _run_stream_to_memory(spark, ev_stream, ev.count(), "sliding", agg)
 
@@ -779,8 +769,7 @@ SELECT user_id, session_start, session_end, n_events, total_value
 FROM sess, wm WHERE session_end <= cutoff
 """)
 def streaming_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The built-in ``session_window`` sessionization
-    (streaming/jobs.py::session_window_rollup shape), oracle-checked
+    """The built-in ``session_window`` sessionization, oracle-checked
     against the batch gaps-and-islands oracle on the same events: 30-min
     dynamic-gap event-time windows, watermark 30 min, availableNow,
     append mode into a memory sink.

@@ -360,9 +360,8 @@ def extend_corpus(corpus_docs: DataFrame, new_docs: DataFrame, *,
     fingerprint relation for the exact tier. With all three supplied
     the corpus TEXT column is never read — per-batch corpus access
     reduces to one pruned doc_id scan plus the fixed-width index
-    states. :func:`streaming.jobs.corpus_extend_stream` maintains all
-    three as derived append states; callers without state get the
-    self-contained recompute.
+    states. The contract's ``corpus_extend_admissions`` supplies all
+    three; callers without state get the self-contained recompute.
     """
     split_weights = split_weights or {"train": 0.9, "val": 0.05,
                                       "test": 0.05}

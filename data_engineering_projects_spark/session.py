@@ -376,7 +376,7 @@ def scratch_dir(prefix: str) -> str:
     streaming checkpoints especially, which fsync every micro-batch
     commit. On a real cluster this scratch sits on node-local NVMe or
     the object store; tmpfs is this container's stand-in. Durable,
-    user-owned state paths (corpus_extend_stream arguments etc.) are
-    NOT routed through here."""
+    user-owned paths (a stream's long-lived checkpoint, a table's
+    location) are NOT routed through here."""
     import tempfile
     return tempfile.mkdtemp(prefix=prefix, dir=_fast_local_dir())

@@ -2,6 +2,5 @@
 the reference is cron-batch only, §2.9)."""
 
 from .jobs import (  # noqa: F401
-    dedup_stream, hourly_rollup_stream, quality_gated_sink,
-    session_window_rollup, sessionize_stream, stream_stream_join,
+    dedup_stream, stream_stream_join, windowed_value_rollup,
 )

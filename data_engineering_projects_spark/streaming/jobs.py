@@ -1,66 +1,45 @@
-"""Streaming variants of the engine's rollups (SURVEY.md §7.6).
+"""The stateful stream shapes the contract's streaming queries run
+(SURVEY.md §7.6).
 
 The reference's "streaming" is a cron re-run of a batch job
-(5_dbt/READ.md:41); these jobs give the true incremental path: the daily dbt
-pipeline's hourly rollup as an event-time windowed aggregation with
-watermarked late-data handling, plus a custom stateful operator
-(sessionization) via ``applyInPandasWithState`` — the pattern the engine
-uses wherever an operator needs cross-batch state Spark lacks natively.
+(5_dbt/READ.md:41); these shapes give the true incremental path: an
+event-time windowed aggregate with watermarked late-data handling,
+watermark-bounded exact dedup, and a watermarked stream-stream interval
+join. ``contract/sessions.py`` runs each one oracle-checked, and
+``tools/cluster_stream_loss_probe.py`` runs the dedup and the windowed
+rollup through executor loss.
 
 Scale posture: state is partitioned by key across executors (RocksDB/HDFS
-state store on a real cluster); the watermark bounds state size, so the
-job runs indefinitely on an unbounded stream.
+state store on a real cluster); the watermark bounds state size, so each
+shape runs indefinitely on an unbounded stream.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType, StringType, StructField, StructType, TimestampType,
-)
 
 
-def hourly_rollup_stream(events: DataFrame,
-                         watermark: str = "2 hours",
-                         window_len: str = "1 hour") -> DataFrame:
-    """Streaming analog of the dbt hourly congestion rollup
-    (5_dbt/READ.md:398-412): per (user, 1-hour event-time window)
-    avg/min/max/count of value, tolerating ``watermark`` of lateness.
+def windowed_value_rollup(events: DataFrame, window: Column,
+                          watermark: str = "2 hours") -> DataFrame:
+    """Watermarked event-time rollup per (``window``, event_type): the
+    row count ``n`` and ``total_value``, the exact DECIMAL(18,2) sum of
+    ``value`` rounded to 3 places, keyed by ``window_start``.
 
-    ``events`` must be a streaming DataFrame with (ts timestamp,
-    user_id long, value double). Late rows beyond the watermark are
-    dropped deterministically; windows finalize once the watermark passes
-    their end — the streaming replacement for the reference's "rerun the
-    whole batch daily" model.
-    """
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window_len).alias("w"), F.col("user_id"))
-            .agg(F.avg("value").alias("avg_value"),
-                 F.min("value").alias("min_value"),
-                 F.max("value").alias("max_value"),
-                 F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "user_id", "avg_value", "min_value", "max_value", "n_events"))
-
-
-def session_window_rollup(events: DataFrame, gap: str = "30 minutes",
-                          watermark: str = "30 minutes") -> DataFrame:
-    """Sessionization via the built-in ``session_window`` (dynamic-gap
-    event-time windows) — the declarative counterpart of
-    :func:`sessionize_stream`. Prefer this when per-session aggregates
-    are enough; drop to ``applyInPandasWithState`` only for state shapes
-    session_window can't express (e.g. emitting mid-session updates)."""
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum("value").alias("total_value"))
-            .select(F.col("w.start").alias("session_start"),
-                    F.col("w.end").alias("session_end"),
-                    "user_id", "n_events", "total_value"))
+    ``events`` is a streaming DataFrame with (ts timestamp, event_type,
+    value double); ``window`` is the ``F.window(...)`` grouping column,
+    tumbling or sliding. In append mode a window is emitted once the
+    watermark passes its end. The decimal sum is exact, so the result
+    does not depend on the order partial sums merge in."""
+    return (events.withWatermark("ts", watermark)
+            .groupBy(window.alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.col("value").cast("decimal(18,2)"))
+                  .alias("dec_total"))
+            .select(F.col("w.start").alias("window_start"), "event_type",
+                    F.col("n").cast("bigint").alias("n"),
+                    F.round(F.col("dec_total").cast("double"), 3)
+                     .alias("total_value")))
 
 
 def stream_stream_join(clicks: DataFrame, purchases: DataFrame,
@@ -90,39 +69,6 @@ def stream_stream_join(clicks: DataFrame, purchases: DataFrame,
                      "purchase_ts", "click_id", "click_ts", "amount"))
 
 
-def quality_gated_sink(stream: DataFrame, checks, path: str,
-                       checkpoint: str, quarantine_path: str | None = None):
-    """Write a stream through the dbt-test-analog quality gate
-    (``quality.run_checks``) per micro-batch via ``foreachBatch``: ERROR
-    violations fail the batch (and the query — at-least-once semantics
-    mean the batch retries after the upstream fix, exactly like the
-    reference DAG ordering ``run_data_quality_checks →
-    transform_data_with_dbt``, 5_dbt/READ.md:53-71); WARN violations are
-    logged to ``quarantine_path`` as a violations report but the batch
-    commits.
-
-    Returns the started StreamingQuery.
-    """
-    from ..quality import Severity, run_checks
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # run_checks raises QualityError on ERROR-severity failures,
-        # which fails this batch and stops the query (dbt gate semantics)
-        results = run_checks(batch_df, checks)
-        warns = [r for r in results
-                 if not r.passed and r.severity == Severity.WARN]
-        if quarantine_path and warns:
-            spark = batch_df.sparkSession
-            (spark.createDataFrame(
-                [(batch_id, r.name, r.violations) for r in warns],
-                "batch_id long, check string, n_violations long")
-             .write.mode("append").parquet(quarantine_path))
-        batch_df.write.mode("append").parquet(path)
-
-    return (stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint).start())
-
-
 def dedup_stream(docs: DataFrame, ts_col: str = "ts",
                  fp_col: str = "fp", watermark: str = "1 hour") -> DataFrame:
     """Streaming exact dedup: keep the first arrival of each content
@@ -138,1282 +84,3 @@ def dedup_stream(docs: DataFrame, ts_col: str = "ts",
     """
     return (docs.withWatermark(ts_col, watermark)
                 .dropDuplicatesWithinWatermark([fp_col]))
-
-
-_SESSION_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
-    StructField("n_events", LongType()),
-    StructField("status", StringType()),
-])
-
-_STATE_SCHEMA = StructType([
-    StructField("start_ms", LongType()),
-    StructField("last_ms", LongType()),
-    StructField("n", LongType()),
-])
-
-
-def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Custom stateful operator: event sessionization with an inactivity
-    gap, via ``applyInPandasWithState`` (arbitrary per-key state the
-    built-in windowed aggs can't express). Emits a row when a session
-    closes (gap elapsed → state timeout).
-
-    State per user is three longs; the timeout bounds its lifetime.
-    """
-    import pandas as pd  # local import: only the streaming path needs it
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = gap_minutes * 60 * 1000
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_ms, last_ms, n = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id,
-                "session_start": pd.Timestamp(start_ms, unit="ms"),
-                "session_end": pd.Timestamp(last_ms, unit="ms"),
-                "n_events": n, "status": "closed",
-            }])
-            return
-        ts_min = ts_max = None
-        n_new = 0
-        for pdf in pdf_iter:
-            ts = pd.to_datetime(pdf["ts"])
-            lo, hi = ts.min(), ts.max()
-            ts_min = lo if ts_min is None else min(ts_min, lo)
-            ts_max = hi if ts_max is None else max(ts_max, hi)
-            n_new += len(pdf)
-        if n_new:
-            lo_ms = int(ts_min.value // 1_000_000)
-            hi_ms = int(ts_max.value // 1_000_000)
-            if state.exists:
-                start_ms, last_ms, n = state.get
-                state.update((min(start_ms, lo_ms), max(last_ms, hi_ms), n + n_new))
-            else:
-                state.update((lo_ms, hi_ms, n_new))
-            state.setTimeoutTimestamp(hi_ms + gap_ms)
-        return
-        yield  # pragma: no cover — make fn a generator on all paths
-
-    return (events
-            .withWatermark("ts", f"{gap_minutes} minutes")
-            .groupBy("user_id")
-            .applyInPandasWithState(fn, _SESSION_SCHEMA, _STATE_SCHEMA,
-                                    "Update", GroupStateTimeout.EventTimeTimeout))
-
-
-def hourly_congestion_stream(speed_events: DataFrame, dim_loc: DataFrame,
-                             watermark: str = "2 hours") -> DataFrame:
-    """The dbt ``int_hourly_congestion`` model as an incremental streaming
-    job (5_dbt/READ.md:398-485): watermarked hourly speed rollup per
-    location, enriched by a stream-static broadcast join to the location
-    dimension, congestion index computed per finalized window.
-
-    ``speed_events`` is a streaming DataFrame (ts, location_id, speed);
-    ``dim_loc`` is a *static* DataFrame (location_id, speed_limit, lanes).
-    The static side broadcasts — the stream never shuffles for the join,
-    only for the windowed aggregate; this is the standard dimension-
-    enrichment shape for unbounded pipelines."""
-    from ..functions import metrics as M
-
-    rollup = (speed_events
-              .withWatermark("ts", watermark)
-              .groupBy(F.window("ts", "1 hour").alias("w"),
-                       F.col("location_id"))
-              .agg(F.avg("speed").alias("avg_speed"),
-                   F.count(F.lit(1)).alias("reading_count")))
-    enriched = rollup.join(F.broadcast(dim_loc), "location_id", "left")
-    return enriched.select(
-        F.col("w.start").alias("recorded_hour"), "location_id",
-        "avg_speed", "reading_count", "speed_limit", "lanes",
-        M.speed_ratio(F.col("avg_speed"), F.col("speed_limit"))
-         .alias("speed_ratio"),
-        M.congestion_index(F.col("avg_speed"), F.lit(0),
-                           F.col("speed_limit"), F.col("lanes"))
-         .alias("congestion_index_novolume"))
-
-
-def _apply_batch_with_state_swap(spark, state_path: str, batch_id: int,
-                                 merge) -> None:
-    """The shared foreachBatch state-maintenance discipline (factored
-    out of :func:`sketch_rollup_stream` in round 11 so
-    :func:`corpus_extend_stream` composes the identical guarantees):
-
-    - at-least-once delivery → effectively exactly-once merge via a
-      single HIGH-WATERMARK batch-id marker (``_applied_<bid>`` inside
-      the state dir; ids from one checkpointed query are monotonic, so
-      ``batch_id <= watermark`` is a replay and is skipped; max() also
-      reads legacy multi-marker dirs);
-    - crash-safe swap: new state fully materialized into ``__tmp``
-      (marker written BEFORE the swap so marker and data commit in the
-      same rename), state → ``__bak``, tmp → state; an interrupted swap
-      (bak present, state missing) heals on the next batch.
-
-    ``merge(old_state_df_or_None) -> new_state_df``; single writer per
-    ``state_path`` assumed (the incremental-model contract).
-
-    **Checkpoint lifetime**: ``state_path`` is bound to ONE checkpoint
-    lifetime — wipe both together or neither. The watermark skips any
-    ``batch_id <= wm`` outright (the merge never runs for skipped ids),
-    so after wiping the checkpoint ALONE, restarted ids re-count from 0
-    and a regrouped source batch could carry never-admitted rows that
-    are silently skipped. State built by merges that tolerate
-    re-delivery idempotently (e.g. corpus admission) survives a
-    checkpoint wipe anyway; sketch-style additive merges do not.
-
-    **Concurrent readers**: the swap serves readers an atomic
-    old-or-new state, but a reader that resolved ``state_path`` and is
-    mid-scan DURING the rename pair can hit a transient
-    ``FileNotFoundException`` (old file list, new directory inode).
-    The contract is single-writer + retry-on-ENOENT for ad-hoc readers;
-    serving reads through a versioned-table registry
-    (``plans/models.py``) removes the window entirely. State that IS
-    the dataset should use :func:`_append_batch_with_marker` instead,
-    whose committed files are never renamed away.
-
-    **Durability contract**: PROCESS-crash-safe, not power-loss-safe —
-    no fsync is issued, so on power loss the Spark checkpoint commit can
-    survive while this swap's rename is lost; the batch is then never
-    redelivered and its merge is missing. Acceptable here because swap
-    state is derived/rebuildable (sketches, rollups); state that is the
-    dataset uses the append helper, which fsyncs through its commit
-    rename (round 13)."""
-    import os
-    import shutil
-
-    def marker(d, bid):
-        return os.path.join(d, f"_applied_{bid}")
-
-    def watermark(d):
-        wm = -1
-        if os.path.isdir(d):
-            for f in os.listdir(d):
-                # defensive parse: a stray/truncated marker name (e.g.
-                # '_applied_' or '_applied_1.tmp' left by an operator or
-                # tool) must not wedge the stream — skip any suffix that
-                # is not a pure integer (batch ids are always >= 0)
-                if f.startswith("_applied_") and \
-                        f[len("_applied_"):].isdigit():
-                    wm = max(wm, int(f[len("_applied_"):]))
-        return wm
-
-    bak, tmp = state_path + "__bak", state_path + "__tmp"
-    if os.path.exists(bak) and not os.path.exists(state_path):
-        os.rename(bak, state_path)
-    if batch_id <= watermark(state_path):
-        return  # replayed batch: already merged
-    old = (spark.read.parquet(state_path)
-           if os.path.exists(state_path) else None)
-    new_state = merge(old)
-    new_state.write.mode("overwrite").parquet(tmp)
-    open(marker(tmp, batch_id), "w").close()
-    shutil.rmtree(bak, ignore_errors=True)
-    if os.path.exists(state_path):
-        os.rename(state_path, bak)
-    os.rename(tmp, state_path)
-    shutil.rmtree(bak, ignore_errors=True)
-
-
-def _fsync_dir(path: str) -> None:
-    """fsync a directory inode (its entry list) — no-op on platforms
-    whose os module lacks O_DIRECTORY (the durability upgrade is
-    Linux-targeted; semantics degrade to process-crash-safe elsewhere)."""
-    import os
-    flag = getattr(os, "O_DIRECTORY", None)
-    if flag is None:  # pragma: no cover — non-POSIX fallback
-        return
-    fd = os.open(path, os.O_RDONLY | flag)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
-def _fsync_tree(path: str) -> None:
-    """fsync every regular file under ``path`` plus each directory, so a
-    subsequent rename publishes fully-durable contents (rename ordering:
-    data first, then the dir entries, then the commit rename)."""
-    import os
-    for root, _dirs, files in os.walk(path, topdown=False):
-        for f in files:
-            fd = os.open(os.path.join(root, f), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        _fsync_dir(root)
-
-
-def _append_batch_with_marker(spark, state_path: str, batch_id: int,
-                              build) -> None:
-    """Append-layout variant of the foreachBatch state discipline, for
-    state that IS the dataset (round-12 ADVICE: the full-rewrite swap is
-    right for few-KB sketch state but quadratic-cumulative for an
-    ever-growing corpus). Per-batch cost is proportional to the BATCH,
-    not to state age:
-
-    - each applied batch lands as one Hive-style partition directory
-      ``state_path/batch=<bid>/`` via a single atomic rename — the
-      rename IS the commit point, so readers never see a partial batch
-      and committed files are never renamed away (no transient-ENOENT
-      window for concurrent readers, unlike the swap helper);
-    - the high-watermark ``_applied_<bid>`` marker is a lazily-healed
-      cache of ``max(batch dirs)``: dir presence is authoritative, so a
-      crash after the rename but before the marker write re-skips the
-      redelivered batch by its directory and only heals the marker;
-    - replays (``batch_id <= watermark``; ids from one checkpointed
-      query are monotonic) are skipped before any work; same
-      checkpoint-lifetime contract as the swap helper;
-    - zero-admission batches still commit an (empty, schema-bearing)
-      directory so the watermark advances through them.
-
-    ``build(old_state_df_or_None) -> this_batch_rows_df`` returns ONLY
-    the rows the batch appends (not old ∪ new). Readers see one extra
-    Hive-partition column ``batch`` (admission lineage) —
-    :func:`read_corpus_state` drops it. Single writer per ``state_path``
-    assumed.
-
-    **Durability** (round 13, from ADVICE): rename-is-commit alone is
-    process-crash-safe but not power-loss-safe — the OS can persist the
-    Spark checkpoint commit while the rename (or the renamed files'
-    contents) is still only in the page cache, after which the batch is
-    never redelivered yet its rows are missing. So before the rename the
-    tmp dir's files and the dir itself are fsync'd, and after the rename
-    the PARENT is fsync'd, making the commit point durable in rename
-    order. Cost is O(batch files) per batch. (The swap helper
-    :func:`_apply_batch_with_state_swap` remains process-crash-safe only, as
-    its docstring records — it serves derived/sketch state where a
-    power-loss rebuild is acceptable; the append layout IS the dataset.)
-    """
-    import os
-    import shutil
-
-    def applied_ids():
-        ids = [-1]
-        for f in os.listdir(state_path):
-            for pfx in ("_applied_", "batch="):
-                if f.startswith(pfx) and f[len(pfx):].isdigit():
-                    ids.append(int(f[len(pfx):]))
-        return ids
-
-    os.makedirs(state_path, exist_ok=True)
-    _heal_compaction(state_path)  # finish a crashed compaction first
-    if batch_id < max(applied_ids()):
-        return  # replayed batch: already committed (dir or marker).
-    # batch_id == watermark falls through: the dir check below skips the
-    # build, and the marker-heal pass repairs a crash that landed the
-    # rename but lost the marker write.
-    dst = os.path.join(state_path, f"batch={batch_id}")
-    if not os.path.exists(dst):
-        has_data = any(f.startswith("batch=")
-                       for f in os.listdir(state_path))
-        old = (spark.read.parquet(state_path).drop("batch")
-               if has_data else None)
-        new_rows = build(old)
-        tmp = state_path + "__tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        new_rows.write.mode("overwrite").parquet(tmp)
-        _fsync_tree(tmp)       # data durable BEFORE the commit rename
-        os.rename(tmp, dst)    # commit point
-        _fsync_dir(state_path)  # the rename itself durable
-    # heal/advance the single high-watermark marker (write-then-sweep:
-    # a crash between the two leaves extra markers, max() still correct)
-    open(os.path.join(state_path, f"_applied_{batch_id}"), "w").close()
-    for f in os.listdir(state_path):
-        if (f.startswith("_applied_") and f[len("_applied_"):].isdigit()
-                and int(f[len("_applied_"):]) < batch_id):
-            os.remove(os.path.join(state_path, f))
-
-
-_COMPACT_READY = ".compact_ready_"
-
-
-def _parse_ready_marker(name: str) -> tuple[int, int] | None:
-    """(lo, hi) of an intent marker. Two formats: the legacy prefix
-    fold ``.compact_ready_<hi>`` (lo = unbounded, rendered as -1 —
-    remove every dir ≤ hi) and the round-14 range fold
-    ``.compact_ready_<lo>-<hi>``."""
-    if not name.startswith(_COMPACT_READY):
-        return None
-    tail = name[len(_COMPACT_READY):]
-    if tail.isdigit():
-        return (-1, int(tail))
-    lo, sep, hi = tail.partition("-")
-    if sep and lo.isdigit() and hi.isdigit():
-        return (int(lo), int(hi))
-    return None
-
-
-def _heal_compaction(state_path: str) -> None:
-    """Finish an interrupted :func:`compact_append_state` (idempotent;
-    called by the writer at the top of every batch append). The intent
-    marker (see :func:`_parse_ready_marker`) holds the fully-written
-    combined dir; once it exists the compaction is COMMITTED and
-    completing it is pure mechanics: remove the now-redundant
-    ``batch=<lo ≤ i ≤ hi>`` dirs, then rename the combined dir into
-    place as ``batch=<hi>``."""
-    import os
-    import shutil
-
-    if not os.path.isdir(state_path):
-        return
-    for f in os.listdir(state_path):
-        rng = _parse_ready_marker(f)
-        if rng is None:
-            continue
-        lo, hi = rng
-        for g in list(os.listdir(state_path)):
-            if g.startswith("batch=") and g[len("batch="):].isdigit() \
-                    and lo <= int(g[len("batch="):]) <= hi:
-                shutil.rmtree(os.path.join(state_path, g))
-        os.rename(os.path.join(state_path, f),
-                  os.path.join(state_path, f"batch={hi}"))
-        _fsync_dir(state_path)
-
-
-def compact_append_state(spark, state_path: str,
-                         upto: int | None = None,
-                         since: int | None = None) -> int | None:
-    """Rewrite every committed ``batch=<i ≤ K>`` dir of an append-layout
-    state into ONE ``batch=<K>`` dir (round 13, verdict #6): one
-    partition dir per micro-batch is the right write path, but at
-    minutes-cadence a long-lived stream accumulates 100k+ dirs — a
-    listing/small-file problem. K = the largest committed id ≤ ``upto``
-    (default: all of them). Returns K, or None when fewer than two dirs
-    qualify (nothing to do).
-
-    ``since`` (round 14, verdict #2): lower id bound — folds only the
-    RANGE ``since ≤ i ≤ upto`` into ``batch=<K>``, leaving older dirs
-    untouched. This is the primitive :func:`tiered_compact_append_state`
-    builds its LSM-style schedule on; a range fold writes the intent
-    marker as ``.compact_ready_<lo>-<hi>`` so the heal removes exactly
-    the folded range (the legacy ``.compact_ready_<K>`` prefix marker
-    is still healed for states written before the upgrade). Lineage
-    coarsens per-range: rows in the folded dir carry
-    ``batch = K`` ("admitted in (previous dir, K]").
-
-    Invariants preserved:
-
-    - **rows**: the combined dir holds exactly the union of the
-      compacted dirs' rows (read before anything is removed);
-    - **watermark**: the ``_applied_<wm>`` marker is untouched and
-      ``wm >= K``, so ``max(applied_ids)`` — and therefore replay
-      skipping — is unchanged at every step, including mid-crash;
-    - **dir presence authoritative**: after completion the dir set is
-      ``{K} ∪ {i > K}``; during the (writer-only) completion window a
-      missing ``batch=<i ≤ K>`` dir is always covered by the committed
-      intent marker, which :func:`_heal_compaction` finishes on the
-      next batch append after a crash.
-
-    Crash protocol (single writer, between batches): (1) combined rows
-    written to a sibling tmp and fsync'd; (2) tmp renamed INTO the state
-    dir as ``.compact_ready_<K>`` — the commit point (dot-prefixed:
-    invisible to Spark's file listing and to ``applied_ids``); (3) dirs
-    ``i <= K`` removed; (4) ready-dir renamed to ``batch=<K>``. A crash
-    before (2) leaves only ignorable debris; after (2) the heal replays
-    (3)-(4) idempotently.
-
-    Lineage coarsens: rows from compacted batches now carry
-    ``batch = K`` ("admitted at or before K"); exact per-batch lineage
-    is traded for the bounded dir count, which is the point.
-
-    **Reader contract caveat**: this is the ONE maintenance operation
-    that removes committed dirs, so a concurrent ad-hoc reader mid-scan
-    can hit ENOENT during (3)-(4) — the same retry-on-ENOENT contract
-    as the swap helper; readers served through the versioned-table
-    registry (``plans/models.py``) or between maintenance windows never
-    see it. The per-batch append path remains rename-only.
-
-    **Derived ``__index`` state**: compact it with the same call and
-    the same ``upto`` (same layout), AFTER the corpus (order pinned in
-    ``corpus_extend_stream.write_batch``), or simply leave it —
-    :func:`_reconcile_index` treats the corpus as the source of truth
-    and reconverges the index over the compacted dirs on the next
-    batch (drops stale ids, backfills ``batch=<K>`` in one bounded
-    pass; since round 14 it also row-count-verifies surviving
-    intersection dirs, so a crash between the corpus and index
-    compactions can no longer leave a trusted-but-incomplete cache)."""
-    import os
-    import shutil
-
-    _heal_compaction(state_path)
-    ids = sorted(_batch_dir_ids(state_path))
-    todo = [i for i in ids if (upto is None or i <= upto)
-            and (since is None or i >= since)]
-    if len(todo) < 2:
-        return None
-    lo, k = todo[0], todo[-1]
-    paths = [os.path.join(state_path, f"batch={i}") for i in todo]
-    tmp = state_path + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # read via the parent so empty (schema-only) dirs and partition
-    # pruning behave; lo <= batch <= K selects exactly the compacted dirs
-    rows = (spark.read.parquet(state_path)
-            .filter((F.col("batch") >= lo) & (F.col("batch") <= k))
-            .drop("batch"))
-    rows.write.mode("overwrite").parquet(tmp)
-    _fsync_tree(tmp)
-    ready = os.path.join(state_path, f"{_COMPACT_READY}{lo}-{k}")
-    os.rename(tmp, ready)        # commit point
-    _fsync_dir(state_path)
-    for p in paths:
-        shutil.rmtree(p, ignore_errors=True)
-    os.rename(ready, os.path.join(state_path, f"batch={k}"))
-    _fsync_dir(state_path)
-    return k
-
-
-def tiered_compact_plan(sizes: list[tuple[int, int]],
-                        min_run: int = 2, slack: float = 1.0,
-                        force: bool = False) -> tuple[int, int] | None:
-    """Pure size-tiered fold policy over (batch_id, n_rows) pairs —
-    split out so the O(T log T) rewrite bound is unit-testable without
-    a filesystem. Scan newest → oldest accumulating run rows; include
-    the next older dir while its rows ≤ ``slack`` × the accumulated
-    total (slack=1.0 is the simplified universal-compaction rule:
-    never rewrite a dir bigger than everything newer combined).
-    Returns the (lo, hi) id range to fold, or None when the eligible
-    run is shorter than ``min_run``.
-
-    Why this bounds total rewrite I/O at O(T log T) rows over T
-    equal-sized batches: a dir is only rewritten into a fold at least
-    as large as twice its own size (it must be ≤ the accumulated newer
-    rows), so each ROW participates in at most log₂(T) folds — vs the
-    full-refold schedule where every row is rewritten on every trigger
-    (Σ corpus ≈ T²/(2N) rows, the quadratic-cumulative class the r11
-    swap helper was retired for). Any slack ≥ 1 keeps the bound with a
-    worse base: a fold including a dir of n rows holds ≥ n·(1+1/slack)
-    rows, so each row folds ≤ log_{1+1/slack}(T) times.
-
-    ``force`` (round 15, from ADVICE): the slack-1.0 rule STALLS
-    whenever the second-newest dir is bigger than the newest —
-    monotonically SHRINKING per-batch sizes (the typical profile as a
-    dedup corpus saturates: later batches admit fewer rows) return
-    None forever and dir count grows unbounded despite the trigger.
-    With ``force=True`` the second-newest dir is included
-    unconditionally, guaranteeing a ≥2-dir fold whenever 2+ dirs
-    exist; callers use it (with slack=2.0, which sweeps up a whole
-    gently-shrinking tail in one fold) only past a hard dir-count cap,
-    so the regular rule still shapes the schedule and the forced path
-    merely bounds the count. The adversarial regime (every batch >2×
-    smaller than the last) is MEASURED BENIGN (round 16, verdict #5,
-    SCALING.md): integer row counts ≥ 1 cannot keep halving for more
-    than log₂(N₀) batches, so the regime self-terminates — pure
-    geometric shrink at T=256 hands its 1-row tail back to the regular
-    rule (122 regular folds, 0 forced, amplification 0.01), and a
-    cyclic >2×-shrink that restarts big every 12 batches is swept by
-    the regular rule at each restart (amplification 2.57 vs the log₂T=8
-    bound, 0 forced, dirs ≤ 15 at cap 16). The forced path's real
-    domain stays the r15 gentle-monotonic-shrink stall (dedup
-    saturation), measured there at amplification 2.5 with 18/18 folds
-    forced; in every measured regime amplification ≤ log₂T and the dir
-    cap held."""
-    if len(sizes) < 2:
-        return None
-    ordered = sorted(sizes)  # by id ascending; scan from the newest
-    run = [ordered[-1]]
-    acc = ordered[-1][1]
-    for idx, (bid, n) in enumerate(reversed(ordered[:-1])):
-        if n > slack * acc and not (force and idx == 0):
-            break
-        run.append((bid, n))
-        acc += n
-    if len(run) < min_run:
-        return None
-    return (run[-1][0], run[0][0])
-
-
-def tiered_compact_append_state(spark, state_path: str,
-                                min_run: int = 2,
-                                force_fold_at: int | None = None,
-                                sizes_cache: dict[int, int] | None = None
-                                ) -> tuple[int, int] | None:
-    """LSM-style maintenance fold for an append-layout state (round 14,
-    verdict #2): fold the newest run of dirs chosen by
-    :func:`tiered_compact_plan` (dir sizes from parquet footers —
-    driver-side, no job) into one ``batch=<hi>`` dir via the range form
-    of :func:`compact_append_state`. Unlike the full prefix fold, total
-    rewrite I/O over a stream's lifetime is O(T log T) rows instead of
-    quadratic-cumulative — the difference between a minutes-cadence
-    stream that can run for years and one whose maintenance cost grows
-    without bound (measured crossover in SCALING.md). Same crash
-    protocol, same single-writer-between-batches contract; returns the
-    folded (lo, hi) id range — the caller folds any derived state over
-    the SAME range — or None when no run qualifies.
-
-    ``force_fold_at`` (round 15, from ADVICE): hard dir-count cap.
-    When the regular size-ratio rule declines (shrinking-batch stall —
-    see :func:`tiered_compact_plan`) and the committed dir count has
-    reached the cap, a fold is FORCED (slack=2.0 + unconditional
-    second-newest), so dir count is bounded at ~``force_fold_at``
-    regardless of the batch-size profile. Callers that trigger at
-    ``compact_every`` should cap at ``2 × compact_every``: the regular
-    rule keeps shaping the schedule and the forced path only fires in
-    the stall regime.
-
-    ``sizes_cache`` (round 15, from ADVICE): optional batch_id → rows
-    memo owned by a single-writer caller. Committed dirs are immutable
-    (folds REPLACE a range under a new id after healing), so cached
-    counts stay exact; with the cache, a no-fold trigger costs one
-    listdir plus footers for NEW dirs only, instead of re-reading every
-    parquet footer in the state (O(total files) driver reads per batch
-    with zero progress — the stall's second-order cost). The cache is
-    invalidated wholesale when a crash-interrupted fold was healed
-    (contents of ``batch=<hi>`` changed identity), and folded ranges
-    are evicted after each fold. Round 16 (from ADVICE): a heal can
-    also happen OUTSIDE this function — the append path calls
-    :func:`_heal_compaction` too, replacing ``batch=<hi>``'s contents
-    without this function ever seeing the marker — so the cached count
-    of the largest CACHED surviving id is re-verified against footers
-    on every call (one cheap footer read). Largest-cached is the right
-    target: a fold's ``hi`` is always the newest dir at fold time (the
-    plan scans newest-first), so ids above a healed ``hi`` can only be
-    appends that landed after the heal — never yet in the cache —
-    while the stale entry is exactly the top of what IS cached."""
-    import os
-
-    healed = any(_parse_ready_marker(f) is not None
-                 for f in os.listdir(state_path)) \
-        if os.path.isdir(state_path) else False
-    _heal_compaction(state_path)
-    if healed and sizes_cache is not None:
-        sizes_cache.clear()
-    ids = sorted(_batch_dir_ids(state_path))
-    if sizes_cache is None:
-        sizes = [(bid, _dir_parquet_rows(
-            os.path.join(state_path, f"batch={bid}"))) for bid in ids]
-    else:
-        for bid in set(sizes_cache) - set(ids):
-            del sizes_cache[bid]
-        if sizes_cache:
-            # a heal performed by the append path rewrites the fold
-            # target batch=<hi> in place without this function seeing
-            # the marker; hi is the largest cached surviving id (see
-            # docstring), so one footer read per call keeps it exact
-            top = max(sizes_cache)
-            sizes_cache[top] = _dir_parquet_rows(
-                os.path.join(state_path, f"batch={top}"))
-        for bid in ids:
-            if bid not in sizes_cache:
-                sizes_cache[bid] = _dir_parquet_rows(
-                    os.path.join(state_path, f"batch={bid}"))
-        sizes = sorted(sizes_cache.items())
-    rng = tiered_compact_plan(sizes, min_run=min_run)
-    if rng is None and force_fold_at is not None \
-            and len(sizes) >= force_fold_at:
-        rng = tiered_compact_plan(sizes, min_run=2, slack=2.0,
-                                  force=True)
-    if rng is None:
-        return None
-    compact_append_state(spark, state_path, upto=rng[1], since=rng[0])
-    if sizes_cache is not None:
-        for bid in [b for b in sizes_cache
-                    if rng[0] <= b <= rng[1]]:
-            del sizes_cache[bid]
-    return rng
-
-
-def _stable_listing(path: str, tries: int = 50) -> list[str]:
-    """Two successive ``os.listdir`` snapshots that AGREE — the
-    cheap guard against the readdir-vs-rename race (an entry being
-    renamed mid-iteration can be missing from a single listing).
-    The writer's completion steps take milliseconds, so disagreement
-    converges within a few 2 ms backoffs; after ``tries`` the last
-    view is returned (the retry-on-ENOENT backstop still applies
-    downstream — and a view that still carries the intent marker is
-    served as the post-fold state, which is correct even mid-removal,
-    so the residual race is only the final-rename instant)."""
-    import os
-    import time
-    prev = sorted(os.listdir(path))
-    for _ in range(tries):
-        cur = sorted(os.listdir(path))
-        if cur == prev:
-            return cur
-        prev = cur
-        time.sleep(0.002)
-    return prev
-
-
-_SNAP_DIR = ".rsnap"
-_live_snapshots: list[str] = []
-
-
-def _cleanup_snapshots() -> None:
-    import shutil
-    for p in _live_snapshots:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _sweep_reader_snapshots(corpus_path: str,
-                            ttl_sec: float | None = None) -> None:
-    """Remove crashed readers' leftover pin snapshots: ``.rsnap/<id>``
-    entries older than the TTL (default 3600 s, env
-    ``SPARK_GRAFT_SNAPSHOT_TTL``). Live readers clean their own
-    snapshots at process exit; the TTL only reaps processes that died
-    without atexit. A pinned DataFrame must therefore be consumed
-    within the TTL of a crash-restarted reader environment — the same
-    class of contract as checkpoint retention."""
-    import os
-    import shutil
-    import time as _t
-    if ttl_sec is None:
-        ttl_sec = float(os.environ.get("SPARK_GRAFT_SNAPSHOT_TTL",
-                                       "3600"))
-    root = os.path.join(corpus_path, _SNAP_DIR)
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    now = _t.time()
-    for e in entries:
-        p = os.path.join(root, e)
-        try:
-            if now - os.path.getmtime(p) > ttl_sec:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            continue
-
-
-def _relevant_listing(path: str, tries: int = 50) -> tuple[str, ...]:
-    """Two agreeing snapshots of the FOLD-RELEVANT entry set of a
-    corpus state dir: committed ``batch=`` dirs and ready markers
-    only. The high-watermark ``_applied_*`` files churn on every
-    append and other readers' ``.rsnap`` snapshot dirs churn on every
-    concurrent pinned read — neither affects which rows a read should
-    serve, so they are excluded instead of being allowed to starve
-    the agreement loop (the full-listing :func:`_stable_listing` is
-    retained for the unpinned path's narrower window)."""
-    import os
-    import time
-
-    def snap() -> tuple[str, ...]:
-        return tuple(sorted(
-            f for f in os.listdir(path)
-            if (f.startswith("batch=") and f[len("batch="):].isdigit())
-            or _parse_ready_marker(f) is not None))
-
-    prev = snap()
-    for _ in range(tries):
-        cur = snap()
-        if cur == prev:
-            return cur
-        prev = cur
-        time.sleep(0.002)
-    return prev
-
-
-def read_corpus_state(spark, corpus_path: str,
-                      with_lineage: bool = False,
-                      pin: bool = True, retries: int = 12) -> DataFrame:
-    """Read a :func:`corpus_extend_stream` corpus: the plain corpus
-    schema (``batch`` lineage partition column dropped), or with
-    ``with_lineage=True`` keep the admitting batch id per row.
-
-    **Pinned snapshot isolation (round 17, verdict #4).** Through
-    round 16 a reader losing the race to a fold's final rename
-    surfaced a RETRYABLE error (the documented contract — 38/163 and
-    43/300 reads in the r16 race stress), which pushed the same retry
-    loop into every caller. The default path now takes a HARDLINK
-    SNAPSHOT before handing Spark anything: the fold-relevant entries
-    are listed (:func:`_relevant_listing`), the post-fold view is
-    computed exactly as before (dirs outside every marker range, plus
-    each marker dir's rows as lineage ``batch=hi``), and every data
-    file is hardlinked into a fresh ``.rsnap/<uuid>/batch=<id>/``
-    layout under the state dir (dot-prefixed: invisible to Spark's
-    listings and to every writer-side prefix scan). Hardlinks pin the
-    INODES, so once the snapshot validates, no writer rename/removal
-    can ever invalidate the returned plan — the retryable-error class
-    is gone at the root, not retried around, and the result is ONE
-    partitioned parquet read instead of an N-way union. Space cost is
-    directory entries only (no data copy); folded-away originals are
-    freed when the snapshot is released (process exit via atexit, or
-    the TTL sweep in :func:`_sweep_reader_snapshots` for crashed
-    readers).
-
-    Validation closes the one unsound interleaving: if a fold ran to
-    COMPLETION mid-linking, pre-fold dirs already linked would
-    double-count with the folded ``batch=<hi>`` linked after. So after
-    linking, the relevant entry set is re-listed and the snapshot is
-    served only if nothing was REMOVED and nothing appeared beyond
-    fresh appends with ids above the planned maximum (batch ids are
-    monotonic and never reused, so set regression is impossible to
-    miss); otherwise the snapshot is discarded and the read retries
-    from the fresh listing — bounded by ``retries`` with jittered
-    backoff, with mid-link ``FileNotFoundError`` handled the same way.
-
-    Scale note: this is the local-filesystem analog of reading a
-    table snapshot through a manifest of immutable objects (Iceberg/
-    Delta); the linking cost is O(files) driver-side syscalls. On a
-    filesystem without hardlinks (EXDEV/EPERM/ENOTSUP) — or with
-    ``pin=False`` — the round-16 unpinned path is used, whose narrower
-    retryable-error contract is documented in
-    :func:`_read_corpus_state_unpinned`. Non-local paths (no
-    ``os.path.isdir``) go straight to the Spark reader."""
-    import errno
-    import os
-    import random
-    import shutil
-    import time
-    import uuid
-
-    if not os.path.isdir(corpus_path):
-        # let Spark surface its native missing-path error (and keep
-        # remote-filesystem paths on the Spark reader) instead of an
-        # os.listdir FileNotFoundError from the local fast path
-        df = spark.read.parquet(corpus_path)
-        return df if with_lineage else df.drop("batch")
-
-    if not pin:
-        return _read_corpus_state_unpinned(spark, corpus_path,
-                                           with_lineage)
-
-    _sweep_reader_snapshots(corpus_path)
-    last_err: Exception | None = None
-    for attempt in range(retries):
-        entries = _relevant_listing(corpus_path)
-        ranges = [r for r in (_parse_ready_marker(f) for f in entries)
-                  if r is not None]
-
-        def folded(i: int) -> bool:
-            return any(lo <= i <= hi for lo, hi in ranges)
-
-        plan: list[tuple[str, int]] = []   # (source entry, lineage id)
-        for f in entries:
-            rng = _parse_ready_marker(f)
-            if rng is not None:
-                plan.append((f, rng[1]))
-            else:
-                i = int(f[len("batch="):])
-                if not folded(i):
-                    plan.append((f, i))
-        if not plan:
-            # empty state: same native "unable to infer schema" /
-            # empty-read behavior as the plain parent read
-            df = spark.read.parquet(corpus_path)
-            return df if with_lineage else df.drop("batch")
-
-        snap = os.path.join(corpus_path, _SNAP_DIR, uuid.uuid4().hex)
-        try:
-            for src_entry, lid in plan:
-                src = os.path.join(corpus_path, src_entry)
-                dst = os.path.join(snap, f"batch={lid}")
-                os.makedirs(dst)
-                for fn in os.listdir(src):
-                    if fn.startswith((".", "_")):
-                        continue
-                    os.link(os.path.join(src, fn),
-                            os.path.join(dst, fn))
-        except FileNotFoundError as e:
-            shutil.rmtree(snap, ignore_errors=True)
-            last_err = e     # writer raced the linking: retry
-            time.sleep(random.uniform(0.005, 0.05))
-            continue
-        except OSError as e:
-            shutil.rmtree(snap, ignore_errors=True)
-            if e.errno in (errno.EXDEV, errno.EPERM, errno.ENOTSUP,
-                           errno.EOPNOTSUPP, errno.EACCES, errno.EMLINK):
-                # filesystem can't hardlink: permanent, not a race
-                return _read_corpus_state_unpinned(spark, corpus_path,
-                                                   with_lineage)
-            last_err = e
-            time.sleep(random.uniform(0.005, 0.05))
-            continue
-
-        after = _relevant_listing(corpus_path)
-        max_planned = max(lid for _, lid in plan)
-        added = set(after) - set(entries)
-        removed = set(entries) - set(after)
-        benign = not removed and all(
-            a.startswith("batch=") and a[len("batch="):].isdigit()
-            and int(a[len("batch="):]) > max_planned for a in added)
-        if not benign:
-            shutil.rmtree(snap, ignore_errors=True)
-            time.sleep(random.uniform(0.005, 0.05))
-            continue
-
-        if not _live_snapshots:
-            import atexit
-            atexit.register(_cleanup_snapshots)
-        _live_snapshots.append(snap)
-        df = spark.read.parquet(snap)   # partition discovery: batch=
-        return df if with_lineage else df.drop("batch")
-    raise last_err or RuntimeError(
-        f"read_corpus_state: could not obtain a stable snapshot of "
-        f"{corpus_path} in {retries} attempts (continuous fold churn)")
-
-
-def _read_corpus_state_unpinned(spark, corpus_path: str,
-                                with_lineage: bool = False) -> DataFrame:
-    """The round-16 direct read — :func:`read_corpus_state`'s fallback
-    for filesystems without hardlinks, and the explicit ``pin=False``
-    path for callers that must not pin inodes.
-
-    Fold-consistent (round 15, verdict #5): a reader overlapping an
-    in-flight compaction used to see a SILENT PARTIAL row set — after
-    the intent-marker commit the writer removes the folded
-    ``batch=<lo..hi>`` dirs one by one, and the combined data sits in
-    the dot-prefixed marker dir Spark's listing ignores, so a parent
-    read during the removal window returned the surviving dirs only.
-    The marker IS the committed post-fold state, so the reader now
-    lists the state dir first (two agreeing snapshots — see
-    :func:`_stable_listing`): when intent markers are present it
-    serves the post-fold view directly — batch dirs OUTSIDE every
-    marker's range plus each marker dir's rows (lineage ``batch=hi``,
-    exactly what the completed fold assigns) — and the possibly
-    half-removed folded dirs are never touched. No marker → no
-    removal can be in flight → the plain partitioned parent read.
-    Every interleaving therefore yields the pre-fold or post-fold row
-    set (identical as row SETS — folds preserve rows; only lineage
-    coarsens), never a partial; losing a race to the writer's final
-    rename surfaces as a retryable read error, never wrong rows.
-
-    Round 16 (from ADVICE): the no-marker fast path re-validates the
-    listing AFTER Spark builds its own file index. Between
-    :func:`_stable_listing` returning a marker-free view and
-    ``spark.read.parquet`` listing the parent itself, the writer can
-    commit a fold marker and start removing folded ``batch=`` dirs —
-    dirs gone before Spark's listing are omitted SILENTLY (only files
-    removed after the index is built error at scan time). So: build
-    the DataFrame (Spark's index is materialized eagerly for schema
-    inference), re-list, and serve it only if the entry set is
-    unchanged; otherwise discard and retry from the fresh listing,
-    which now carries the marker and takes the per-dir path. The
-    per-dir path has no silent window: it never touches dirs inside a
-    marker's range, and a dir removed under one of its reads raises."""
-    import os
-
-    if not os.path.isdir(corpus_path):
-        df = spark.read.parquet(corpus_path)
-        return df if with_lineage else df.drop("batch")
-
-    entries = _stable_listing(corpus_path)
-    for _ in range(10):
-        ranges = [r for r in (_parse_ready_marker(f) for f in entries)
-                  if r is not None]
-        if ranges:
-            break
-        df = spark.read.parquet(corpus_path)   # Spark lists here
-        after = _stable_listing(corpus_path)
-        if after == entries:
-            return df if with_lineage else df.drop("batch")
-        entries = after                        # fold raced us; retry
-    else:
-        ranges = [r for r in (_parse_ready_marker(f) for f in entries)
-                  if r is not None]
-
-    def folded(i: int) -> bool:
-        return any(lo <= i <= hi for lo, hi in ranges)
-
-    keep_ids = [int(f[len("batch="):]) for f in entries
-                if f.startswith("batch=") and f[len("batch="):].isdigit()
-                and not folded(int(f[len("batch="):]))]
-    parts = [spark.read.parquet(
-        os.path.join(corpus_path, f"batch={i}"))
-        .withColumn("batch", F.lit(i)) for i in keep_ids]
-    for f in entries:
-        rng = _parse_ready_marker(f)
-        if rng is not None:
-            parts.append(spark.read.parquet(
-                os.path.join(corpus_path, f))
-                .withColumn("batch", F.lit(rng[1])))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df if with_lineage else df.drop("batch")
-
-
-def _batch_dir_ids(path: str) -> set[int]:
-    """Committed batch ids of an append-layout state dir."""
-    import os
-    if not os.path.isdir(path):
-        return set()
-    return {int(f[len("batch="):]) for f in os.listdir(path)
-            if f.startswith("batch=") and f[len("batch="):].isdigit()}
-
-
-def _index_projection(docs_df: DataFrame, shingle_k: int) -> DataFrame:
-    """One row per doc: (doc_id, fp, shs, h0..h7) — fingerprint,
-    hashed shingle set, and UNEXPLODED minhash signature (NULL minima
-    for empty shingle sets, mirroring ``_mh_signatures``'s len>0
-    filter) in a single projection, so the stream's derived index is
-    ONE state append per batch instead of three."""
-    from ..contract.extensions import _MH_AB, _MH_P
-    from ..functions.text import (md5_hash64, normalize_text,
-                                  shingles_from_tokens, tokens)
-
-    hashed = F.transform(shingles_from_tokens(tokens(F.col("text")),
-                                              shingle_k),
-                         lambda s: md5_hash64(s, seed=0))
-    shs = F.array_distinct(hashed)
-    cols = [F.col("doc_id"),
-            md5_hash64(normalize_text(F.col("text")), seed=0).alias("fp"),
-            shs.alias("shs")]
-    def perm(a, b):
-        # unary lambda: a second parameter would bind the HOF's index
-        return lambda x: (F.lit(a) * (x % _MH_P) + F.lit(b)) % _MH_P
-
-    for i, (a, b) in enumerate(_MH_AB):
-        h = F.array_min(F.transform(shs, perm(a, b)))
-        cols.append(F.when(F.size(shs) > 0, h).alias(f"h{i}"))
-    return docs_df.select(*cols)
-
-
-def _bands_from_index(idx: DataFrame) -> DataFrame:
-    """Reconstruct the (doc_id, band, band_key) band index from the
-    combined ``__index`` state — a plan-side explode, no extra state:
-    value-identical to ``_mh_bands(_mh_signatures(sets))`` because the
-    stored minima use the same permutations and the NULL rows mirror
-    the len>0 filter."""
-    from ..contract.extensions import _N_MINHASH
-
-    return (idx.filter(F.col("h0").isNotNull())
-            .select("doc_id", F.explode(F.array(*[
-                F.struct(F.lit(i).alias("band"),
-                         F.col(f"h{i}").alias("band_key"))
-                for i in range(_N_MINHASH)])).alias("bk"))
-            .select("doc_id", "bk.band", "bk.band_key"))
-
-
-def _dir_parquet_rows(path: str) -> int:
-    """Row count of one parquet directory from file footers — driver-side
-    metadata reads, no Spark job (used by :func:`_reconcile_index`'s
-    compaction-ambiguity check, which must stay cheap)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    n = 0
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            n += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-    return n
-
-
-def _reconcile_index(spark, corpus_path: str, index_path: str,
-                     shingle_k: int) -> None:
-    """Restore ``<corpus>__index`` ↔ corpus batch-dir parity (round 13,
-    from ADVICE + verdict #5): a diverged cache — index dir wiped or
-    ``maintain_index`` enabled over a pre-existing corpus — could never
-    reconverge under append-only maintenance (the exact-id-set check
-    failed every batch forever, paying full corpus recompute PLUS index
-    maintenance). Since the corpus is the source of truth and each
-    index dir is a deterministic O(that batch) projection of its
-    committed corpus dir, parity is always reachable:
-
-    - index dirs with no corpus counterpart (external corpus deletion /
-      reset) are dropped — stale cache entries, never authoritative;
-    - missing index dirs are backfilled by running
-      :func:`_index_projection` over the corresponding committed corpus
-      ``batch=<bid>`` dir, committed under the same durable
-      tmp → fsync → rename discipline (dirs only; the high-watermark
-      marker is untouched — dir presence is authoritative and max()
-      is unchanged by backfilling older ids).
-
-    **Compaction-aware** (round 14, from ADVICE — this was a real
-    admission bug): when stale index dirs exist, the divergence is
-    ambiguous between an external reset and a crash BETWEEN the corpus
-    and index compactions of ``corpus_extend_stream``'s writer. In the
-    crash case the corpus ``batch=K`` dir holds ALL rows ≤ K while the
-    surviving pre-compaction index ``batch=K`` holds only batch K's
-    projection — dropping the stale dirs and trusting K by id would
-    pass the id-set parity check with an incomplete cache, permanently
-    admitting near-duplicates of every older corpus doc. The projection
-    is exactly one row per corpus row, so per-dir ROW COUNT equality is
-    a sufficient integrity check; counts come from parquet footers
-    (:func:`_dir_parquet_rows`, driver-side, no job), and mismatched
-    intersection dirs are re-projected from their corpus dirs. Repair
-    ORDER is load-bearing: suspects re-projected and missing dirs
-    backfilled FIRST, stale dirs dropped LAST — a crash anywhere
-    mid-reconcile then leaves the id sets unequal, so the next batch
-    re-enters reconcile instead of trusting a half-repaired cache.
-
-    Cost: one-time O(missing batches); enabling the index on an old
-    corpus pays one full-corpus projection ONCE instead of an unbounded
-    per-batch recompute. No-op at parity (two dir listings; the footer
-    check runs only on the already-diverged path)."""
-    import os
-    import shutil
-
-    # finish any crashed compaction first so the dir sets this function
-    # reasons about are post-heal (a committed .compact_ready_<K> means
-    # batch=<K> is about to exist with the folded contents)
-    _heal_compaction(corpus_path)
-    _heal_compaction(index_path)
-    corpus_ids = _batch_dir_ids(corpus_path)
-    index_ids = _batch_dir_ids(index_path)
-    if index_ids == corpus_ids:
-        return
-    os.makedirs(index_path, exist_ok=True)
-    stale = index_ids - corpus_ids
-    suspect: set[int] = set()
-    if stale:
-        for bid in index_ids & corpus_ids:
-            if _dir_parquet_rows(
-                    os.path.join(corpus_path, f"batch={bid}")) != \
-                    _dir_parquet_rows(
-                        os.path.join(index_path, f"batch={bid}")):
-                suspect.add(bid)
-    tmp = index_path + "__tmp"
-    for bid in sorted((corpus_ids - index_ids) | suspect):
-        src = os.path.join(corpus_path, f"batch={bid}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        _index_projection(spark.read.parquet(src), shingle_k) \
-            .write.mode("overwrite").parquet(tmp)
-        _fsync_tree(tmp)
-        dst = os.path.join(index_path, f"batch={bid}")
-        if bid in suspect:
-            # crash between rm and rename leaves bid MISSING (and the
-            # stale dirs below still present), so the next reconcile
-            # backfills it — never a trusted half-state
-            shutil.rmtree(dst, ignore_errors=True)
-        os.rename(tmp, dst)
-    for bid in sorted(stale):
-        shutil.rmtree(os.path.join(index_path, f"batch={bid}"),
-                      ignore_errors=True)
-    _fsync_dir(index_path)
-
-
-def _corpus_stream_apply(spark, corpus_path: str, batch_df: DataFrame,
-                         batch_id: int, kw: dict,
-                         maintain_index: bool = True) -> None:
-    """One micro-batch of :func:`corpus_extend_stream`: the corpus
-    append plus ONE derived index state (round 12 — the ADVICE fix made
-    per-batch I/O O(batch); this makes per-batch COMPUTE O(batch) too,
-    by never re-tokenizing, re-hashing, or re-signing the corpus):
-
-    - ``<corpus>__index``: per-batch (doc_id, fp, shs, h0..h7) dirs —
-      fingerprints (exact tier), hashed shingle sets (Jaccard verify),
-      and unexploded minhash signatures (band probe, exploded
-      plan-side by :func:`_bands_from_index` at read). With it, the
-      corpus TEXT column is never read per batch — corpus access
-      reduces to the pruned doc_id scan of the id-identity skip plus
-      this fixed-width state. A first cut maintained three separate
-      states; the corpus_stream stress measured their three append
-      jobs at ~1.5 s/batch of pure fixed overhead, so they were
-      consolidated into one projection/one append.
-
-    The state appends under the same :func:`_append_batch_with_marker`
-    protocol, and its build reads the COMMITTED corpus ``batch=<bid>``
-    dir, so a crash between the two appends re-derives
-    deterministically on redelivery — the corpus is the source of
-    truth, the index is a cache. The cache is consumed only while its
-    committed id set EXACTLY matches the corpus's (checked per batch);
-    a diverged cache (external deletion, a state added to a
-    pre-existing corpus, a mid-life reset) is RECONCILED up front each
-    batch by :func:`_reconcile_index` — stale entries dropped, missing
-    dirs backfilled from their committed corpus dirs — so divergence
-    costs one bounded catch-up, never a permanent recompute+maintain
-    double-pay (round 13; previously a wiped index could never
-    reconverge). Answers never depend on the cache either way."""
-    import os
-
-    from ..pipelines.corpus import extend_corpus, prepare_corpus
-
-    index_path = corpus_path + "__index"
-    shingle_k = kw.get("shingle_k", 3)
-    cleanups: list = []
-
-    if maintain_index and _batch_dir_ids(corpus_path):
-        _reconcile_index(spark, corpus_path, index_path, shingle_k)
-
-    def build(old):
-        if old is None:
-            res = prepare_corpus(batch_df, **kw)
-        else:
-            corpus_ids = _batch_dir_ids(corpus_path)
-            cs = cb = cf = None
-            if maintain_index and corpus_ids \
-                    and _batch_dir_ids(index_path) == corpus_ids:
-                idx = spark.read.parquet(index_path).drop("batch") \
-                    .persist()
-                idx.count()  # eager: cs/cb/cf consume idx from three
-                # concurrent AQE stages (see _mh_signatures, round 13)
-                cleanups.append(idx)
-                cs = idx.select("doc_id", "shs")
-                cb = _bands_from_index(idx)
-                cf = idx.select("fp")
-            res = extend_corpus(old, batch_df, corpus_sets=cs,
-                                corpus_bands=cb, corpus_fps=cf, **kw)
-        cleanups.append(res)
-        return res.docs
-
-    try:
-        _append_batch_with_marker(spark, corpus_path, batch_id, build)
-    finally:
-        for r in cleanups:
-            r.unpersist()
-
-    if maintain_index:
-        bdir = os.path.join(corpus_path, f"batch={batch_id}")
-        _append_batch_with_marker(
-            spark, index_path, batch_id,
-            lambda old: _index_projection(spark.read.parquet(bdir),
-                                          shingle_k))
-
-
-def corpus_extend_stream(docs: DataFrame, corpus_path: str,
-                         checkpoint: str, *,
-                         quality_min: float = 0.2,
-                         jaccard_min: float = 0.5,
-                         shingle_k: int = 3,
-                         split_weights: dict[str, float] | None = None,
-                         split_seed: int = 42,
-                         maintain_index: bool = True,
-                         compact_every: int | None = None):
-    """Continuous training-corpus ingestion: each micro-batch of raw
-    (doc_id, text, source, lang) docs is admitted through the FULL
-    batch pipeline — :func:`pipelines.corpus.prepare_corpus` for the
-    bootstrap batch, :func:`pipelines.corpus.extend_corpus` against the
-    persisted corpus for every later one — and admitted rows are
-    APPENDED as one ``batch=<bid>`` partition directory under the
-    crash-safe high-watermark append protocol
-    (:func:`_append_batch_with_marker`; round 12 — the round-11 swap
-    helper rewrote the whole corpus every micro-batch, quadratic
-    cumulative I/O for a state documented as "the corpus only grows";
-    per-batch I/O is now proportional to the batch). Read the state
-    back with :func:`read_corpus_state` (drops the ``batch`` lineage
-    partition column). With ``maintain_index`` (default), one DERIVED
-    index state (``<corpus>__index``: fingerprints + shingle sets +
-    minhash signatures in a single projection) is maintained per batch
-    under the same protocol and fed back through ``extend_corpus``'s
-    state-reuse hooks, making per-batch COMPUTE O(batch) as well — the
-    corpus text is never re-read, re-tokenized, or re-signed (see
-    :func:`_corpus_stream_apply` for the cache-vs-truth contract).
-    When to flip it OFF: the index trades reading |index| bytes for
-    recomputing over |text| bytes, so it wins when docs are large
-    (real corpora: KBs of text vs ~8 bytes per distinct shingle) and
-    is a measured wash-to-loss when |index| ≈ |text| (the short-doc
-    fixture regime — SCALING.md corpus_stream, ~1.4 s/batch flat
-    overhead vs a slowly rising recompute).
-    The streaming leg of
-    the corpus story: batches land forever, the corpus only grows, and
-    every admission decision is the SAME decision the batch pipeline
-    would make (corpus stability, id-identity replay skip, capped LSH
-    candidates — see the extend_corpus docstring).
-
-    Replay safety is two-layered: the watermark marker skips redelivered
-    batch ids outright, and even a forced full replay (wiped
-    checkpoint → ids restart at 0) admits zero rows because
-    ``extend_corpus`` of an already-admitted batch is a no-op —
-    pinned in tests.
-
-    Batching note (pinned by the batch-tier property tests): WHICH
-    member of a near-dup family survives depends on arrival order
-    (corpus stability keeps the first-arrived); the family count does
-    not.
-
-    ``compact_every`` (round 13; schedule replaced round 14, verdict
-    #2): when set and the committed dir count reaches the threshold,
-    the writer folds the newest SIZE-TIERED run of dirs via
-    :func:`tiered_compact_append_state` (and the derived index over
-    the same range). The r13 full-refold rewrote the ENTIRE corpus
-    every trigger — Σ rewrite I/O ≈ T²/(2N) rows over T batches, the
-    quadratic-cumulative class the r11 swap helper was retired for;
-    the tiered schedule rewrites each row O(log T) times total while
-    bounding the dir count at ~``compact_every`` + log₂(stream age)
-    (the minutes-cadence listing/small-file concern — measured
-    crossover in SCALING.md); a hard cap at ``2 × compact_every``
-    forces a fold when the size-ratio rule stalls on monotonically
-    shrinking batches (round 15, from ADVICE — see
-    :func:`tiered_compact_append_state`), and a single-writer footer
-    memo keeps the no-fold trigger cost at one new-dir footer read per
-    batch instead of O(total files). Runs between batches in the
-    single writer; see the compaction docstrings for the crash
-    protocol and the ad-hoc-reader caveat. Default off — daily-cadence
-    streams never need it."""
-    kw = dict(quality_min=quality_min, jaccard_min=jaccard_min,
-              shingle_k=shingle_k, split_weights=split_weights,
-              split_seed=split_seed)
-    corpus_sizes: dict[int, int] = {}  # single-writer footer memo
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _corpus_stream_apply(spark, corpus_path,
-                             batch_df, batch_id, kw,
-                             maintain_index=maintain_index)
-        if compact_every and len(_batch_dir_ids(corpus_path)) \
-                >= compact_every:
-            # ORDER is load-bearing (round 14, from ADVICE): corpus
-            # first. A crash between the two leaves a pre-compaction
-            # index batch=hi next to the folded corpus batch=hi;
-            # _reconcile_index detects it by per-dir row count and
-            # re-projects. Index-FIRST would be wrong the other way:
-            # the folded index batch=hi would hold projections of rows
-            # the corpus still stores in older dirs, and reconcile's
-            # backfill would then DUPLICATE them.
-            # force_fold_at = 2× the trigger (round 15, from ADVICE):
-            # bounds the dir count even when per-batch admissions
-            # shrink monotonically (dedup saturation) and the regular
-            # size-ratio rule would stall forever.
-            rng = tiered_compact_append_state(
-                spark, corpus_path,
-                force_fold_at=2 * compact_every,
-                sizes_cache=corpus_sizes)
-            if maintain_index and rng is not None:
-                compact_append_state(spark, corpus_path + "__index",
-                                     upto=rng[1], since=rng[0])
-
-    return (docs.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint).start())
-
-
-def sketch_rollup_stream(events: DataFrame, state_path: str,
-                         checkpoint: str, part_cols: list[str],
-                         value_cols: list[str],
-                         distinct_col: str | None = None,
-                         kll_k: int = 2048):
-    """Incremental sketch maintenance from a stream: each micro-batch is
-    sketched (``build_sketch_partitions``) and merged into the persisted
-    sketch partition table (``upsert_sketch_partitions``) — the streaming
-    entry point of the mergeable-sketch tier (operators/sketches.py).
-    Downstream percentile/distinct queries read ``state_path`` and merge
-    O(partitions) sketch rows; raw events are never rescanned.
-
-    Semantics under retries: ``foreachBatch`` is at-least-once, and the
-    merge is NOT idempotent (a replayed batch would double its rows into
-    n/sum and bias the sketches), so the highest applied batch id is
-    recorded as a single high-watermark marker file and replays
-    (batch_id <= watermark; ids from one checkpointed query are
-    monotonic) are skipped — the standard batch-id dedup for
-    non-idempotent foreachBatch sinks, O(1) marker files at any
-    query age. Single-writer per
-    ``state_path`` is assumed (same contract as any incremental model).
-
-    The swap is crash-safe with the interrupted-rename recovery protocol
-    of ``plans/models.py`` (state → ``__bak``, tmp → state; a crash
-    between the renames is healed by restoring ``__bak``), and the
-    batch-id markers live INSIDE the state directory (``_``-prefixed,
-    invisible to parquet readers) so marker and data commit in the same
-    rename — no crash window where the merge landed but its marker did
-    not.
-
-    State size: one row per partition tuple (a few KB each — see
-    SCALING.md "sketches" stress), so the whole state table stays
-    broadcast-tiny even at 100 TB/day input; the per-batch cost is one
-    map-side-combined groupBy of the batch plus a merge over the grain.
-    """
-    from ..operators.sketches import (build_sketch_partitions,
-                                      upsert_sketch_partitions)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def merge(old):
-            fresh = build_sketch_partitions(batch_df, part_cols,
-                                            value_cols,
-                                            distinct_col=distinct_col,
-                                            kll_k=kll_k)
-            if old is None:
-                return fresh
-            return upsert_sketch_partitions(old, fresh, part_cols,
-                                            value_cols, distinct_col)
-
-        _apply_batch_with_state_swap(batch_df.sparkSession, state_path,
-                                     batch_id, merge)
-
-    return (events.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint).start())

@@ -420,513 +420,6 @@ def test_extend_corpus_batching_changes_representative_not_count(spark):
     assert oneshot == {11}
 
 
-def test_corpus_extend_stream_admits_families_and_survives_replay(
-        spark, tmp_path):
-    """Streaming corpus ingestion (streaming/jobs.corpus_extend_stream):
-    two staged files stream through (maxFilesPerTrigger=1 — bootstrap
-    batch via prepare_corpus, second via extend_corpus), and the final
-    corpus must hold exactly one representative per near-dup family
-    regardless of how files mapped to batches. A forced full replay
-    (wiped checkpoint — batch ids restart at 0) must leave the corpus
-    byte-identical: the watermark (batch dirs + marker) skips
-    redelivered ids, and even without it extend_corpus re-admission is
-    a no-op. Exactly ONE marker file at the end (the high-watermark
-    contract), and — round 12 append layout — one ``batch=<bid>``
-    partition dir per applied batch, each row's lineage naming the
-    batch that admitted it."""
-    import os
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        corpus_extend_stream, read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    f1 = spark.createDataFrame([
-        (1, _words(60, "famaz"), "web", "en"),            # novel fam a
-        (2, _words(60, "fambz"), "web", "en"),            # novel fam b
-    ], schema)
-    f2 = spark.createDataFrame([
-        (3, _words(60, "fambz") + " fambztail extra", "web", "en"),  # dup b
-        (4, _words(70, "famcz"), "books", "en"),          # novel fam c
-        (5, "tiny", "web", "en"),                         # quality-gated
-    ], schema)
-    src = str(tmp_path / "src")
-    f1.coalesce(1).write.parquet(src)
-    f2.coalesce(1).write.mode("append").parquet(src)
-    corpus_path = str(tmp_path / "corpus")
-
-    def run(ckpt):
-        stream = (spark.readStream.schema(f1.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        q = corpus_extend_stream(stream, corpus_path, str(tmp_path / ckpt))
-        q.processAllAvailable()
-        q.stop()
-
-    run("ckpt1")
-    got = read_corpus_state(spark, corpus_path)
-    rows = {r["doc_id"]: r for r in got.collect()}
-    # one representative per family: a={1}, b={2 or 3}, c={4}; 5 gated
-    assert 1 in rows and 4 in rows and 5 not in rows
-    assert len({2, 3} & set(rows)) == 1
-    assert len(rows) == 3
-    # full contract columns incl. split survive the state round-trip
-    assert set(got.columns) == {"doc_id", "text", "source", "lang",
-                                "quality_score", "split"}
-    assert all(r["split"] in ("train", "val", "test")
-               for r in rows.values())
-    # append layout: one batch=<bid> dir per applied batch; lineage
-    # column names the admitting batch per row (bootstrap docs in 0)
-    lineage = {r["doc_id"]: r["batch"] for r in read_corpus_state(
-        spark, corpus_path, with_lineage=True).collect()}
-    batch_dirs = sorted(f for f in os.listdir(corpus_path)
-                        if f.startswith("batch="))
-    assert batch_dirs == ["batch=0", "batch=1"]
-    # docs 1 and 4 arrive in different files, so different batches
-    # (file->batch order is mtime-dependent; don't pin which is first)
-    assert {lineage[1], lineage[4]} == {0, 1}
-
-    # derived index state (round 12): per-batch dirs mirror the corpus
-    # exactly, and its contents ARE the relations extend_corpus would
-    # recompute (one row per corpus doc: fp + shingle set + signature)
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, _bands_from_index)
-    cids = _batch_dir_ids(corpus_path)
-    assert _batch_dir_ids(corpus_path + "__index") == cids
-    idx = spark.read.parquet(corpus_path + "__index")
-    assert sorted(r["doc_id"] for r in idx.collect()) == sorted(rows)
-    assert {"doc_id", "fp", "shs", "h0", "h7"} <= set(idx.columns)
-    assert _bands_from_index(idx).count() == 8 * len(rows)  # _N_MINHASH
-
-    before = sorted(map(tuple, got.collect()))
-    run("ckpt2")  # fresh checkpoint: every batch redelivered from id 0
-    after = sorted(map(tuple,
-                       read_corpus_state(spark, corpus_path).collect()))
-    assert after == before
-    markers = [f for f in os.listdir(corpus_path)
-               if f.startswith("_applied_")]
-    assert markers == ["_applied_1"]
-
-
-def test_corpus_extend_stream_compact_every_trigger(spark, tmp_path):
-    """corpus_extend_stream(compact_every=2): the writer-side trigger
-    (round 13) folds corpus AND index dirs whenever the committed dir
-    count reaches the threshold — admissions identical to the
-    uncompacted stream, dir count bounded, index parity (and therefore
-    the O(batch) cache path) preserved across compactions."""
-    import os
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, corpus_extend_stream, read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    files = [
-        [(1, _words(60, "gfa"), "web", "en")],
-        [(2, _words(60, "gfb"), "web", "en")],
-        [(3, _words(60, "gfa") + " drift tail", "web", "en"),   # dup of 1
-         (4, _words(70, "gfc"), "books", "en")],
-        [(5, _words(64, "gfd"), "web", "en")],
-    ]
-    src = str(tmp_path / "src")
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, schema).coalesce(1).write \
-            .mode("append" if i else "overwrite").parquet(src)
-    corpus_path = str(tmp_path / "corpus")
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = corpus_extend_stream(stream, corpus_path,
-                             str(tmp_path / "ckpt"), compact_every=2)
-    q.processAllAvailable()
-    q.stop()
-
-    admitted = sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus_path).collect())
-    # family {1,3}: exactly one survives (file->batch order is
-    # mtime-dependent, so don't pin which); 2/4/5 are novel
-    assert len({1, 3} & set(admitted)) == 1
-    assert {2, 4, 5} <= set(admitted) and len(admitted) == 4
-    # dir count bounded by the trigger (4 batches, threshold 2)
-    cids = _batch_dir_ids(corpus_path)
-    assert len(cids) <= 2
-    assert _batch_dir_ids(corpus_path + "__index") == cids  # parity
-    # the index still covers every admitted doc (cache usable)
-    idx_ids = sorted(r["doc_id"] for r in
-                     spark.read.parquet(corpus_path + "__index").collect())
-    assert idx_ids == admitted
-    # one high-watermark marker at the last batch id
-    markers = [f for f in os.listdir(corpus_path)
-               if f.startswith("_applied_")]
-    assert markers == ["_applied_3"]
-
-
-def test_corpus_stream_derived_state_crash_and_fallback(spark, tmp_path):
-    """_corpus_stream_apply (round 12): the derived shingle/band index
-    states are caches — a crash between the corpus append and the
-    derived appends heals on redelivery (re-derived from the committed
-    corpus batch dir), and a tampered/incomplete cache degrades to the
-    recompute path with IDENTICAL admissions, never wrong answers."""
-    import os
-    import shutil
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, _corpus_stream_apply, read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    kw = dict(quality_min=0.2, jaccard_min=0.5, shingle_k=3,
-              split_weights=None, split_seed=42)
-    corpus = str(tmp_path / "c")
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema)
-
-    b0 = batch([(1, _words(60, "fama"), "web", "en"),
-                (2, _words(60, "famb"), "web", "en")])
-    b1 = batch([(3, _words(60, "famb") + " drift tail", "web", "en"),
-                (4, _words(70, "famc"), "books", "en")])
-    b2 = batch([(5, _words(64, "famd"), "web", "en")])
-
-    _corpus_stream_apply(spark, corpus, b0, 0, kw)
-    # crash AFTER the corpus append of batch 1, BEFORE the index
-    # append: simulate by wiping the index dir for batch 1 after a
-    # full apply, then redelivering batch 1
-    _corpus_stream_apply(spark, corpus, b1, 1, kw)
-    shutil.rmtree(os.path.join(corpus + "__index", "batch=1"))
-    assert _batch_dir_ids(corpus + "__index") == {0}
-    _corpus_stream_apply(spark, corpus, b1, 1, kw)  # redelivery heals
-    assert _batch_dir_ids(corpus + "__index") == {0, 1}
-    admitted = sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus).collect())
-    assert admitted == [1, 2, 4]  # 3 is a near-dup of corpus doc 2
-
-    # tampered cache: delete the index state entirely; batch 2 must
-    # still admit correctly, and (round 13) the reconcile BACKFILLS the
-    # wiped dirs from the committed corpus dirs — the cache reconverges
-    # to full parity instead of staying permanently incomplete
-    shutil.rmtree(corpus + "__index")
-    _corpus_stream_apply(spark, corpus, b2, 2, kw)
-    admitted = sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus).collect())
-    assert admitted == [1, 2, 4, 5]
-    assert _batch_dir_ids(corpus + "__index") == {0, 1, 2}  # reconverged
-
-
-def test_reconcile_index_backfills_and_drops_stale(spark, tmp_path):
-    """_reconcile_index (round 13): a diverged __index cache reconverges
-    — missing batch dirs are backfilled from the committed corpus dirs
-    (value-identical to the dirs the stream would have written), stale
-    extra dirs are dropped, parity is a no-op, and a mid-life
-    maintain_index enable pays one bounded catch-up instead of a
-    permanent recompute+maintain double-pay."""
-    import os
-    import shutil
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, _corpus_stream_apply, _reconcile_index,
-        read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    kw = dict(quality_min=0.2, jaccard_min=0.5, shingle_k=3,
-              split_weights=None, split_seed=42)
-    corpus = str(tmp_path / "c")
-    idx = corpus + "__index"
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema)
-
-    # build batches 0..2 WITHOUT index maintenance (pre-existing corpus)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(1, _words(60, "ra"), "web", "en")]), 0, kw,
-        maintain_index=False)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(2, _words(60, "rb"), "web", "en")]), 1, kw,
-        maintain_index=False)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(3, _words(60, "rc"), "web", "en")]), 2, kw,
-        maintain_index=False)
-    assert not os.path.isdir(idx)
-
-    # enabling the index mid-life: the next apply backfills 0..2 and
-    # appends 3 — full parity after ONE batch, and the cache content
-    # for backfilled dirs matches a from-scratch projection
-    _corpus_stream_apply(spark, corpus, batch(
-        [(4, _words(60, "rd"), "web", "en")]), 3, kw)
-    assert _batch_dir_ids(idx) == {0, 1, 2, 3}
-    got = sorted(r["doc_id"] for r in
-                 spark.read.parquet(idx).collect())
-    assert got == [1, 2, 3, 4]
-
-    # stale extra dir (corpus reset beneath the cache): dropped
-    shutil.rmtree(os.path.join(corpus, "batch=3"))
-    os.remove(os.path.join(corpus, "_applied_3"))
-    open(os.path.join(corpus, "_applied_2"), "w").close()
-    _reconcile_index(spark, corpus, idx, 3)
-    assert _batch_dir_ids(idx) == {0, 1, 2}
-
-    # parity: reconcile is a pure no-op (mtimes untouched)
-    before = {f: os.path.getmtime(os.path.join(idx, f))
-              for f in os.listdir(idx)}
-    _reconcile_index(spark, corpus, idx, 3)
-    after = {f: os.path.getmtime(os.path.join(idx, f))
-             for f in os.listdir(idx)}
-    assert after == before
-
-    # admissions still correct end-to-end after all the churn
-    admitted = sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus).collect())
-    assert admitted == [1, 2, 3]
-
-
-def test_corpus_stream_compaction_keeps_decisions_and_cache(spark,
-                                                            tmp_path):
-    """Compacting the corpus AND its __index to the same K (round 13)
-    preserves admissions bit-for-bit, keeps the id-set parity the cache
-    check needs, and bounds the dir count — the long-lived-stream
-    maintenance path."""
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, _corpus_stream_apply, compact_append_state,
-        read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    kw = dict(quality_min=0.2, jaccard_min=0.5, shingle_k=3,
-              split_weights=None, split_seed=42)
-    corpus = str(tmp_path / "c")
-    idx = corpus + "__index"
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema)
-
-    _corpus_stream_apply(spark, corpus, batch(
-        [(1, _words(60, "ca"), "web", "en"),
-         (2, _words(60, "cb"), "web", "en")]), 0, kw)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(3, _words(60, "cc"), "web", "en")]), 1, kw)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(4, _words(60, "cb") + " drift tail", "web", "en")]), 2, kw)
-    assert sorted(r["doc_id"] for r in
-                  read_corpus_state(spark, corpus).collect()) == [1, 2, 3]
-
-    k = compact_append_state(spark, corpus)
-    assert k == 2 and _batch_dir_ids(corpus) == {2}
-    compact_append_state(spark, idx, upto=k)
-    assert _batch_dir_ids(idx) == {2}  # parity preserved -> cache usable
-
-    # next batch: near-dup of compacted doc 3 dropped, novel admitted —
-    # the compacted corpus + index drive the SAME decisions
-    _corpus_stream_apply(spark, corpus, batch(
-        [(5, _words(60, "cc") + " tiny drift", "web", "en"),
-         (6, _words(70, "cd"), "books", "en")]), 3, kw)
-    assert sorted(r["doc_id"] for r in
-                  read_corpus_state(spark, corpus).collect()) == [1, 2, 3, 6]
-    assert _batch_dir_ids(corpus) == {2, 3}
-    assert _batch_dir_ids(idx) == {2, 3}
-    idx_ids = sorted(r["doc_id"] for r in
-                     spark.read.parquet(idx).collect())
-    assert idx_ids == [1, 2, 3, 6]
-
-
-def test_tiered_compact_plan_bounds_rewrite_io():
-    """Round-14 verdict #2: the size-tiered fold policy keeps total
-    rewrite I/O O(T log T) rows over T equal-sized batches — vs the
-    full-refold schedule's quadratic Σ ≈ T²/(2N) — while bounding live
-    dir count at ~threshold + log2(T). Pure simulation of the actual
-    policy function, no filesystem."""
-    import math
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        tiered_compact_plan)
-
-    threshold = 8
-    T = 512
-    dirs: list[tuple[int, int]] = []   # (batch_id, rows)
-    rewritten = 0
-    max_live = 0
-    for b in range(T):
-        dirs.append((b, 1))
-        if len(dirs) >= threshold:
-            rng = tiered_compact_plan(dirs)
-            if rng is not None:
-                lo, hi = rng
-                folded = [(i, n) for i, n in dirs if lo <= i <= hi]
-                rows = sum(n for _, n in folded)
-                rewritten += rows
-                dirs = [(i, n) for i, n in dirs if not lo <= i <= hi]
-                dirs.append((hi, rows))
-                dirs.sort()
-        max_live = max(max_live, len(dirs))
-    total_rows = T
-    # the r13 full-refold schedule, simulated at the same threshold:
-    # every trigger rewrites the ENTIRE corpus accumulated so far
-    full_refold_io, live = 0, 0
-    for b in range(T):
-        live += 1
-        if live >= threshold:
-            full_refold_io += b + 1  # whole corpus so far
-            live = 1
-    assert sum(n for _, n in dirs) == total_rows  # no loss/dup
-    assert rewritten <= 3 * total_rows * math.log2(T)  # O(T log T)
-    assert rewritten < full_refold_io / 2              # beats quadratic
-    assert max_live <= threshold + math.log2(T) + 1    # bounded dirs
-    # each-row-rewritten-at-most-log-times is the amortized claim;
-    # the policy invariant behind it: a fold's oldest dir is never
-    # larger than the sum of everything newer in the run
-    assert tiered_compact_plan([(0, 100), (1, 1), (2, 1)]) == (1, 2)
-    assert tiered_compact_plan([(0, 100), (1, 1)]) is None  # run of 1
-    assert tiered_compact_plan([(5, 3)]) is None            # single dir
-
-
-def test_range_compaction_and_crashed_range_marker_heal(spark, tmp_path):
-    """compact_append_state(since=, upto=) folds a middle/suffix range
-    into batch=<hi>, leaving older dirs untouched; a crash right after
-    the range intent-marker rename heals exactly that range (and a
-    legacy prefix marker still heals too)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _batch_dir_ids, compact_append_state,
-        read_corpus_state)
-
-    state = str(tmp_path / "s")
-    for b in range(5):
-        _append_batch_with_marker(
-            spark, state, b,
-            lambda old, b=b: spark.range(b + 1)
-            .select(F.lit(b).alias("src"), F.col("id")))
-
-    # range fold [2..4]: dirs 0,1 untouched, rows preserved
-    k = compact_append_state(spark, state, upto=4, since=2)
-    assert k == 4
-    assert _batch_dir_ids(state) == {0, 1, 4}
-    rows = sorted((r["src"], r["id"]) for r in
-                  read_corpus_state(spark, state).collect())
-    assert len(rows) == 1 + 2 + 3 + 4 + 5
-
-    # crash after the range-marker commit: simulate by hand-writing a
-    # ready dir for [0..1], then let the next append heal it
-    combined = (spark.read.parquet(state)
-                .filter(F.col("batch") <= 1).drop("batch"))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, ".compact_ready_0-1"))
-    _append_batch_with_marker(
-        spark, state, 5,
-        lambda old: spark.range(6).select(F.lit(5).alias("src"),
-                                          F.col("id")))
-    assert _batch_dir_ids(state) == {1, 4, 5}
-    rows2 = sorted((r["src"], r["id"]) for r in
-                   read_corpus_state(spark, state).collect())
-    assert len(rows2) == len(rows) + 6
-    assert not any(f.startswith(".compact_ready_")
-                   for f in os.listdir(state))
-
-
-def test_reconcile_heals_crash_between_corpus_and_index_compaction(
-        spark, tmp_path):
-    """Round-14 ADVICE (high): a crash BETWEEN the corpus and index
-    compactions of the compact_every trigger. The corpus folds into
-    batch=K (all rows <= K) while the pre-compaction index batch=K —
-    holding only batch K's projection — survives; the old reconcile
-    dropped the stale index dirs < K, the id-set parity check then
-    PASSED, and the incomplete cache drove extend_corpus, permanently
-    admitting near-duplicates of older corpus docs. Reconcile now
-    row-count-verifies surviving intersection dirs and re-projects
-    mismatches from their corpus dirs."""
-    import os
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, _corpus_stream_apply, compact_append_state,
-        read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    kw = dict(quality_min=0.2, jaccard_min=0.5, shingle_k=3,
-              split_weights=None, split_seed=42)
-    corpus = str(tmp_path / "c")
-    idx = corpus + "__index"
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema)
-
-    _corpus_stream_apply(spark, corpus, batch(
-        [(1, _words(60, "xa"), "web", "en")]), 0, kw)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(2, _words(60, "xb"), "web", "en")]), 1, kw)
-    _corpus_stream_apply(spark, corpus, batch(
-        [(3, _words(60, "xc"), "web", "en")]), 2, kw)
-
-    # simulated crash: corpus compaction commits, index compaction never
-    # runs — exactly the write_batch window
-    k = compact_append_state(spark, corpus)
-    assert k == 2 and _batch_dir_ids(corpus) == {2}
-    assert _batch_dir_ids(idx) == {0, 1, 2}  # diverged, K in both
-
-    # next batch: doc 5 is a near-dup of doc 1 (admitted in batch 0,
-    # now folded into corpus batch=2); doc 6 is novel. The ADVICE repro
-    # had doc 5 admitted here.
-    _corpus_stream_apply(spark, corpus, batch(
-        [(5, _words(60, "xa") + " tiny drift", "web", "en"),
-         (6, _words(70, "xd"), "books", "en")]), 3, kw)
-    admitted = sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus).collect())
-    assert admitted == [1, 2, 3, 6]  # 5 dropped — cache was re-projected
-
-    # parity restored with FULL content: index rows == corpus rows
-    assert _batch_dir_ids(idx) == _batch_dir_ids(corpus) == {2, 3}
-    idx_ids = sorted(r["doc_id"] for r in
-                     spark.read.parquet(idx).collect())
-    assert idx_ids == [1, 2, 3, 6]
-    assert not os.path.exists(idx + "__tmp")
-
-
-def test_corpus_compaction_crash_storm_matches_batch(spark, tmp_path):
-    """Round-14 ADVICE follow-through: interleave batch applies with
-    crash-interrupted compactions (corpus folded, index not — the
-    write_batch crash window) plus one completed pair, and assert the
-    final admissions are IDENTICAL to an uncompacted reference run of
-    the same batch sequence — compaction crashes may coarsen lineage
-    and cost a bounded re-projection, never change a decision."""
-    from data_engineering_projects_spark.streaming.jobs import (
-        _corpus_stream_apply, compact_append_state, read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    kw = dict(quality_min=0.2, jaccard_min=0.5, shingle_k=3,
-              split_weights=None, split_seed=42)
-
-    # near-dups of EARLIER batches' docs land after each crash window
-    batches = [
-        [(1, _words(60, "sa"), "web", "en"),
-         (2, _words(60, "sb"), "web", "en")],
-        [(3, _words(60, "sc"), "web", "en")],
-        [(4, _words(60, "sa") + " drift one", "web", "en"),   # ~doc 1
-         (5, _words(70, "sd"), "books", "en")],
-        [(6, _words(60, "sb") + " drift two", "web", "en"),   # ~doc 2
-         (7, _words(60, "se"), "web", "en")],
-        [(8, _words(60, "sc") + " drift three", "web", "en"),  # ~doc 3
-         (9, _words(70, "sf"), "web", "en")],
-    ]
-
-    def run(root, crash_after: set[int], full_after: set[int]):
-        corpus = str(root)
-        for bid, rows in enumerate(batches):
-            _corpus_stream_apply(
-                spark, corpus, spark.createDataFrame(rows, schema),
-                bid, kw)
-            if bid in crash_after:  # corpus folds, index never does
-                compact_append_state(spark, corpus)
-            elif bid in full_after:  # the healthy pair
-                k = compact_append_state(spark, corpus)
-                if k is not None:
-                    compact_append_state(spark, corpus + "__index",
-                                         upto=k)
-        return sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus).collect())
-
-    ref = run(tmp_path / "ref", set(), set())
-    stormed = run(tmp_path / "storm", {1, 3}, {4})
-    assert stormed == ref
-
-
 def test_extend_corpus_accepts_precomputed_corpus_sets(spark):
     """The corpus_sets state-reuse hook (round 12): passing the exact
     (doc_id, shs) relation _shingle_sets would compute over the corpus
@@ -956,7 +449,7 @@ def test_extend_corpus_accepts_precomputed_corpus_sets(spark):
     base = decisions()
     reused = decisions(corpus_sets=_shingle_sets(corpus, 3))
     assert reused == base
-    # all three state hooks together (the full O(batch) stream shape)
+    # all three state hooks together (corpus_extend_admissions' shape)
     from data_engineering_projects_spark.contract.extensions import (
         _mh_bands, _mh_signatures)
     from data_engineering_projects_spark.functions.text import (
@@ -972,789 +465,6 @@ def test_extend_corpus_accepts_precomputed_corpus_sets(spark):
     # and the decisions themselves are the planted expectations:
     # 10 is a near-dup of corpus doc 3 (dropped), 11 is admitted
     assert base[1] == [11]
-
-
-def test_index_projection_matches_componentwise_relations(spark):
-    """The combined __index state must be value-identical to the three
-    relations extend_corpus's hooks expect: shs == _shingle_sets, the
-    reconstructed bands == _mh_bands(_mh_signatures(sets)), fp == the
-    exact-tier fingerprint — including an empty-text doc (NULL minima,
-    excluded from bands exactly like the len>0 signature filter)."""
-    from data_engineering_projects_spark.contract.extensions import (
-        _mh_bands, _mh_signatures)
-    from data_engineering_projects_spark.functions.text import (
-        md5_hash64, normalize_text)
-    from data_engineering_projects_spark.pipelines.corpus import (
-        _shingle_sets)
-    from data_engineering_projects_spark.streaming.jobs import (
-        _bands_from_index, _index_projection)
-
-    docs = spark.createDataFrame(
-        [(1, _words(40, "p"), "web", "en"),
-         (2, _words(5, "q") , "web", "en"),
-         (3, "", "web", "en")],  # empty: no shingles, NULL minima
-        "doc_id long, text string, source string, lang string")
-    idx = _index_projection(docs, 3)
-
-    sets = {r["doc_id"]: sorted(r["shs"]) for r in
-            _shingle_sets(docs, 3).collect()}
-    got_sets = {r["doc_id"]: sorted(r["shs"]) for r in idx.collect()}
-    assert got_sets == sets
-
-    want_bands = sorted(map(tuple, _mh_bands(_mh_signatures(
-        _shingle_sets(docs, 3))).collect()))
-    got_bands = sorted(map(tuple, _bands_from_index(idx).collect()))
-    assert got_bands == want_bands and len(got_bands) == 2 * 8
-
-    want_fp = {r["doc_id"]: r["fp"] for r in docs.select(
-        "doc_id", md5_hash64(normalize_text(F.col("text")), seed=0)
-        .alias("fp")).collect()}
-    assert {r["doc_id"]: r["fp"] for r in idx.collect()} == want_fp
-
-
-def test_append_state_random_crash_sequences(spark, tmp_path):
-    """Property-style crash storm for _append_batch_with_marker: drive
-    batches 0..N-1 where each batch is preceded by a DETERMINISTIC
-    pseudo-random crash artifact (stale tmp, lost markers, marker
-    debris, duplicate redelivery), and assert the final state holds
-    exactly one row per batch regardless — the rename-is-commit
-    protocol's invariant. Uses a seeded schedule, not Hypothesis, so a
-    failure replays exactly."""
-    import os
-    import random
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, read_corpus_state)
-
-    state = str(tmp_path / "storm")
-    rng = random.Random(1234)
-    N = 8
-
-    def apply(bid):
-        _append_batch_with_marker(
-            spark, state, bid,
-            lambda old: spark.range(1).select(F.lit(bid).alias("applied")))
-
-    for b in range(N):
-        if b > 0:
-            art = rng.choice(["tmp", "markers", "debris", "replay", "none"])
-            if art == "tmp":  # crash before rename left a stale tmp
-                shutil.copytree(os.path.join(state, f"batch={b-1}"),
-                                state + "__tmp")
-            elif art == "markers":  # crash after rename lost the marker
-                for f in os.listdir(state):
-                    if f.startswith("_applied_"):
-                        os.remove(os.path.join(state, f))
-            elif art == "debris":
-                open(os.path.join(state, "_applied_"), "w").close()
-                open(os.path.join(state, f"_applied_{b-1}.tmp"),
-                     "w").close()
-            elif art == "replay":
-                apply(rng.randrange(b))  # redeliver an old batch id
-        apply(b)
-
-    rows = sorted(r["applied"] for r in
-                  read_corpus_state(spark, state).collect())
-    assert rows == list(range(N))
-    markers = [f for f in os.listdir(state)
-               if f.startswith("_applied_") and
-               f[len("_applied_"):].isdigit()]
-    assert markers == [f"_applied_{N-1}"]
-
-
-def test_append_state_crash_storm_with_compaction(spark, tmp_path):
-    """The round-13 extension of the crash storm: COMPACTIONS (complete
-    and crash-interrupted at each protocol step) interleave with the
-    batch appends and crash artifacts, and the one-row-per-batch
-    invariant plus the single-watermark invariant must still hold —
-    compaction may coarsen lineage, never lose or duplicate rows.
-    Seeded schedule, exact replay on failure."""
-    import os
-    import random
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _batch_dir_ids, compact_append_state,
-        read_corpus_state, tiered_compact_append_state)
-
-    state = str(tmp_path / "storm2")
-    rng = random.Random(20260815)
-    N = 10
-
-    def apply(bid):
-        _append_batch_with_marker(
-            spark, state, bid,
-            lambda old: spark.range(1).select(F.lit(bid).alias("applied")))
-
-    def interrupted_compaction(k_hint):
-        """Run compaction steps by hand up to a crash point chosen by
-        the rng: after the intent rename (commit), or mid-removal.
-        Round 14: half the crashes use the RANGE marker format (a
-        crashed tiered fold), half the legacy prefix format."""
-        ids = sorted(_batch_dir_ids(state))
-        todo = [i for i in ids if i <= k_hint]
-        if len(todo) < 2:
-            return
-        as_range = rng.random() < 0.5
-        if as_range and len(todo) > 2:
-            todo = todo[rng.randrange(len(todo) - 1):]
-        lo, k = todo[0], todo[-1]
-        combined = (spark.read.parquet(state)
-                    .filter((F.col("batch") >= (lo if as_range else -1))
-                            & (F.col("batch") <= k)).drop("batch"))
-        tmp = state + "__compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        combined.write.mode("overwrite").parquet(tmp)
-        marker = (f".compact_ready_{lo}-{k}" if as_range
-                  else f".compact_ready_{k}")
-        os.rename(tmp, os.path.join(state, marker))
-        if rng.random() < 0.5:  # crash mid-removal
-            for i in todo[: rng.randrange(len(todo))]:
-                shutil.rmtree(os.path.join(state, f"batch={i}"),
-                              ignore_errors=True)
-        # else: crash right after the commit rename (no removals)
-
-    # round 15: the forced-fold + sizes_cache path joins the storm.
-    # One long-lived cache dict crosses every crash artifact AND other
-    # maintenance calls that bypass it (outside the single-owner
-    # contract, deliberately): sizes only steer the fold SCHEDULE —
-    # the fold itself re-reads real dirs — so even a stale cache must
-    # never surface as lost/duplicated rows below, and heals still
-    # invalidate it wholesale
-    storm_cache: dict[int, int] = {}
-    for b in range(N):
-        if b > 0:
-            art = rng.choice(["tmp", "markers", "debris", "replay",
-                              "compact_ok", "compact_crash",
-                              "tiered_ok", "tiered_forced", "none"])
-            if art == "tmp":
-                shutil.copytree(os.path.join(state, f"batch={b-1}"),
-                                state + "__tmp",
-                                dirs_exist_ok=True)
-            elif art == "markers":
-                for f in os.listdir(state):
-                    if f.startswith("_applied_"):
-                        os.remove(os.path.join(state, f))
-            elif art == "debris":
-                open(os.path.join(state, "_applied_"), "w").close()
-            elif art == "replay":
-                apply(rng.randrange(b))
-            elif art == "compact_ok":
-                compact_append_state(spark, state,
-                                     upto=rng.randrange(b))
-            elif art == "compact_crash":
-                interrupted_compaction(rng.randrange(b))
-            elif art == "tiered_ok":
-                tiered_compact_append_state(spark, state)
-            elif art == "tiered_forced":
-                tiered_compact_append_state(spark, state,
-                                            force_fold_at=2,
-                                            sizes_cache=storm_cache)
-        apply(b)
-
-    rows = sorted(r["applied"] for r in
-                  read_corpus_state(spark, state).collect())
-    assert rows == list(range(N))
-    markers = [f for f in os.listdir(state)
-               if f.startswith("_applied_") and
-               f[len("_applied_"):].isdigit()]
-    assert markers == [f"_applied_{N-1}"]
-    assert not any(f.startswith(".compact_ready_")
-                   for f in os.listdir(state))  # all healed
-
-
-def test_tiered_compact_forced_fold_bounds_shrinking_stall():
-    """Round-15 ADVICE (medium): monotonically shrinking per-batch
-    sizes — the typical profile as a dedup corpus saturates — stall the
-    slack-1.0 size-ratio rule forever (the second-newest dir is always
-    bigger than the newest), so dir count grew without bound despite
-    compact_every. The forced fold at a hard cap (2× the trigger)
-    bounds the live dir count regardless of the size profile; rows are
-    never lost or duplicated; and in the GENTLY-shrinking regime the
-    slack-2.0 forced plan sweeps the whole small tail in one fold
-    instead of nibbling pairs."""
-    import math
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        tiered_compact_plan)
-
-    # the stall itself: strictly shrinking sizes -> regular rule None
-    shrink = [(i, 100 - 10 * i) for i in range(6)]
-    assert tiered_compact_plan(shrink) is None
-    # forced: always folds >= 2 dirs whenever 2+ exist
-    rng = tiered_compact_plan(shrink, min_run=2, slack=2.0, force=True)
-    assert rng is not None and rng[1] == 5
-    # gently-shrinking tail after a big bootstrap: slack-2.0 sweeps the
-    # whole tail, excluding the dominant old dir
-    rng = tiered_compact_plan(
-        [(0, 1000), (1, 10), (2, 9), (3, 8), (4, 7)],
-        min_run=2, slack=2.0, force=True)
-    assert rng == (1, 4)
-
-    # end-to-end simulation at the corpus_extend_stream trigger shape:
-    # batch b admits 2000-4b rows — STRICTLY shrinking forever (the
-    # saturation profile), so the regular rule never fires on raw
-    # batches; trigger at compact_every=8, hard cap 16
-    threshold, cap, T = 8, 16, 256
-    size = lambda b: 2000 - 4 * b  # noqa: E731
-    dirs: list[tuple[int, int]] = []
-    max_live, forced_fires = 0, 0
-    for b in range(T):
-        dirs.append((b, size(b)))
-        if len(dirs) >= threshold:
-            rng = tiered_compact_plan(dirs)
-            if rng is None and len(dirs) >= cap:
-                rng = tiered_compact_plan(dirs, min_run=2, slack=2.0,
-                                          force=True)
-                forced_fires += 1
-            if rng is not None:
-                lo, hi = rng
-                rows = sum(n for i, n in dirs if lo <= i <= hi)
-                dirs = [(i, n) for i, n in dirs if not lo <= i <= hi]
-                dirs.append((hi, rows))
-                dirs.sort()
-        max_live = max(max_live, len(dirs))
-    total = sum(size(b) for b in range(T))
-    assert sum(n for _, n in dirs) == total      # no loss/dup
-    assert forced_fires > 0                      # the stall regime hit
-    assert max_live <= cap                       # the cap HELD
-    # without the forced path, the same schedule grows unbounded
-    dirs2: list[tuple[int, int]] = []
-    for b in range(T):
-        dirs2.append((b, size(b)))
-        if len(dirs2) >= threshold:
-            rng = tiered_compact_plan(dirs2)
-            if rng is not None:
-                lo, hi = rng
-                rows = sum(n for i, n in dirs2 if lo <= i <= hi)
-                dirs2 = [(i, n) for i, n in dirs2 if not lo <= i <= hi]
-                dirs2.append((hi, rows))
-                dirs2.sort()
-    assert len(dirs2) > cap + math.log2(T)       # the pre-fix stall
-
-
-def test_tiered_compact_append_state_force_and_cache(spark, tmp_path):
-    """Filesystem leg of the round-15 ADVICE fix: shrinking per-batch
-    appends stall the regular rule; `force_fold_at` folds anyway and
-    bounds the dir count; the single-writer `sizes_cache` keeps exact
-    row counts across folds (evicted ranges re-scanned) and is
-    invalidated wholesale when a crash-interrupted fold is healed."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _batch_dir_ids, _dir_parquet_rows,
-        read_corpus_state, tiered_compact_append_state)
-
-    state = str(tmp_path / "shrink")
-    cache: dict[int, int] = {}
-
-    def apply(bid, nrows):
-        _append_batch_with_marker(
-            spark, state, bid,
-            lambda old: spark.range(nrows).select(
-                (F.lit(bid) * 1000 + F.col("id")).alias("k")))
-
-    total = 0
-    for b in range(12):
-        n = max(1, 32 >> b)  # 32,16,8,4,2,1,1,...
-        apply(b, n)
-        total += n
-        if len(_batch_dir_ids(state)) >= 4:
-            tiered_compact_append_state(spark, state, force_fold_at=8,
-                                        sizes_cache=cache)
-        assert len(_batch_dir_ids(state)) <= 8  # hard cap holds
-    # cache never holds a stale or phantom entry: every cached id is a
-    # live dir and its count matches the footers (a just-folded combined
-    # dir is absent until the next scan — evicted, not guessed)
-    ids = _batch_dir_ids(state)
-    assert set(cache) <= ids
-    for bid in cache:
-        assert cache[bid] == _dir_parquet_rows(
-            os.path.join(state, f"batch={bid}"))
-    rows = sorted(r["k"] for r in
-                  read_corpus_state(spark, state).collect())
-    assert len(rows) == total and len(set(rows)) == total
-
-    # crash-interrupted fold: commit a range marker by hand, then the
-    # next maintenance call must heal it AND drop the (now stale) cache
-    ids = sorted(_batch_dir_ids(state))
-    lo, hi = ids[-2], ids[-1]
-    combined = (spark.read.parquet(state)
-                .filter((F.col("batch") >= lo) & (F.col("batch") <= hi))
-                .drop("batch"))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, f".compact_ready_{lo}-{hi}"))
-    tiered_compact_append_state(spark, state, force_fold_at=8,
-                                sizes_cache=cache)
-    ids = _batch_dir_ids(state)
-    assert lo not in ids                 # healed
-    for bid in set(cache):
-        assert cache[bid] == _dir_parquet_rows(
-            os.path.join(state, f"batch={bid}"))
-    rows = sorted(r["k"] for r in
-                  read_corpus_state(spark, state).collect())
-    assert len(rows) == total and len(set(rows)) == total
-
-
-def test_corpus_extend_stream_forced_fold_under_saturation(spark,
-                                                           tmp_path):
-    """Round-15 ADVICE (medium), wired end-to-end through the public
-    API: a stream whose per-batch admissions SHRINK monotonically
-    (saturation) stalls the regular size-ratio rule — every batch dir
-    is smaller than the one before, so no newest-anchored run ever
-    qualifies — and before the forced cap the dir count grew without
-    bound despite compact_every. With compact_every=3 (cap 6), eight
-    strictly-shrinking batches must end bounded, with admissions,
-    index parity, and the watermark intact."""
-    import os
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, corpus_extend_stream, read_corpus_state)
-
-    schema = "doc_id long, text string, source string, lang string"
-    src = str(tmp_path / "src")
-    n_docs = 0
-    for b in range(8):
-        rows = [(100 * b + i, _words(60, f"sat{b}x{i}"), "web", "en")
-                for i in range(9 - b)]  # 9,8,...,2 novel docs
-        n_docs += len(rows)
-        spark.createDataFrame(rows, schema).coalesce(1).write \
-            .mode("append" if b else "overwrite").parquet(src)
-        # batch order rides file mtime (sequential writes); the cap
-        # assertion below holds under ANY order, shrinking or not
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    corpus_path = str(tmp_path / "corpus")
-    q = corpus_extend_stream(stream, corpus_path,
-                             str(tmp_path / "ckpt"), compact_every=3)
-    q.processAllAvailable()
-    q.stop()
-
-    admitted = sorted(r["doc_id"] for r in
-                      read_corpus_state(spark, corpus_path).collect())
-    assert len(admitted) == n_docs          # all novel docs admitted
-    cids = _batch_dir_ids(corpus_path)
-    assert len(cids) <= 6                   # forced cap (2x trigger)
-    idx_ids = sorted(r["doc_id"] for r in
-                     spark.read.parquet(corpus_path + "__index")
-                     .collect())
-    assert idx_ids == admitted              # index parity maintained
-    markers = [f for f in os.listdir(corpus_path)
-               if f.startswith("_applied_")]
-    assert markers == ["_applied_7"]
-
-
-def test_tiered_forced_plan_properties():
-    """Hypothesis sweep of the FORCED fold policy (round 15): under any
-    batch-size profile, a forced plan (slack=2.0, force=True) must (a)
-    exist whenever 2+ dirs do, (b) be a contiguous SUFFIX ending at the
-    newest id — the range-marker heal and `applied_ids`'s max both
-    require it, (c) include >= 2 dirs, and (d) the caller's
-    trigger-at-cap loop must keep live dir count <= cap with zero row
-    loss/duplication, for ANY profile (the bound the ADVICE fix
-    exists to provide)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        tiered_compact_plan)
-
-    @settings(max_examples=200, deadline=None)
-    @given(st.lists(st.integers(min_value=0, max_value=10_000),
-                    min_size=2, max_size=60),
-           st.integers(min_value=2, max_value=8))
-    def check(batch_rows, trigger):
-        cap = 2 * trigger
-        # (a)-(c): the forced plan on the raw profile
-        dirs = list(enumerate(batch_rows))
-        rng = tiered_compact_plan(dirs, min_run=2, slack=2.0,
-                                  force=True)
-        assert rng is not None
-        lo, hi = rng
-        ids = sorted(i for i, _ in dirs)
-        run_ids = [i for i in ids if lo <= i <= hi]
-        assert run_ids == ids[-len(run_ids):] and hi == ids[-1]
-        assert len(run_ids) >= 2
-        # (d): the corpus_extend_stream trigger loop under the cap
-        live: list[tuple[int, int]] = []
-        total = 0
-        for b, n in enumerate(batch_rows):
-            live.append((b, n))
-            total += n
-            if len(live) >= trigger:
-                r = tiered_compact_plan(live)
-                if r is None and len(live) >= cap:
-                    r = tiered_compact_plan(live, min_run=2,
-                                            slack=2.0, force=True)
-                if r is not None:
-                    flo, fhi = r
-                    rows = sum(x for i, x in live if flo <= i <= fhi)
-                    live = [(i, x) for i, x in live
-                            if not flo <= i <= fhi]
-                    live.append((fhi, rows))
-                    live.sort()
-            assert len(live) <= cap
-        assert sum(x for _, x in live) == total
-
-    check()
-
-
-def test_reader_isolation_during_inflight_fold(spark, tmp_path):
-    """Round-15 verdict #5: a reader overlapping an in-flight tiered
-    fold must see either the pre-fold or the post-fold row set —
-    identical as row SETS — never a partial. The crash storm covers
-    writer crashes; this walks a reader through EVERY interleaving
-    point of the completion protocol by hand: (A) combined tmp written,
-    nothing committed; (B) intent marker committed, no removals yet;
-    (C) MID-removal — some folded dirs gone (the silent-partial window
-    the round-15 reader fix closes); (D) all folded dirs gone, final
-    rename pending; (E) completed. Lineage view: folded rows read as
-    batch=hi from (B) on — exactly what the completed fold assigns."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _heal_compaction, read_corpus_state)
-
-    state = str(tmp_path / "iso")
-    for b in range(6):
-        _append_batch_with_marker(
-            spark, state, b,
-            lambda old: spark.range(3).select(
-                (F.lit(b) * 100 + F.col("id")).alias("k")))
-    expect = sorted(r["k"] for r in
-                    read_corpus_state(spark, state).collect())
-    assert len(expect) == 18
-
-    def rows():
-        return sorted(r["k"] for r in
-                      read_corpus_state(spark, state).collect())
-
-    # fold range: batches 3..5 -> batch=5
-    lo, hi = 3, 5
-    combined = (spark.read.parquet(state)
-                .filter((F.col("batch") >= lo) & (F.col("batch") <= hi))
-                .drop("batch"))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    assert rows() == expect                         # (A) pre-commit
-    os.rename(tmp, os.path.join(state, f".compact_ready_{lo}-{hi}"))
-    assert rows() == expect                         # (B) committed
-    lin = {r["k"]: r["batch"] for r in read_corpus_state(
-        spark, state, with_lineage=True).collect()}
-    assert all(lin[k] == hi for k in lin if k >= 300)  # post-fold view
-    shutil.rmtree(os.path.join(state, f"batch={lo}"))
-    assert rows() == expect                         # (C) mid-removal
-    shutil.rmtree(os.path.join(state, f"batch={lo + 1}"))
-    shutil.rmtree(os.path.join(state, f"batch={hi}"))
-    assert rows() == expect                         # (D) pre-rename
-    _heal_compaction(state)                         # finish (4)
-    assert rows() == expect                         # (E) completed
-    lin = {r["k"]: r["batch"] for r in read_corpus_state(
-        spark, state, with_lineage=True).collect()}
-    assert all(lin[k] == hi for k in lin if k >= 300)
-    assert all(lin[k] < lo for k in lin if k < 300)
-
-
-def test_reader_serves_legacy_prefix_marker(spark, tmp_path):
-    """The fold-consistent reader's LEGACY leg: a pre-r14 prefix
-    intent marker (``.compact_ready_<hi>``, unbounded lo — fold of
-    everything <= hi) must also be served as the post-fold view
-    mid-removal, with batch=hi lineage for every folded row."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, read_corpus_state)
-
-    state = str(tmp_path / "legacy")
-    for b in range(4):
-        _append_batch_with_marker(
-            spark, state, b,
-            lambda old: spark.range(2).select(
-                (F.lit(b) * 10 + F.col("id")).alias("k")))
-    expect = sorted(r["k"] for r in
-                    read_corpus_state(spark, state).collect())
-    combined = (spark.read.parquet(state)
-                .filter(F.col("batch") <= 2).drop("batch"))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, ".compact_ready_2"))
-    shutil.rmtree(os.path.join(state, "batch=0"))   # mid-removal
-    assert sorted(r["k"] for r in
-                  read_corpus_state(spark, state).collect()) == expect
-    lin = {r["k"]: r["batch"] for r in read_corpus_state(
-        spark, state, with_lineage=True).collect()}
-    assert all(lin[k] == 2 for k in lin if k < 30)  # folded -> hi
-    assert all(lin[k] == 3 for k in lin if k >= 30)
-
-
-def test_tiered_compact_plan_properties():
-    """Hypothesis sweep of the fold policy over irregular batch sizes
-    (including empty zero-admission dirs): any returned range is a
-    contiguous SUFFIX of the committed ids ending at the newest dir
-    (required by the range-marker heal and by `applied_ids`' max), the
-    amortization invariant holds (every dir in the run except the
-    newest is no larger than the accumulated newer rows), and folding
-    per the policy in a driver-side simulation never loses or
-    duplicates rows."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        tiered_compact_plan)
-
-    @settings(max_examples=200, deadline=None)
-    @given(st.lists(st.integers(min_value=0, max_value=10_000),
-                    min_size=0, max_size=40))
-    def check(batch_rows):
-        dirs = list(enumerate(batch_rows))
-        total = sum(batch_rows)
-        for _ in range(60):  # fold to fixpoint
-            rng = tiered_compact_plan(dirs)
-            if rng is None:
-                break
-            lo, hi = rng
-            ids = [i for i, _ in dirs]
-            run_ids = [i for i in ids if lo <= i <= hi]
-            # contiguous suffix ending at the newest committed id
-            assert run_ids == sorted(ids)[-len(run_ids):]
-            assert hi == max(ids)
-            assert len(run_ids) >= 2
-            # amortization: each included dir (except the newest-most
-            # accumulated prefix) is <= the rows accumulated after it
-            sizes = {i: n for i, n in dirs}
-            acc = 0
-            for i in sorted(run_ids, reverse=True):
-                if acc:  # every non-first member obeys the rule
-                    assert sizes[i] <= acc
-                acc += sizes[i]
-            folded_rows = sum(n for i, n in dirs if lo <= i <= hi)
-            dirs = [(i, n) for i, n in dirs if not lo <= i <= hi]
-            dirs.append((hi, folded_rows))
-            dirs.sort()
-            assert sum(n for _, n in dirs) == total  # no loss/dup
-        else:
-            raise AssertionError("no fixpoint within 60 folds")
-
-    check()
-
-
-def test_reconcile_survives_crash_mid_repair(spark, tmp_path, monkeypatch):
-    """Crash-injection INSIDE the reconcile repair (round 14): the
-    design claim is that repair order (re-project suspects + backfill
-    first, drop stale LAST) makes any mid-reconcile crash leave the id
-    sets unequal, so the next batch re-enters reconcile instead of
-    trusting a half-repaired cache. Inject a failure into the stale-drop
-    phase after the suspect re-projection landed, then verify the next
-    apply converges with correct admissions."""
-    import os
-
-    import data_engineering_projects_spark.streaming.jobs as J
-
-    schema = "doc_id long, text string, source string, lang string"
-    kw = dict(quality_min=0.2, jaccard_min=0.5, shingle_k=3,
-              split_weights=None, split_seed=42)
-    corpus = str(tmp_path / "c")
-    idx = corpus + "__index"
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema)
-
-    J._corpus_stream_apply(spark, corpus, batch(
-        [(1, _words(60, "ya"), "web", "en")]), 0, kw)
-    J._corpus_stream_apply(spark, corpus, batch(
-        [(2, _words(60, "yb"), "web", "en")]), 1, kw)
-    J._corpus_stream_apply(spark, corpus, batch(
-        [(3, _words(60, "yc"), "web", "en")]), 2, kw)
-
-    # corpus folds, index compaction "crashes" (never runs)
-    assert J.compact_append_state(spark, corpus) == 2
-    assert J._batch_dir_ids(idx) == {0, 1, 2}
-
-    # inject: the stale-drop rmtree calls inside _reconcile_index fail
-    # (simulated crash after the suspect re-projection committed)
-    import shutil as _sh
-    calls = {"n": 0}
-    real = _sh.rmtree
-
-    def exploding_rmtree(path, *a, **k):
-        if "batch=" in os.path.basename(path) and path.startswith(idx):
-            calls["n"] += 1
-            raise OSError("injected crash mid stale-drop")
-        return real(path, *a, **k)
-
-    monkeypatch.setattr("shutil.rmtree", exploding_rmtree)
-    try:
-        J._reconcile_index(spark, corpus, idx, 3)
-    except OSError:
-        pass
-    monkeypatch.setattr("shutil.rmtree", real)
-    assert calls["n"] >= 1  # the injection actually fired
-    # half-repaired: stale dirs remain -> id sets unequal -> unconverged
-    assert J._batch_dir_ids(idx) != J._batch_dir_ids(corpus)
-
-    # next batch re-enters reconcile and converges; the near-dup of the
-    # folded doc 1 must be dropped (the cache content is now FULL)
-    J._corpus_stream_apply(spark, corpus, batch(
-        [(5, _words(60, "ya") + " tiny drift", "web", "en"),
-         (6, _words(70, "yd"), "books", "en")]), 3, kw)
-    admitted = sorted(r["doc_id"] for r in
-                      J.read_corpus_state(spark, corpus).collect())
-    assert admitted == [1, 2, 3, 6]
-    assert J._batch_dir_ids(idx) == J._batch_dir_ids(corpus)
-    idx_ids = sorted(r["doc_id"] for r in
-                     spark.read.parquet(idx).collect())
-    assert idx_ids == [1, 2, 3, 6]
-
-
-def test_reader_revalidates_listing_after_spark_index(spark, tmp_path,
-                                                      monkeypatch):
-    """Round-16 ADVICE (medium): the no-marker fast path used to trust
-    a single pre-read listing — if a fold committed its marker and
-    removed folded dirs BETWEEN that listing and Spark's own partition
-    discovery, Spark silently omitted them (dirs gone before the file
-    index is built don't error; only files gone after it do).
-    Deterministic reproduction: feed the reader a stale marker-free
-    listing while the tree is already mid-removal; the reader must
-    detect the changed listing after building the DataFrame, discard
-    it, and retry via the marker-aware per-dir path — full row set,
-    never the silent partial the stale parent read would have served.
-    Round 17: the default read is the pinned-snapshot path, which
-    never calls _stable_listing; this test pins the ``pin=False``
-    fallback (the path that still serves filesystems without
-    hardlinks), so it requests it explicitly."""
-    import shutil
-
-    from data_engineering_projects_spark.streaming import jobs as J
-
-    state = str(tmp_path / "race")
-    for b in range(5):
-        J._append_batch_with_marker(
-            spark, state, b,
-            lambda old: spark.range(4).select(
-                (F.lit(b) * 100 + F.col("id")).alias("k")))
-    expect = sorted(r["k"] for r in
-                    J.read_corpus_state(spark, state).collect())
-    assert len(expect) == 20
-    stale = J._stable_listing(state)       # marker-free pre-fold view
-
-    # fold batches 2..4 -> batch=4, stopped mid-removal (window C)
-    lo, hi = 2, 4
-    combined = (spark.read.parquet(state)
-                .filter((F.col("batch") >= lo) & (F.col("batch") <= hi))
-                .drop("batch"))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, f".compact_ready_{lo}-{hi}"))
-    shutil.rmtree(os.path.join(state, f"batch={lo}"))
-    shutil.rmtree(os.path.join(state, f"batch={lo + 1}"))
-
-    real = J._stable_listing
-    calls = {"n": 0}
-
-    def lagging(path, tries=50):
-        calls["n"] += 1
-        return list(stale) if calls["n"] == 1 else real(path, tries)
-
-    monkeypatch.setattr(J, "_stable_listing", lagging)
-    got = sorted(r["k"] for r in
-                 J.read_corpus_state(spark, state, pin=False).collect())
-    assert got == expect                   # full set, not the partial
-    assert calls["n"] >= 2                 # re-validation actually ran
-    lin = {r["k"]: r["batch"] for r in J.read_corpus_state(
-        spark, state, with_lineage=True, pin=False).collect()}
-    assert all(lin[k] == hi for k in lin if k >= lo * 100)
-    # the pinned default handles the same mid-removal tree too (the
-    # marker-aware post-fold view, snapshot-isolated)
-    got_pin = sorted(r["k"] for r in
-                     J.read_corpus_state(spark, state).collect())
-    assert got_pin == expect
-
-
-def test_reader_missing_path_raises_spark_error(spark, tmp_path):
-    """Round-16 ADVICE (low): a missing corpus path must surface
-    Spark's native missing-path error (what callers historically got
-    from the plain parent read), not a local-fs FileNotFoundError from
-    the fast path's os.listdir."""
-    import pytest
-    from pyspark.errors import AnalysisException
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        read_corpus_state)
-
-    with pytest.raises(AnalysisException):
-        read_corpus_state(spark, str(tmp_path / "no_such_corpus"))
-
-
-def test_sizes_cache_reverified_after_append_path_heal(spark, tmp_path):
-    """Round-16 ADVICE (low): a crash-interrupted fold healed by the
-    APPEND path (``_append_batch_with_marker`` -> ``_heal_compaction``)
-    replaces ``batch=<hi>``'s contents without
-    ``tiered_compact_append_state`` ever seeing the marker — the
-    round-15 wholesale invalidation can't fire, leaving a permanently
-    stale cached count for hi. The fix re-verifies the largest CACHED
-    surviving id against footers on every call (hi is always the
-    newest dir at fold time, so it tops the cache until corrected)."""
-    import shutil
-
-    from data_engineering_projects_spark.streaming import jobs as J
-
-    state = str(tmp_path / "healrace")
-    cache: dict[int, int] = {}
-
-    def apply(bid, nrows):
-        J._append_batch_with_marker(
-            spark, state, bid,
-            lambda old: spark.range(nrows).select(
-                (F.lit(bid) * 1000 + F.col("id")).alias("k")))
-
-    for b, n in enumerate([5, 4, 3, 2]):
-        apply(b, n)
-    # populate the cache without folding (min_run above dir count)
-    assert J.tiered_compact_append_state(spark, state, min_run=10,
-                                         sizes_cache=cache) is None
-    assert cache == {0: 5, 1: 4, 2: 3, 3: 2}
-
-    # crash-interrupted fold of 2..3: marker committed by hand
-    lo, hi = 2, 3
-    combined = (spark.read.parquet(state)
-                .filter((F.col("batch") >= lo) & (F.col("batch") <= hi))
-                .drop("batch"))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, f".compact_ready_{lo}-{hi}"))
-
-    # the APPEND path heals it (batch=3 now holds 5 rows), then
-    # appends batch 4 — the compactor never sees the marker
-    apply(4, 1)
-    assert J._batch_dir_ids(state) == {0, 1, 3, 4}
-    assert J.tiered_compact_append_state(spark, state, min_run=10,
-                                         sizes_cache=cache) is None
-    # without the fix cache[3] stays 2 (stale); with it, 5 (healed)
-    for bid in cache:
-        assert cache[bid] == J._dir_parquet_rows(
-            os.path.join(state, f"batch={bid}"))
-    assert cache[3] == 5 and cache[4] == 1 and 2 not in cache
 
 
 def test_cluster_executor_loss_barrier_modes():
@@ -1781,165 +491,3 @@ def test_cluster_executor_loss_barrier_modes():
     assert verdict["local_failed"] is True
     assert verdict["reliable_admitted"] == verdict["undisturbed"]
     assert verdict["kills"] >= 4        # both legs actually lost JVMs
-
-
-def test_free_running_reader_race(spark):
-    """Round-16 verdict #4, in-suite leg: a free-running reader thread
-    (no pinned interleaving points) against a real append+compaction
-    stream with folds — every successful read must be a consistent
-    pre-/post-fold snapshot (complete batches 0..k, nothing partial,
-    nothing duplicated); rename races surface as retryable errors only.
-    The full-size run (120 batches) lives in tools/stress_scale.py
-    --family reader_race; this keeps a 40-batch version green in-suite."""
-    from tools.stress_scale import run_reader_race
-
-    out = run_reader_race(spark, n_batches=40, rows_per_batch=10,
-                          trigger=5, cap=10)
-    assert out["bad_reads"] == 0, out["bad_samples"]
-    assert out["final_identical"] is True
-    assert out["folds"] >= 5
-    assert out["reads"] >= 10          # the reader actually raced
-    assert out["live_dirs"] <= 10
-
-
-def _mk_append_state(spark, state, n_batches, rows_per_batch=5):
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker)
-
-    for b in range(n_batches):
-        _append_batch_with_marker(
-            spark, state, b,
-            lambda old, b=b: spark.range(rows_per_batch).select(
-                (F.lit(b).cast("long") * 1_000_000
-                 + F.col("id")).alias("k")))
-
-
-def test_pinned_read_survives_concurrent_fold_and_removal(spark, tmp_path):
-    """Round-17 verdict #4: the default read takes a hardlink snapshot,
-    so a plan obtained BEFORE a fold collects the same rows AFTER the
-    fold removed/replaced the dirs it referenced — the retryable-error
-    class is structurally gone, not retried around."""
-    from data_engineering_projects_spark.streaming.jobs import (
-        _batch_dir_ids, compact_append_state, read_corpus_state)
-
-    state = str(tmp_path / "corpus")
-    _mk_append_state(spark, state, 6)
-    df = read_corpus_state(spark, state)           # pinned plan
-    lin = read_corpus_state(spark, state, with_lineage=True)
-    compact_append_state(spark, state, upto=5)     # removes batch=0..4
-    assert _batch_dir_ids(state) == {5}
-    want = sorted(b * 1_000_000 + j for b in range(6) for j in range(5))
-    # the pre-fold plan still collects: inodes pinned by the snapshot
-    assert sorted(r["k"] for r in df.collect()) == want
-    # pre-fold lineage preserved in the pinned plan
-    got_lin = {r["k"]: r["batch"] for r in lin.collect()}
-    assert got_lin[2_000_003] == 2
-    # a FRESH read serves the post-fold state: same rows, coarse lineage
-    fresh = read_corpus_state(spark, state, with_lineage=True)
-    assert sorted(r["k"] for r in fresh.collect()) == want
-    assert {r["batch"] for r in fresh.collect()} == {5}
-
-
-def test_pinned_read_falls_back_without_hardlinks(spark, tmp_path,
-                                                  monkeypatch):
-    """A filesystem that cannot hardlink (EXDEV and friends) must fall
-    back to the unpinned round-16 path with identical rows."""
-    import errno
-    import os as _os
-
-    from data_engineering_projects_spark.streaming import jobs as J
-
-    state = str(tmp_path / "corpus")
-    _mk_append_state(spark, state, 3)
-
-    def no_link(src, dst, **kw):
-        raise OSError(errno.EXDEV, "cross-device link")
-
-    monkeypatch.setattr(_os, "link", no_link)
-    got = sorted(r["k"] for r in
-                 J.read_corpus_state(spark, state).collect())
-    want = sorted(b * 1_000_000 + j for b in range(3) for j in range(5))
-    assert got == want
-    # and no snapshot dir was left behind by the failed attempt
-    snaps = _os.path.join(state, J._SNAP_DIR)
-    assert not _os.path.isdir(snaps) or _os.listdir(snaps) == []
-
-
-def test_pinned_read_gives_up_after_bounded_retries(spark, tmp_path,
-                                                    monkeypatch):
-    """Continuous fold churn (every post-link validation sees a changed
-    relevant entry set) must surface as a bounded, explicit error — not
-    an infinite loop, not a silently inconsistent snapshot."""
-    import itertools
-
-    import pytest
-
-    from data_engineering_projects_spark.streaming import jobs as J
-
-    state = str(tmp_path / "corpus")
-    _mk_append_state(spark, state, 3)
-    real = J._relevant_listing
-    counter = itertools.count()
-
-    def churn(path, tries=50):
-        out = list(real(path, tries))
-        if next(counter) % 2 == 1:      # every validation listing
-            out.pop()                   # ... lost an entry
-        return tuple(out)
-
-    monkeypatch.setattr(J, "_relevant_listing", churn)
-    with pytest.raises(RuntimeError, match="stable snapshot"):
-        J.read_corpus_state(spark, state, retries=3)
-
-
-def test_snapshot_ttl_sweep_reaps_crashed_readers(spark, tmp_path):
-    """Crashed readers' leftover snapshots are reaped by the TTL sweep
-    at the next pinned read; fresh snapshots are kept."""
-    import os as _os
-
-    from data_engineering_projects_spark.streaming import jobs as J
-
-    state = str(tmp_path / "corpus")
-    _mk_append_state(spark, state, 2)
-    stale = _os.path.join(state, J._SNAP_DIR, "deadbeef")
-    _os.makedirs(stale)
-    _os.utime(_os.path.join(state, J._SNAP_DIR, "deadbeef"),
-              (1.0, 1.0))  # ancient mtime
-    got = sorted(r["k"] for r in
-                 J.read_corpus_state(spark, state).collect())
-    assert len(got) == 10
-    assert not _os.path.isdir(stale)
-    # the read's own snapshot is alive (plan still collectible)
-    live = [d for d in _os.listdir(_os.path.join(state, J._SNAP_DIR))]
-    assert len(live) >= 1
-
-
-def test_cluster_executor_loss_fold_path():
-    """Round-17 verdict #3: the fold/compaction protocol under REAL
-    executor loss. tools/cluster_fold_loss_probe drives the
-    append+tiered-fold writer loop on local-cluster[2,1,1024] and
-    SIGKILLs every executor JVM once mid-append-write and once
-    mid-fold-write; both jobs are file-sourced (no truncated
-    checkpoint lineage — the difference from the barrier probe's
-    default leg), so Spark task re-execution on respawned executors
-    must complete them, the marker/heal protocol must converge to a
-    state identical to an undisturbed run, and a concurrent validating
-    reader must never see a partial or duplicated batch. Subprocess
-    because a second SparkContext cannot share this suite's JVM."""
-    import json
-    import subprocess
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(here, "tools",
-                                      "cluster_fold_loss_probe.py")],
-        capture_output=True, text=True, timeout=540)
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    verdict = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert verdict["final_identical"] is True
-    assert verdict["kills"] >= 4          # both kill points lost JVMs
-    assert verdict["folds"] >= 3          # the fold kill actually hit a fold
-    assert verdict["reader"]["bad"] == 0

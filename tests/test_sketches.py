@@ -191,62 +191,6 @@ def test_sketch_partition_row_is_small(sketch_table):
     assert r["mk"] < 200_000 and r["mh"] < 200_000
 
 
-def test_sketch_rollup_stream_matches_batch_and_skips_replays(
-        spark, sf_dir, tmp_path):
-    """foreachBatch sketch maintenance: after streaming the events in,
-    the persisted sketch state must carry the one-shot batch build's
-    exact grain/n_rows and identical HLL estimates; restarting the
-    stream with a wiped checkpoint (forced batch replay) must leave the
-    state untouched (batch-id markers make the non-idempotent merge
-    effectively exactly-once)."""
-    from data_engineering_projects_spark.streaming.jobs import (
-        sketch_rollup_stream)
-
-    ev = _events_with_day(spark, sf_dir).limit(4000)
-    src = str(tmp_path / "src")
-    # two files => at least one multi-file stream; one query run
-    ev.filter("user_id % 2 = 0").write.parquet(src)
-    ev.filter("user_id % 2 = 1").write.mode("append").parquet(src)
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = sketch_rollup_stream(stream, state, ckpt, PART, VALUE_COLS,
-                             distinct_col="user_id", kll_k=KLL_K)
-    q.processAllAvailable(); q.stop()
-
-    got = spark.read.parquet(state)
-    oneshot = build_sketch_partitions(ev, PART, VALUE_COLS,
-                                      distinct_col="user_id", kll_k=KLL_K)
-    a = {tuple(r[c] for c in PART): r["n_rows"] for r in got.collect()}
-    b = {tuple(r[c] for c in PART): r["n_rows"] for r in oneshot.collect()}
-    assert a == b
-    est = lambda df: df.select(  # noqa: E731
-        F.hll_sketch_estimate(
-            F.hll_union_agg("hll_user_id")).alias("e")).first()["e"]
-    assert est(got) == est(oneshot)
-
-    before = sorted(map(tuple, got.collect()))
-    import shutil
-    shutil.rmtree(ckpt)  # force full batch replay from batch id 0
-    stream2 = (spark.readStream.schema(ev.schema)
-               .option("maxFilesPerTrigger", 1).parquet(src))
-    q2 = sketch_rollup_stream(stream2, state, str(tmp_path / "ckpt2"),
-                              PART, VALUE_COLS, distinct_col="user_id",
-                              kll_k=KLL_K)
-    q2.processAllAvailable(); q2.stop()
-    after = sorted(map(tuple, spark.read.parquet(state).collect()))
-    assert after == before
-
-    # marker-file contract: ONE high-watermark marker regardless of how
-    # many batches ran (per-batch markers would grow the state dir
-    # linearly with query age — review-found)
-    import os
-    markers = [f for f in os.listdir(state) if f.startswith("_applied_")]
-    assert len(markers) == 1, markers
-
-
 def test_sketch_drift_detects_planted_shift(spark):
     """Drift report from sketches alone: 8 days of a stable distribution
     per group, day 8 shifted +100 in group 'b' only — drift must surface

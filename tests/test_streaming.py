@@ -1,5 +1,7 @@
-"""Structured Streaming tests: watermarked windowed rollup equals its batch
-counterpart; stateful sessionization closes sessions on watermark advance."""
+"""Structured Streaming tests: the stream shapes in ``streaming/jobs.py``
+(dedup, stream-stream join, windowed rollup) and the contract harness
+that runs them (``contract/sessions.py``): state sizing, conf scopes,
+emission boundaries, restart and executor-loss recovery."""
 
 from __future__ import annotations
 
@@ -7,79 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_projects_spark.sources import load_table
-from data_engineering_projects_spark.streaming import (
-    hourly_rollup_stream, sessionize_stream,
-)
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def stream_input(spark, tmp_path_factory):
-    """Materialize events (µs timestamps) as a streamable parquet dir."""
-    d = tmp_path_factory.mktemp("stream_in")
-    ev = load_table(spark, SF, "events").select("ts", "user_id", "value")
-    ev.write.mode("overwrite").parquet(str(d))
-    return str(d), ev
-
-
-def test_hourly_rollup_stream_matches_batch(spark, stream_input, tmp_path):
-    path, batch_ev = stream_input
-    schema = batch_ev.schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    q = (hourly_rollup_stream(stream)
-         .writeStream.format("memory").queryName("rollup")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.table("rollup")
-    want = (batch_ev.groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-            .agg(F.avg("value").alias("avg_value"),
-                 F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "user_id",
-                    "avg_value", "n_events"))
-    # append mode emits only windows finalized by the watermark; every
-    # emitted window must match the batch result exactly
-    emitted = got.select("window_start", "user_id", "avg_value", "n_events")
-    j = emitted.alias("g").join(want.alias("w"), ["window_start", "user_id"])
-    n = j.count()
-    assert n == emitted.count() > 0
-    mismatch = j.filter(
-        (F.abs(F.col("g.avg_value") - F.col("w.avg_value")) > 1e-9)
-        | (F.col("g.n_events") != F.col("w.n_events"))).count()
-    assert mismatch == 0
-
-
-def test_sessionize_stream(spark, tmp_path):
-    import pandas as pd
-    d = tmp_path / "sess_in"
-    d.mkdir()
-    # batch 1: two users active at t0; batch 2: a much later event advances
-    # the watermark past the 30-min gap, closing their sessions
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    b1 = pd.DataFrame({
-        "ts": [t0, t0 + pd.Timedelta(minutes=5),
-               t0 + pd.Timedelta(minutes=10), t0],
-        "user_id": [1, 1, 1, 2],
-        "value": [1.0, 2.0, 3.0, 4.0],
-    })
-    b2 = pd.DataFrame({
-        "ts": [t0 + pd.Timedelta(hours=6)], "user_id": [99], "value": [0.0]})
-    spark.createDataFrame(b1).write.parquet(str(d / "b1"))
-    spark.createDataFrame(b2).write.parquet(str(d / "b2"))
-    schema = "ts timestamp, user_id long, value double"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(d) + "/*"))
-    q = (sessionize_stream(stream, gap_minutes=30)
-         .writeStream.format("memory").queryName("sessions")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    rows = {r["user_id"]: r for r in spark.table("sessions").collect()
-            if r["status"] == "closed"}
-    assert 1 in rows and 2 in rows
-    assert rows[1]["n_events"] == 3
-    assert rows[1]["session_end"] - rows[1]["session_start"] == \
-        __import__("datetime").timedelta(minutes=10)
-    assert rows[2]["n_events"] == 1
 
 
 def test_dedup_stream_first_arrival_wins(spark, tmp_path):
@@ -111,78 +42,6 @@ def test_dedup_stream_first_arrival_wins(spark, tmp_path):
     assert {r["fp"] for r in got} == {"fp_a", "fp_b", "fp_c"}
 
 
-def test_quality_gated_sink_warn_commits_error_fails(spark, tmp_path):
-    """foreachBatch quality gate: WARN violations quarantine + commit;
-    ERROR violations fail the query (dbt gate ordering semantics)."""
-    from data_engineering_projects_spark.quality import (
-        Severity, accepted_range, not_null,
-    )
-    from data_engineering_projects_spark.streaming.jobs import quality_gated_sink
-
-    src = tmp_path / "qg_in"
-    rows = [(1, 50.0), (2, 300.0), (3, 80.0)]  # 300 out of [0,120] range
-    spark.createDataFrame(rows, "id long, speed double") \
-        .write.mode("overwrite").parquet(str(src))
-    stream = spark.readStream.schema("id long, speed double").parquet(str(src))
-
-    out, quar = tmp_path / "qg_out", tmp_path / "qg_quar"
-    q = quality_gated_sink(
-        stream,
-        [not_null("id"), accepted_range("speed", 0, 120, Severity.WARN)],
-        str(out), str(tmp_path / "qg_ck"), quarantine_path=str(quar))
-    q.processAllAvailable(); q.stop()
-    assert spark.read.parquet(str(out)).count() == 3      # warn commits
-    rep = spark.read.parquet(str(quar)).collect()
-    assert len(rep) == 1 and rep[0]["n_violations"] == 1
-
-    # ERROR severity: batch must fail and nothing commits
-    stream2 = spark.readStream.schema("id long, speed double").parquet(str(src))
-    out2 = tmp_path / "qg_out2"
-    q2 = quality_gated_sink(
-        stream2, [accepted_range("speed", 0, 120, Severity.ERROR)],
-        str(out2), str(tmp_path / "qg_ck2"))
-    with pytest.raises(Exception) as ei:
-        q2.processAllAvailable()
-    q2.stop()
-    assert "quality" in str(ei.value).lower() or "QualityError" in str(ei.value)
-    import os
-    assert not os.path.exists(str(out2)) or \
-        spark.read.parquet(str(out2)).count() == 0
-
-
-def test_session_window_rollup_matches_manual(spark, tmp_path):
-    """Built-in session_window: events <=gap apart merge into one session
-    per user; a gap splits sessions."""
-    from data_engineering_projects_spark.streaming.jobs import (
-        session_window_rollup,
-    )
-    src = tmp_path / "sw_in"
-    rows = [  # user 1: two sessions (09:00-09:10, 11:00); user 2: one
-        ("2024-01-01 09:00:00", 1, 10.0, 1),
-        ("2024-01-01 09:10:00", 1, 20.0, 2),
-        ("2024-01-01 11:00:00", 1, 5.0, 3),
-        ("2024-01-01 09:05:00", 2, 7.0, 4),
-        # sentinel: pushes the watermark past every real session's end so
-        # append mode emits them before the availableNow drain finishes
-        ("2024-01-02 00:00:00", 99, 0.0, 5),
-    ]
-    (spark.createDataFrame(rows, "ts string, user_id long, value double, event_id long")
-        .select(F.to_timestamp("ts").alias("ts"), "user_id", "value", "event_id")
-        .write.mode("overwrite").parquet(str(src)))
-    stream = spark.readStream.schema(
-        "ts timestamp, user_id long, value double, event_id long").parquet(str(src))
-    out = tmp_path / "sw_out"
-    q = (session_window_rollup(stream).writeStream.format("parquet")
-         .option("path", str(out))
-         .option("checkpointLocation", str(tmp_path / "sw_ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r["user_id"], r["n_events"], r["total_value"])
-           for r in spark.read.parquet(str(out)).collect()
-           if r["user_id"] != 99}
-    assert got == {(1, 2, 30.0), (1, 1, 5.0), (2, 1, 7.0)}
-
-
 def test_stream_stream_join_attributes_within_delay(spark, tmp_path):
     from data_engineering_projects_spark.streaming.jobs import (
         stream_stream_join,
@@ -207,95 +66,6 @@ def test_stream_stream_join_attributes_within_delay(spark, tmp_path):
     got = [(r["user_id"], r["purchase_id"], r["click_id"])
            for r in spark.read.parquet(str(out)).collect()]
     assert got == [(1, 200, 100)]
-
-
-def test_streaming_pipeline_matches_dbt_hourly_metrics(spark, tmp_path):
-    """End-to-end: staged speed stream -> hourly_rollup_stream ->
-    quality_gated_sink as ONE job over a file source; every finalized
-    window must equal the batch dbt_hourly_speed_metrics row computed on
-    the same data (the streaming/batch consistency check,
-    5_dbt/READ.md:398-412)."""
-    from data_engineering_projects_spark.functions.cleaning import clean_range
-    from data_engineering_projects_spark.streaming import quality_gated_sink
-    from data_engineering_projects_spark import quality as Q
-    from data_engineering_projects_spark.contract.traffic import (
-        dbt_hourly_speed_metrics)
-
-    # the dbt staging semantics, materialized as the stream source
-    src = tmp_path / "staged"
-    ev = load_table(spark, SF, "events")
-    staged = (ev.filter(F.col("event_type") == "view")
-                .select("ts", F.col("user_id").alias("location_id"),
-                        clean_range(F.col("value"), 0, 120).alias("speed"))
-                .filter(F.col("speed").isNotNull()))
-    staged.write.mode("overwrite").parquet(str(src))
-
-    stream = (spark.readStream.schema(staged.schema).parquet(str(src))
-              .select("ts", F.col("location_id").alias("user_id"),
-                      F.col("speed").alias("value")))
-    rollup = hourly_rollup_stream(stream)
-    out, cp, quar = (str(tmp_path / d) for d in ("out", "cp", "quar"))
-    checks = [Q.not_null("avg_value", severity=Q.Severity.WARN),
-              Q.accepted_range("avg_value", 0, 120,
-                               severity=Q.Severity.WARN)]
-    q = quality_gated_sink(rollup, checks, out, cp, quarantine_path=quar)
-    q.processAllAvailable()
-    q.stop()
-
-    got = (spark.read.parquet(out)
-           .select(F.col("window_start").alias("recorded_hour"),
-                   F.col("user_id").alias("location_id"),
-                   "avg_value", "min_value", "max_value", "n_events"))
-    want = dbt_hourly_speed_metrics(spark, SF)
-    j = got.alias("g").join(want.alias("w"), ["location_id", "recorded_hour"])
-    assert j.count() == got.count() > 0  # every emitted window has a batch row
-    mismatch = j.filter(
-        (F.abs(F.round(F.col("g.avg_value"), 6) - F.col("w.avg_speed")) > 1e-9)
-        | (F.col("g.min_value") != F.col("w.min_speed"))
-        | (F.col("g.max_value") != F.col("w.max_speed"))
-        | (F.col("g.n_events") != F.col("w.reading_count"))).count()
-    assert mismatch == 0
-
-
-def test_hourly_congestion_stream_matches_batch_model(spark, tmp_path):
-    """Stream-static enrichment: the streaming congestion rollup must
-    agree with the batch dbt intermediate model on every finalized
-    window (speed metrics + dim attributes + ratio arithmetic)."""
-    from data_engineering_projects_spark.functions.cleaning import clean_range
-    from data_engineering_projects_spark.streaming.jobs import (
-        hourly_congestion_stream)
-    from data_engineering_projects_spark.contract.traffic import (
-        _congestion_hourly, _dim_loc)
-
-    src = tmp_path / "speed_src"
-    ev = load_table(spark, SF, "events")
-    staged = (ev.filter(F.col("event_type") == "view")
-                .select("ts", F.col("user_id").alias("location_id"),
-                        clean_range(F.col("value"), 0, 120).alias("speed"))
-                .filter(F.col("speed").isNotNull()))
-    staged.write.mode("overwrite").parquet(str(src))
-
-    stream = spark.readStream.schema(staged.schema).parquet(str(src))
-    q = (hourly_congestion_stream(stream, _dim_loc(spark, SF))
-         .writeStream.format("memory").queryName("cong")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = spark.table("cong")
-    want = (_congestion_hourly(spark, SF)
-            .filter(F.col("avg_speed").isNotNull())
-            .select("location_id", "recorded_hour", "avg_speed",
-                    "speed_limit", "lanes",
-                    F.col("speed_ratio_raw").alias("speed_ratio")))
-    j = got.alias("g").join(want.alias("w"), ["location_id", "recorded_hour"])
-    assert j.count() == got.count() > 0
-    mismatch = j.filter(
-        (F.abs(F.col("g.avg_speed") - F.col("w.avg_speed")) > 1e-9)
-        | (F.col("g.speed_limit") != F.col("w.speed_limit"))
-        | (F.col("g.lanes") != F.col("w.lanes"))
-        | (F.abs(F.col("g.speed_ratio") - F.col("w.speed_ratio")) > 1e-9)
-    ).count()
-    assert mismatch == 0
 
 
 def test_state_partition_sizing(spark):
@@ -416,19 +186,14 @@ def test_conf_scopes_cover_start_only(spark, tmp_path, monkeypatch):
     assert tuple(spark.conf.get(k, None) for k in keys) == before
 
 
-def test_durable_streams_keep_the_default_checkpoint_manager(spark, tmp_path):
+def test_durable_streams_keep_the_default_checkpoint_manager():
     """Only the contract harness's one-shot local checkpoints switch the
-    checkpoint file manager. ``streaming/jobs.py`` and
-    ``tools/cluster_stream_loss_probe.py`` start streams whose
-    checkpoints can be durable or on a cluster; they keep Spark's
-    default manager (FileContext's atomic overwrite rename on HDFS and
-    S3A): no source outside ``contract/sessions.py`` names the key, and
-    a ``streaming/jobs.py`` stream runs with the key unset."""
+    checkpoint file manager. Streams started elsewhere, such as
+    ``tools/cluster_stream_loss_probe.py``'s, can have durable or
+    cluster checkpoints; they keep Spark's default manager (FileContext's
+    atomic overwrite rename on HDFS and S3A): no source outside
+    ``contract/sessions.py`` names the key."""
     import pathlib
-
-    from data_engineering_projects_spark.contract import sessions
-    from data_engineering_projects_spark.streaming.jobs import (
-        quality_gated_sink)
 
     repo = pathlib.Path(__file__).resolve().parent.parent
     naming = sorted(
@@ -437,21 +202,7 @@ def test_durable_streams_keep_the_default_checkpoint_manager(spark, tmp_path):
         for f in (repo / d).rglob("*.py")
         if "checkpointfilemanager" in f.read_text().lower())
     assert naming == ["data_engineering_projects_spark/contract/sessions.py"]
-    assert (repo / "data_engineering_projects_spark/streaming/jobs.py").exists()
     assert (repo / "tools/cluster_stream_loss_probe.py").exists()
-
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    df.write.parquet(str(tmp_path / "in"))
-    q = quality_gated_sink(
-        spark.readStream.schema(df.schema).parquet(str(tmp_path / "in")),
-        [], str(tmp_path / "out"), str(tmp_path / "ck"))
-    try:
-        stream_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
-        assert stream_conf.get(sessions.CHECKPOINT_MANAGER_KEY, None) is None
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
 
 
 def test_upsert_stream_starts_in_the_checkpoint_scope(spark, monkeypatch):
@@ -721,28 +472,34 @@ def test_state_partition_count_frozen_into_checkpoint(spark, tmp_path):
 
 
 def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
-    """Output-level recovery semantics, pinned end-to-end for the file
+    """Output-level recovery semantics of the contract's hourly rollup
+    (``windowed_value_rollup`` over 1-hour tumbling windows, as
+    ``streaming_hourly_rollup`` runs it), pinned end-to-end for the file
     sink: (1) a restart with no new input emits ZERO rows (idempotent —
     no reprocessing of committed batches), (2) a restart with appended
     input finalizes only newly-passed windows, never re-emitting rows a
-    previous run already committed, and (3) every emitted (window, user)
-    key appears exactly once across all runs with values matching the
-    batch ground truth over the full input."""
+    previous run already committed, and (3) every emitted
+    (window, event_type) key appears exactly once across all runs with
+    values matching the batch ground truth over the full input."""
     from datetime import datetime
 
     from data_engineering_projects_spark.streaming.jobs import (
-        hourly_rollup_stream)
+        windowed_value_rollup)
 
     src, out, ck = (str(tmp_path / d) for d in ("in", "out", "ck"))
-    schema = "ts timestamp, user_id long, value double"
+    schema = "ts timestamp, event_type string, value double"
 
     def write_input(hours, mode):
-        rows = [(datetime(2024, 1, 1, h), 7, float(h)) for h in hours]
+        # two rows per hour: h at h:00 and 0.25 at h:30
+        rows = [r for h in hours
+                for r in ((datetime(2024, 1, 1, h), "view", float(h)),
+                          (datetime(2024, 1, 1, h, 30), "view", 0.25))]
         spark.createDataFrame(rows, schema).write.mode(mode).parquet(src)
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = (hourly_rollup_stream(stream).writeStream.format("parquet")
+        q = (windowed_value_rollup(stream, F.window("ts", "1 hour"))
+             .writeStream.format("parquet")
              .option("path", out).option("checkpointLocation", ck)
              .outputMode("append").trigger(availableNow=True).start())
         assert q.awaitTermination(120)
@@ -750,24 +507,23 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
     write_input(range(10), "overwrite")       # hours 0..9
     run()                                     # watermark 2h -> finalizes 0..6
     n1 = spark.read.parquet(out).count()
-    assert n1 == 7  # windows ending <= 09:00 - 2h = 07:00: hours 0..6
+    assert n1 == 7  # windows ending <= 09:30 - 2h = 07:30: hours 0..6
 
     run()                                     # restart, nothing new
     assert spark.read.parquet(out).count() == n1  # zero re-emission
 
     write_input(range(10, 15), "append")      # hours 10..14
-    run()                                     # watermark -> 12:00
+    run()                                     # watermark -> 12:30
     got = spark.read.parquet(out).collect()
-    keys = [(r["window_start"], r["user_id"]) for r in got]
+    keys = [(r["window_start"], r["event_type"]) for r in got]
     assert len(keys) == len(set(keys))        # exactly-once per key
-    # finalized = windows ending <= 14:00 - 2h = 12:00: hours 0..11
+    # finalized = windows ending <= 14:30 - 2h = 12:30: hours 0..11
     assert len(got) == 12
     by_hour = {r["window_start"].hour: r for r in got}
     for h in range(12):
         r = by_hour[h]
-        # one row per hour with value == hour: avg/min/max all equal h
-        assert (r["avg_value"], r["min_value"], r["max_value"],
-                r["n_events"]) == (float(h), float(h), float(h), 1)
+        assert (r["event_type"], r["n"], r["total_value"]) == \
+            ("view", 2, h + 0.25)
 
 
 def test_dedup_stream_state_survives_restart(spark, tmp_path):
@@ -807,269 +563,10 @@ def test_dedup_stream_state_survives_restart(spark, tmp_path):
     assert {r["doc_id"] for r in got} == {1, 2, 4}  # first arrivals only
 
 
-def test_state_swap_crash_matrix_and_legacy_markers(spark, tmp_path):
-    """_apply_batch_with_state_swap (the shared foreachBatch state
-    discipline): drive every crash-point filesystem state the docstring
-    claims to survive, plus a legacy multi-marker dir, and assert the
-    next batch heals to the correct state with a single high-watermark
-    marker. The merge appends one (batch_id) row per applied batch so
-    double-merges and lost merges are both visible in the data."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _apply_batch_with_state_swap)
-
-    state = str(tmp_path / "state")
-
-    def apply(bid):
-        def merge(old):
-            fresh = spark.range(1).select(F.lit(bid).alias("applied"))
-            return fresh if old is None else old.unionByName(fresh)
-        _apply_batch_with_state_swap(spark, state, bid, merge)
-
-    def applied():
-        return sorted(r["applied"]
-                      for r in spark.read.parquet(state).collect())
-
-    def markers():
-        return sorted(f for f in os.listdir(state)
-                      if f.startswith("_applied_"))
-
-    apply(0)
-    apply(1)
-    assert applied() == [0, 1] and markers() == ["_applied_1"]
-
-    # replayed and stale ids are no-ops
-    apply(1)
-    apply(0)
-    assert applied() == [0, 1]
-
-    # crash AFTER tmp write, BEFORE any rename: stale tmp left behind
-    shutil.copytree(state, state + "__tmp")
-    apply(2)
-    assert applied() == [0, 1, 2] and markers() == ["_applied_2"]
-    assert not os.path.exists(state + "__tmp")
-
-    # crash BETWEEN the renames: state gone, bak holds the old state,
-    # tmp holds the in-flight new state — heal restores bak, then the
-    # redelivered batch re-merges exactly once
-    shutil.copytree(state, state + "__bak")     # "old" state (0,1,2)
-    shutil.rmtree(state)
-    os.makedirs(state + "__tmp", exist_ok=True)  # half-written junk
-    apply(3)
-    assert applied() == [0, 1, 2, 3] and markers() == ["_applied_3"]
-    assert not os.path.exists(state + "__bak")
-
-    # crash AFTER the final rename, BEFORE bak cleanup: bak lingers
-    # alongside the committed state — next batch must not "heal"
-    shutil.copytree(state, state + "__bak")
-    apply(4)
-    assert applied() == [0, 1, 2, 3, 4] and markers() == ["_applied_4"]
-    assert not os.path.exists(state + "__bak")
-
-    # legacy per-batch marker dir: watermark reads the MAX, one write
-    # collapses back to a single marker
-    open(os.path.join(state, "_applied_2"), "w").close()
-    open(os.path.join(state, "_applied_3"), "w").close()
-    assert len(markers()) == 3
-    apply(3)                                    # <= max(4): skipped
-    assert applied() == [0, 1, 2, 3, 4]
-    apply(5)
-    assert applied() == [0, 1, 2, 3, 4, 5] and markers() == ["_applied_5"]
-
-    # stray/truncated marker names (operator or tool debris) are ignored
-    # rather than wedging every subsequent batch (round-12 ADVICE)
-    open(os.path.join(state, "_applied_"), "w").close()
-    open(os.path.join(state, "_applied_1.tmp"), "w").close()
-    apply(6)
-    assert applied() == [0, 1, 2, 3, 4, 5, 6]
-    assert "_applied_6" in markers()
-
-
-def test_append_state_crash_matrix(spark, tmp_path):
-    """_append_batch_with_marker (round-12 append-layout state for
-    corpus-sized state): drive the crash points of the rename-is-commit
-    protocol. The build returns ONE row naming the batch, so lost and
-    doubled batches are both visible; `calls` records which batches
-    actually ran their build (replay skips must not re-run it)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, read_corpus_state)
-
-    state = str(tmp_path / "corpus")
-    calls = []
-
-    def apply(bid, n_rows=1):
-        def build(old):
-            calls.append(bid)
-            return spark.range(n_rows).select(F.lit(bid).alias("applied"))
-        _append_batch_with_marker(spark, state, bid, build)
-
-    def applied():
-        return sorted(r["applied"] for r in read_corpus_state(
-            spark, state).collect())
-
-    def markers():
-        return sorted(f for f in os.listdir(state)
-                      if f.startswith("_applied_"))
-
-    apply(0)
-    apply(1)
-    assert applied() == [0, 1] and markers() == ["_applied_1"]
-    assert sorted(f for f in os.listdir(state)
-                  if f.startswith("batch=")) == ["batch=0", "batch=1"]
-
-    # replayed/stale ids: no build call, no data change
-    apply(1)
-    apply(0)
-    assert applied() == [0, 1] and calls == [0, 1]
-
-    # zero-admission batch: watermark advances through an empty dir
-    apply(2, n_rows=0)
-    assert applied() == [0, 1] and markers() == ["_applied_2"]
-    assert os.path.isdir(os.path.join(state, "batch=2"))
-
-    # crash AFTER tmp write, BEFORE the rename: stale tmp overwritten
-    shutil.copytree(os.path.join(state, "batch=1"), state + "__tmp")
-    apply(3)
-    assert applied() == [0, 1, 3]
-    assert not os.path.exists(state + "__tmp")
-
-    # crash AFTER the rename, BEFORE the marker: dir presence is
-    # authoritative — redelivery skips the build, heals the marker
-    for m in markers():
-        os.remove(os.path.join(state, m))
-    n_calls = len(calls)
-    apply(3)
-    assert applied() == [0, 1, 3] and len(calls) == n_calls
-    assert markers() == ["_applied_3"]
-
-    # stray marker debris is ignored, never wedges the stream
-    open(os.path.join(state, "_applied_"), "w").close()
-    open(os.path.join(state, "_applied_2.tmp"), "w").close()
-    apply(4)
-    assert applied() == [0, 1, 3, 4]
-    assert "_applied_4" in markers()
-
-    # build sees the committed state (old side of the incremental merge)
-    seen = {}
-
-    def probe(old):
-        seen["n"] = old.count()
-        return old.limit(0).select(F.lit(5).alias("applied"))
-
-    _append_batch_with_marker(spark, state, 5, probe)
-    assert seen["n"] == 4  # rows 0,1,3,4 visible to batch 5's build
-
-
-def test_compact_append_state_crash_matrix(spark, tmp_path):
-    """compact_append_state (round 13): folding batch dirs <= K into one
-    batch=K preserves rows, watermark, and replay semantics at every
-    crash point of the intent-marker protocol — and the heal pass built
-    into the next batch append finishes an interrupted compaction."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _batch_dir_ids, compact_append_state,
-        read_corpus_state)
-
-    state = str(tmp_path / "corpus")
-
-    def apply(bid, n_rows=1):
-        _append_batch_with_marker(
-            spark, state, bid,
-            lambda old: spark.range(n_rows).select(
-                F.lit(bid).alias("applied"),
-                (F.lit(bid) * 10 + F.col("id")).alias("row_id")))
-
-    def rows():
-        return sorted(r["row_id"] for r in read_corpus_state(
-            spark, state).collect())
-
-    def markers():
-        return sorted(f for f in os.listdir(state)
-                      if f.startswith("_applied_"))
-
-    for b in range(5):
-        apply(b, n_rows=2 if b % 2 == 0 else 1)
-    all_rows = rows()
-    assert _batch_dir_ids(state) == {0, 1, 2, 3, 4}
-
-    # partial compaction: dirs <= 2 fold into batch=2; rows identical,
-    # watermark marker untouched, later dirs untouched
-    assert compact_append_state(spark, state, upto=2) == 2
-    assert _batch_dir_ids(state) == {2, 3, 4}
-    assert rows() == all_rows and markers() == ["_applied_4"]
-    # lineage coarsened: every compacted row now carries batch=2
-    lin = read_corpus_state(spark, state, with_lineage=True)
-    assert sorted(set(r["batch"] for r in lin.collect())) == [2, 3, 4]
-
-    # replay of a compacted-away id: still skipped (watermark intact)
-    apply(1, n_rows=9)
-    assert rows() == all_rows
-
-    # nothing-to-do: single dir in range -> None, state untouched
-    assert compact_append_state(spark, state, upto=2) is None
-
-    # crash BEFORE the intent rename: sibling tmp is ignorable debris
-    os.makedirs(state + "__compact", exist_ok=True)
-    open(os.path.join(state + "__compact", "junk"), "w").close()
-    assert compact_append_state(spark, state) == 4
-    assert _batch_dir_ids(state) == {4} and rows() == all_rows
-
-    # extend, then crash AFTER the intent rename (commit point), BEFORE
-    # removals: simulate by recreating the ready dir from a full copy
-    apply(5)
-    apply(6)
-    all_rows = rows()
-    # build the combined dir exactly as step (1)-(2) would
-    combined = (read_corpus_state(spark, state))
-    tmp = state + "__compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, ".compact_ready_6"))
-    # the next batch append heals first: old dirs removed, ready renamed
-    apply(7)
-    assert _batch_dir_ids(state) == {6, 7}
-    assert rows() == all_rows + [70]
-    assert markers() == ["_applied_7"]
-
-    # crash MID-removal (after some dirs <= K deleted): rows covered by
-    # the committed ready dir; heal completes idempotently
-    apply(8)
-    all_rows = rows()
-    combined = read_corpus_state(spark, state)
-    shutil.rmtree(tmp, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(state, ".compact_ready_8"))
-    shutil.rmtree(os.path.join(state, "batch=6"))   # partial removal
-    apply(9)
-    assert _batch_dir_ids(state) == {8, 9}
-    assert rows() == all_rows + [90]
-
-    # builds after compaction see the full state (old side intact)
-    seen = {}
-    _append_batch_with_marker(
-        spark, state, 10,
-        lambda old: (seen.setdefault("n", old.count()),
-                     old.limit(0))[1])
-    assert seen["n"] == len(all_rows) + 1
-
-
 def test_cluster_executor_loss_stateful_streaming():
     """Round 17: stateful Structured Streaming under REAL executor
-    loss. The r16/r17 cluster probes covered file-sourced batch
-    recovery (task re-execution over parquet lineage); this one covers
+    loss. tools/cluster_loss_probe covers file-sourced batch recovery
+    (task re-execution over parquet lineage); this one covers
     the state-store reload path — when an executor JVM dies
     mid-microbatch, its state partitions (dedup fingerprints, windowed
     partial aggregates) die with the heap / local RocksDB instance and
@@ -1078,8 +575,10 @@ def test_cluster_executor_loss_stateful_streaming():
     sink's commit log keeps the retried batch exactly-once.
 
     tools/cluster_stream_loss_probe drives dedup_stream and
-    hourly_rollup_stream on local-cluster[2,1,1024], SIGKILLing every
-    executor JVM twice mid-stream per (job, provider) leg — HDFS-backed
+    windowed_value_rollup (the state shapes of streaming_dedup_first and
+    of the hourly and sliding rollups) on local-cluster[2,1,1024],
+    SIGKILLing every executor JVM twice mid-stream per (job, provider)
+    leg — HDFS-backed
     AND RocksDB providers — and asserts each leg's metadata-aware sink
     read is identical to an undisturbed reference (which also pins
     cross-provider parity under loss). Orphan part-files from killed

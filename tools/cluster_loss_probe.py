@@ -67,7 +67,10 @@ def main() -> None:
 
     def wait_executors(n: int = 2, timeout: float = 90.0) -> None:
         deadline = time.time() + timeout
-        while time.time() < deadline and len(exec_pids()) < n:
+        while len(seen := exec_pids()) < n:
+            if time.time() >= deadline:
+                raise RuntimeError(
+                    f"{len(seen)} of {n} executors up after {timeout:.0f}s")
             time.sleep(0.5)
 
     def make_inputs():

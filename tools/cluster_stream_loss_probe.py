@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Executor-loss probe for STATEFUL Structured Streaming (round 17).
 
-Rounds 16-17 proved executor loss for the corpus barrier modes and the
-append/fold (tiered-compaction) path; both are file-sourced batch jobs
-whose recovery is task re-execution over parquet lineage. Stateful
-streaming recovery is a DIFFERENT code path: when an executor JVM dies
+``tools/cluster_loss_probe.py`` proves executor loss for the corpus
+barrier modes, a file-sourced batch job whose recovery is task
+re-execution over parquet lineage. Stateful streaming recovery is a
+DIFFERENT code path: when an executor JVM dies
 mid-microbatch, its state-store partitions (dedup fingerprints,
 windowed-agg partials) are gone with the heap (HDFS-backed provider)
 or the local RocksDB instance, and the respawned executor must reload
@@ -14,13 +14,15 @@ batch exactly-once (orphan part-files from killed attempts must stay
 invisible to a metadata-aware read).
 
 This probe runs on ``local-cluster[2,1,1024]`` (real separate executor
-JVMs) and drives two state shapes from the contract streaming family
+JVMs) and drives two state shapes the contract streaming queries run
 through that recovery, for both state-store providers:
 
 - :func:`dedup_stream` (``dropDuplicatesWithinWatermark`` —
-  per-fingerprint keyed state), and
-- :func:`hourly_rollup_stream` (event-time windowed aggregation —
-  per-(window,user) partial aggregate state, finalized by watermark),
+  per-fingerprint keyed state; ``streaming_dedup_first``), and
+- :func:`windowed_value_rollup` (event-time windowed count and exact
+  decimal sum — per-(window, event_type) partial aggregate state,
+  finalized by watermark; ``streaming_hourly_rollup`` and
+  ``streaming_sliding_rollup``),
 
 each over a deterministic file-source stream (one parquet file per
 microbatch, mtime-ordered, ``maxFilesPerTrigger=1`` under
@@ -60,6 +62,7 @@ N_FILES = 18                 # real data files (one microbatch each)
 ROWS_PER_FILE = 40
 DUP_ROWS = 10                # odd files repeat 10 exact rows of file b-1
 KILL_BATCHES = (5, 11)       # SIGKILL all executors when these start
+EVENT_TYPES = ("view", "click", "purchase")  # the rollup's key column
 ROCKSDB = ("org.apache.spark.sql.execution.streaming.state."
            "RocksDBStateStoreProvider")
 HDFS = ("org.apache.spark.sql.execution.streaming.state."
@@ -77,7 +80,7 @@ def main() -> None:
                                    TimestampType)
 
     from data_engineering_projects_spark.streaming.jobs import (
-        dedup_stream, hourly_rollup_stream)
+        dedup_stream, windowed_value_rollup)
 
     spark = (SparkSession.builder.master("local-cluster[2,1,1024]")
              .config("spark.sql.shuffle.partitions", "4")
@@ -104,12 +107,16 @@ def main() -> None:
 
     def wait_executors(n: int = 2, timeout: float = 90.0) -> None:
         deadline = time.time() + timeout
-        while time.time() < deadline and len(exec_pids()) < n:
+        while len(seen := exec_pids()) < n:
+            if time.time() >= deadline:
+                raise RuntimeError(
+                    f"{len(seen)} of {n} executors up after {timeout:.0f}s")
             time.sleep(0.5)
 
     schema = StructType([
         StructField("ts", TimestampType()),
         StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
         StructField("value", DoubleType()),
         StructField("fp", StringType()),
     ])
@@ -123,26 +130,27 @@ def main() -> None:
         for i in range(ROWS_PER_FILE):
             src = b - 1 if (b % 2 == 1 and i < DUP_ROWS) else b
             ms = base_ms + src * 60_000 + i * 1_000
-            rows.append((ms, (i % 4), float((src * 7 + i) % 100),
+            # a fractional value: the rollup sums it as decimal(18,2)
+            rows.append((ms, (i % 4), EVENT_TYPES[i % len(EVENT_TYPES)],
+                         float((src * 7 + i) % 100) + 0.25,
                          f"fp-{src}-{i}"))
         return rows
 
+    row_schema = ("ms long, user_id long, event_type string, "
+                  "value double, fp string")
     for b in range(N_FILES):
-        df = spark.createDataFrame(
-            [(r[0], r[1], r[2], r[3]) for r in file_rows(b)],
-            "ms long, user_id long, value double, fp string"
-        ).select(F.timestamp_millis("ms").alias("ts"),
-                 "user_id", "value", "fp").coalesce(1)
+        df = spark.createDataFrame(file_rows(b), row_schema).select(
+            F.timestamp_millis("ms").alias("ts"),
+            "user_id", "event_type", "value", "fp").coalesce(1)
         df.write.mode("overwrite").parquet(f"{in_dir}/b{b:03d}.tmp")
         part = glob.glob(f"{in_dir}/b{b:03d}.tmp/part-*.parquet")[0]
         os.replace(part, f"{in_dir}/batch{b:03d}.parquet")
         shutil.rmtree(f"{in_dir}/b{b:03d}.tmp")
     # flush row a day later: watermark passes every real window
     flush = spark.createDataFrame(
-        [(base_ms + 86_400_000, 0, 0.0, "fp-flush")],
-        "ms long, user_id long, value double, fp string"
+        [(base_ms + 86_400_000, 0, "flush", 0.0, "fp-flush")], row_schema
     ).select(F.timestamp_millis("ms").alias("ts"),
-             "user_id", "value", "fp").coalesce(1)
+             "user_id", "event_type", "value", "fp").coalesce(1)
     flush.write.mode("overwrite").parquet(f"{in_dir}/zf.tmp")
     part = glob.glob(f"{in_dir}/zf.tmp/part-*.parquet")[0]
     os.replace(part, f"{in_dir}/zflush.parquet")
@@ -154,9 +162,8 @@ def main() -> None:
 
     JOBS = {
         "dedup": lambda src: dedup_stream(src, watermark="10 minutes"),
-        "rollup": lambda src: hourly_rollup_stream(
-            src.select("ts", "user_id", "value"),
-            watermark="10 minutes", window_len="5 minutes"),
+        "rollup": lambda src: windowed_value_rollup(
+            src, F.window("ts", "5 minutes"), watermark="10 minutes"),
     }
 
     kills_total = {"n": 0}
@@ -203,8 +210,6 @@ def main() -> None:
         wait_executors()
 
         out = spark.read.parquet(sink)   # metadata-aware: committed only
-        if job == "rollup":
-            out = out.withColumn("avg_value", F.round("avg_value", 9))
         rows = sorted(tuple(r) for r in out.collect())
         committed = out.select(
             F.input_file_name().alias("f")).distinct().count()

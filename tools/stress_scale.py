@@ -117,21 +117,6 @@ FAMILIES = {
     # partition histograms, and skew_report's tier decisions (r10
     # verdict #7).
     "skew": [],
-    # special-cased in main() (round 15, verdict #1): a REAL long
-    # tiered-compaction stream — --mults gives the batch count(s)
-    # (>=512 for the simulation's first big-ratio row). Appends batches
-    # through the production protocol with tiered maintenance
-    # (trigger 8, forced cap 16), measuring live-dir count vs the
-    # ~trigger+log2(T) bound, measured rewrite I/O vs the O(T log T)
-    # schedule and vs the retired full-refold schedule, maintenance vs
-    # append wall split, and admission identity vs an uncompacted
-    # reference state.
-    "tiered_stream": [],
-    # special-cased in main(): free-running concurrent reader against a
-    # real append+compaction stream with forced folds (round 16,
-    # verdict #4) — every successful read must be a consistent
-    # pre-/post-fold snapshot; rename races count as retryable errors.
-    "reader_race": [],
     # special-cased in main(): the IVF-PQ recall-vs-cost operating grid
     # (r10 verdict #5) — recall@10 + wall across (nprobe x overfetch)
     # at 1x and 5x corpus with the index trained on the 1x corpus.
@@ -143,15 +128,6 @@ FAMILIES = {
     # hot-list-aggregate wall alone, and the full candidate join capped
     # vs with the cap forced off (bucket_cap=None - the pre-cap plan).
     "hotlist": [],
-    # special-cased in main(): streaming corpus ingestion state
-    # maintenance (r11 verdict #5 + r12 ADVICE medium): B micro-batches
-    # of novel docs driven through the foreachBatch state protocols
-    # directly. Claims: per-batch wall FLAT vs corpus age under the
-    # round-12 append layout (batch=<bid> dirs) while the round-11
-    # full-rewrite swap grows with corpus age (the quadratic-cumulative
-    # term the ADVICE named); exactly one _applied_ marker; one batch
-    # dir per applied batch; admissions identical across layouts.
-    "corpus_stream": [],
     # special-cased in main(): the ivfpq grid re-run on a CLUSTERED
     # embedding corpus (r11 verdict #4 — the r11 grid used uniform
     # random vectors, PQ's worst case; production recall claims need a
@@ -797,411 +773,6 @@ def run_ivfpq(spark, base: str, mults: list[int]) -> list[dict]:
     return results
 
 
-def run_corpus_stream(spark, base: str, mults: list[int],
-                      n_batches: int = 20) -> list[dict]:
-    """Streaming corpus ingestion state maintenance, append layout vs
-    full-rewrite swap (see FAMILIES['corpus_stream']). The foreachBatch
-    body is invoked directly — stream-machinery fixed cost is measured
-    separately by bench's streaming_fixed_overhead — so per-batch wall
-    isolates exactly the state protocol + admission pipeline. Batches
-    partition the (rotated) documents table by doc_id % n_batches, so
-    every batch carries novel docs and the corpus grows ~linearly; a
-    flat wall curve therefore means cost rides the BATCH, a rising one
-    means cost rides corpus age."""
-    import shutil as _sh
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.pipelines.corpus import (
-        extend_corpus, prepare_corpus)
-    from data_engineering_projects_spark.sources import load_table, widen
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _apply_batch_with_state_swap,
-        _corpus_stream_apply, read_corpus_state)
-
-    results = []
-    for mult in mults:
-        base_tag = os.path.basename(os.path.normpath(base))
-        sf_dir = (base if mult == 1
-                  else f"/tmp/depa_stress_{base_tag}_cstream_x{mult}")
-        if mult > 1:
-            build_fixture(base, mult, sf_dir, rotate_docs=True)
-        docs = (widen(load_table(spark, sf_dir, "documents"))
-                .select("doc_id", "text", "source", "lang").persist())
-        docs.count()
-        batches = [docs.filter(F.col("doc_id") % n_batches == b)
-                   for b in range(n_batches)]
-
-        def drive(mode: str) -> dict:
-            state = tempfile.mkdtemp(prefix=f"cstream_{mode}_")
-            _sh.rmtree(state)  # helpers create it themselves
-            walls = []
-            for b in range(n_batches):
-                cleanups = []
-
-                def build(old):
-                    res = (prepare_corpus(batches[b]) if old is None
-                           else extend_corpus(old, batches[b]))
-                    cleanups.append(res)
-                    return res.docs
-
-                def merge(old):  # the round-11 full-rewrite shape
-                    new = build(old)
-                    return new if old is None else old.unionByName(new)
-
-                t0 = time.perf_counter()
-                if mode == "append":
-                    _append_batch_with_marker(spark, state, b, build)
-                elif mode == "append_index":
-                    # the full production body: corpus append + derived
-                    # shingle/band index states fed back through the
-                    # extend_corpus state-reuse hooks (per-batch compute
-                    # O(batch) — the corpus is never re-signed)
-                    _corpus_stream_apply(
-                        spark, state, batches[b], b,
-                        dict(quality_min=0.2, jaccard_min=0.5,
-                             shingle_k=3, split_weights=None,
-                             split_seed=42))
-                else:
-                    _apply_batch_with_state_swap(spark, state, b, merge)
-                walls.append(round(time.perf_counter() - t0, 2))
-                for r in cleanups:
-                    r.unpersist()
-            rows = (spark.read.parquet(state).count()
-                    if mode == "swap"
-                    else read_corpus_state(spark, state).count())
-            files = os.listdir(state)
-            out = {
-                "mode": mode, "mult": mult, "rows": rows,
-                "walls": walls,
-                "first5_sec": round(sum(walls[:5]), 2),
-                "last5_sec": round(sum(walls[-5:]), 2),
-                "markers": sum(f.startswith("_applied_") for f in files),
-                "batch_dirs": sum(f.startswith("batch=") for f in files),
-            }
-            _sh.rmtree(state, ignore_errors=True)
-            return out
-
-        recs = {m: drive(m)
-                for m in ("append", "append_index", "swap")}
-        assert recs["append"]["rows"] == recs["swap"]["rows"] \
-            == recs["append_index"]["rows"], recs
-        for rec in recs.values():
-            results.append(rec)
-            print(json.dumps(rec), flush=True)
-        docs.unpersist()
-    return results
-
-
-def run_tiered_stream(spark, n_batches: int, rows_per_batch: int = 200,
-                      trigger: int = 8, cap: int = 16,
-                      profile: str = "equal") -> dict:
-    """A REAL >=512-batch tiered-compaction stream (round 15, verdict
-    #1): every scaling claim for `tiered_compact_append_state` rested
-    on a unit-tested schedule SIMULATION plus a 30-batch measured run;
-    this executes the production append+maintenance protocol for
-    ``n_batches`` real micro-batches and measures what the simulation
-    predicted. The driver keeps its own (batch -> rows) ledger, so
-    measured rewrite I/O is exact (folded ranges are returned by the
-    maintenance call); an uncompacted reference state is built from
-    the same batches for the admission-identity check.
-
-    ``profile="shrink"`` (round 15): strictly-decreasing batch sizes —
-    the dedup-saturation regime where the slack-1.0 rule stalls and
-    the forced cap carries the dir bound; measures the forced path's
-    REAL amplification (degraded vs log2 T by design — bounded dirs is
-    the contract) and counts forced fires."""
-    import math
-    import shutil as _sh
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _batch_dir_ids, read_corpus_state,
-        tiered_compact_append_state)
-
-    state = tempfile.mkdtemp(prefix="tiered_stream_")
-    ref = tempfile.mkdtemp(prefix="tiered_ref_")
-    for d in (state, ref):
-        _sh.rmtree(d)
-    cache: dict[int, int] = {}
-    ledger: dict[int, int] = {}   # driver-side truth of dir sizes
-    rewritten = 0                 # measured fold I/O (rows read+written)
-    append_sec = maint_sec = 0.0
-    max_live = folds = forced = 0
-    live_trace = []
-
-    def batch_rows(b: int) -> int:
-        if profile == "shrink":  # strictly decreasing, never equal
-            return max(2, 2 * (n_batches - b))
-        if profile == "geoshrink":
-            # adversarial >2x-per-batch shrink (round 16, verdict #5):
-            # each batch is 2.5x smaller than the last until the 1-row
-            # integer floor. The regime is SELF-TERMINATING: integer
-            # sizes >= 1 can't halve for more than log2(N0) batches, so
-            # the forced path's degraded amplification applies only
-            # inside a ~log-length window, after which the equal-tiny
-            # tail is back in the regular rule's regime.
-            return max(1, int(50_000 * 0.4 ** b))
-        if profile == "geocycle":
-            # SUSTAINED adversarial shrink (round 16, verdict #5): the
-            # pure geometric profile turned out benign (the 1-row floor
-            # hands the tail back to the regular rule: 0 forced folds,
-            # amplification 0.01 at T=256), so the regime that actually
-            # keeps stall pressure on forever is CYCLIC — >2x shrink
-            # for 12 batches, then restart big. Within every cycle the
-            # regular rule stalls (each dir smaller than the one
-            # before), so the forced path must carry the dir bound for
-            # the stream's whole life; this measures its amplification.
-            return max(1, int(50_000 * 0.4 ** (b % 12)))
-        return rows_per_batch
-
-    def batch_df(b: int):
-        # lit(b) must be LONG: an int32 lit overflows at batch 2148
-        # (2.148e9 > 2^31-1) and ANSI mode kills the stream — found by
-        # the 4096-batch curve point; 2048 fit int32 by 5%.
-        return spark.range(batch_rows(b)).select(
-            (F.lit(b).cast("long") * 1_000_000 + F.col("id")).alias("k"))
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        tiered_compact_plan)
-
-    for b in range(n_batches):
-        t0 = time.perf_counter()
-        _append_batch_with_marker(spark, state, b,
-                                  lambda old: batch_df(b))
-        append_sec += time.perf_counter() - t0
-        ledger[b] = batch_rows(b)
-        if len(_batch_dir_ids(state)) >= trigger:
-            regular = tiered_compact_plan(sorted(ledger.items()))
-            t0 = time.perf_counter()
-            rng = tiered_compact_append_state(
-                spark, state, force_fold_at=cap, sizes_cache=cache)
-            maint_sec += time.perf_counter() - t0
-            if rng is not None:
-                if regular is None:
-                    forced += 1
-                lo, hi = rng
-                fold_rows = sum(n for i, n in ledger.items()
-                                if lo <= i <= hi)
-                rewritten += fold_rows
-                for i in [i for i in ledger if lo <= i <= hi]:
-                    del ledger[i]
-                ledger[hi] = fold_rows
-                folds += 1
-        live = len(_batch_dir_ids(state))
-        live_trace.append(live)
-        max_live = max(max_live, live)
-
-    got = read_corpus_state(spark, state).groupBy().agg(
-        F.count("*").alias("n"), F.sum("k").alias("s"),
-        F.countDistinct("k").alias("d")).collect()[0]
-    if n_batches <= 512:
-        # uncompacted reference: same rows, plain appends. Only at
-        # small T: the reference's own per-append listdir over an
-        # ever-growing dir set is O(T^2) — the 2048-batch first
-        # attempt spent its entire budget building the REFERENCE
-        # (the compacted stream finished fine), which is the
-        # small-files pathology compaction exists to remove.
-        for b in range(n_batches):
-            _append_batch_with_marker(spark, ref, b,
-                                      lambda old: batch_df(b))
-        want = read_corpus_state(spark, ref).groupBy().agg(
-            F.count("*").alias("n"), F.sum("k").alias("s"),
-            F.countDistinct("k").alias("d")).collect()[0]
-        want_t = (want["n"], want["s"], want["d"])
-        identity_check = "uncompacted_reference"
-    else:
-        # closed form of the deterministic batch construction:
-        # batch b holds k = b*1e6 + i for i in [0, rows_b)
-        want_t = (total_rows := sum(batch_rows(b)
-                                    for b in range(n_batches)),
-                  sum(b * 1_000_000 * batch_rows(b)
-                      + batch_rows(b) * (batch_rows(b) - 1) // 2
-                      for b in range(n_batches)),
-                  total_rows)
-        identity_check = "closed_form"
-    identical = (got["n"], got["s"], got["d"]) == want_t
-
-    total_rows = sum(batch_rows(b) for b in range(n_batches))
-    # the retired full-refold schedule's I/O at the same trigger,
-    # simulated: every trigger rewrites the whole corpus so far
-    full_io, live, acc = 0, 0, 0
-    for b in range(n_batches):
-        live += 1
-        acc += batch_rows(b)
-        if live >= trigger:
-            full_io += acc
-            live = 1
-    out = {
-        "n_batches": n_batches, "profile": profile,
-        "rows_per_batch": rows_per_batch,
-        "trigger": trigger, "cap": cap, "folds": folds,
-        "forced_folds": forced,
-        "identical_to_uncompacted": identical,
-        "max_live_dirs": max_live,
-        "dir_bound": trigger + math.ceil(math.log2(n_batches)),
-        "final_live_dirs": live_trace[-1],
-        "rewritten_rows": rewritten, "total_rows": total_rows,
-        "rewrite_amplification": round(rewritten / total_rows, 2),
-        "amplification_bound_log2T":
-            round(math.log2(n_batches), 2),
-        "full_refold_rows": full_io,
-        "io_vs_full_refold": round(full_io / max(rewritten, 1), 1),
-        "append_sec": round(append_sec, 1),
-        "maint_sec": round(maint_sec, 1),
-        "identity_check": identity_check,
-        "uncompacted_dirs": (len(_batch_dir_ids(ref))
-                             if identity_check == "uncompacted_reference"
-                             else n_batches),
-    }
-    _sh.rmtree(state, ignore_errors=True)
-    _sh.rmtree(ref, ignore_errors=True)
-    return out
-
-
-def run_reader_race(spark, n_batches: int = 120, rows_per_batch: int = 20,
-                    trigger: int = 6, cap: int = 12,
-                    subprocess_reader: bool = False) -> dict:
-    """Free-running concurrent-reader race (round 16, verdict #4): the
-    round-15 interleaving walk pins every handoff point of the fold
-    protocol DETERMINISTICALLY; this complements it with a reader
-    thread calling :func:`read_corpus_state` in a tight loop — no
-    coordination, no pinned points — against a real append+compaction
-    stream with forced folds. Every successful read must be a
-    CONSISTENT snapshot: exactly the rows of complete batches 0..k for
-    some k (appends are atomic renames, folds preserve row sets), with
-    no partial batch, no missing middle batch, no duplicate. Reads that
-    lose the race to the writer's final rename may error — counted as
-    ``retryable``, never as wrong rows. This is the test shape that
-    catches listing races an enumerated walk can't (e.g. the r16
-    fast-path re-validation window).
-
-    ``subprocess_reader=True`` (round 16 extension) runs the reader in
-    a SEPARATE python/JVM process (tools/reader_race_child.py) instead
-    of a thread: no shared JVM, no shared Hadoop FileSystem cache, no
-    shared file-index state — the honest model of an independent job
-    reading the corpus while the maintenance stream runs."""
-    import shutil as _sh
-    import subprocess as _sp
-    import sys as _sys
-    import tempfile
-    import threading
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_projects_spark.streaming.jobs import (
-        _append_batch_with_marker, _batch_dir_ids, read_corpus_state,
-        tiered_compact_append_state)
-
-    state = tempfile.mkdtemp(prefix="reader_race_")
-    _sh.rmtree(state)
-
-    def batch_df(b: int):
-        # LONG lit: same int32-overflow guard as run_tiered_stream
-        return spark.range(rows_per_batch).select(
-            (F.lit(b).cast("long") * 1_000_000 + F.col("id")).alias("k"))
-
-    expect_batch = [list(range(b * 1_000_000, b * 1_000_000
-                               + rows_per_batch))
-                    for b in range(n_batches)]
-    stop = threading.Event()
-    stats = {"reads": 0, "retryable": 0, "bad": 0, "bad_samples": []}
-
-    def reader():
-        while not stop.is_set():
-            try:
-                ks = sorted(r["k"] for r in
-                            read_corpus_state(spark, state).collect())
-            except Exception:
-                stats["retryable"] += 1
-                continue
-            stats["reads"] += 1
-            if not ks:
-                continue
-            kmax = ks[-1] // 1_000_000
-            want = [k for b in range(kmax + 1) for k in expect_batch[b]]
-            if ks != want:
-                stats["bad"] += 1
-                if len(stats["bad_samples"]) < 3:
-                    got_by_batch = {}
-                    for k in ks:
-                        got_by_batch[k // 1_000_000] = \
-                            got_by_batch.get(k // 1_000_000, 0) + 1
-                    stats["bad_samples"].append(got_by_batch)
-
-    cache: dict[int, int] = {}
-    folds = 0
-    _append_batch_with_marker(spark, state, 0, lambda old: batch_df(0))
-    child = stop_file = None
-    t = None
-    if subprocess_reader:
-        stop_file = state + "__reader_stop"
-        here = os.path.dirname(os.path.abspath(__file__))
-        child = _sp.Popen(
-            [_sys.executable, os.path.join(here, "reader_race_child.py"),
-             "--state", state, "--rows-per-batch", str(rows_per_batch),
-             "--stop-file", stop_file],
-            stdout=_sp.PIPE, stderr=_sp.DEVNULL, text=True)
-        time.sleep(12)  # let the child's session come up mid-stream
-    else:
-        t = threading.Thread(target=reader, daemon=True)
-        t.start()
-    try:
-        for b in range(1, n_batches):
-            _append_batch_with_marker(spark, state, b,
-                                      lambda old: batch_df(b))
-            if len(_batch_dir_ids(state)) >= trigger:
-                rng = tiered_compact_append_state(
-                    spark, state, force_fold_at=cap, sizes_cache=cache)
-                if rng is not None:
-                    folds += 1
-    finally:
-        stop.set()
-        if child is not None:
-            # robust teardown (round 17, from ADVICE): a hung child must
-            # be killed (not left running with the state dir undeleted),
-            # the stop file must be removed on every path, and empty
-            # child output must surface as the child's real failure
-            # instead of an IndexError from the parse.
-            open(stop_file, "w").close()
-            try:
-                try:
-                    out, _ = child.communicate(timeout=180)
-                except _sp.TimeoutExpired:
-                    child.kill()
-                    child.communicate()
-                    raise RuntimeError(
-                        "reader child did not exit within 180s of the "
-                        "stop file; killed")
-                lines = (out or "").strip().splitlines()
-                if not lines:
-                    raise RuntimeError(
-                        f"reader child exited rc={child.returncode} "
-                        f"with no output")
-                stats.update(json.loads(lines[-1]))
-            finally:
-                try:
-                    os.remove(stop_file)
-                except OSError:
-                    pass
-        else:
-            t.join(timeout=120)
-    final = sorted(r["k"] for r in
-                   read_corpus_state(spark, state).collect())
-    want_all = [k for b in range(n_batches) for k in expect_batch[b]]
-    out = {"n_batches": n_batches, "folds": folds,
-           "reads": stats["reads"], "retryable": stats["retryable"],
-           "bad_reads": stats["bad"],
-           "bad_samples": stats["bad_samples"],
-           "final_identical": final == want_all,
-           "live_dirs": len(_batch_dir_ids(state))}
-    _sh.rmtree(state, ignore_errors=True)
-    return out
-
-
 def _make_clustered_embeddings(spark, out_dir: str, n: int,
                                n_clusters: int = 8, dim: int = 64,
                                noise: float = 0.15) -> None:
@@ -1604,14 +1175,9 @@ def main() -> int:
     ap.add_argument("--mults", default="1,2,5")
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--master", default="local[16]")
-    ap.add_argument("--profile", default="equal",  # tiered_stream only
-                    choices=["equal", "shrink", "geoshrink", "geocycle"])
     ap.add_argument("--keep-stopwords", action="store_true",
                     help="corpus family: stopword-preserving cipher "
                          "(round 16, verdict #6)")
-    ap.add_argument("--subprocess-reader", action="store_true",
-                    help="reader_race family: reader in a separate "
-                         "python/JVM process instead of a thread")
     args = ap.parse_args()
     queries = FAMILIES[args.family]
 
@@ -1623,14 +1189,6 @@ def main() -> int:
     spark = get_session("stress", master=args.master,
                         shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
-
-    if args.family == "reader_race":
-        n = max(int(m) for m in args.mults.split(","))
-        out = run_reader_race(spark, n_batches=max(n, 2),
-                              subprocess_reader=args.subprocess_reader)
-        print(json.dumps({"summary": out}))
-        spark.stop()
-        return 0
 
     if args.family == "corpus":
         mults = [int(m) for m in args.mults.split(",")]
@@ -1672,16 +1230,6 @@ def main() -> int:
         mult = max(int(m) for m in args.mults.split(","))
         out = run_skew(spark, args.base, mult)
         print(json.dumps({"summary": out}))
-        spark.stop()
-        return 0
-
-    if args.family == "tiered_stream":
-        summary = {}
-        for n in [int(m) for m in args.mults.split(",")]:
-            rec = run_tiered_stream(spark, n, profile=args.profile)
-            summary[str(n)] = rec
-            print(json.dumps(rec), flush=True)
-        print(json.dumps({"summary": summary}))
         spark.stop()
         return 0
 
@@ -1745,22 +1293,6 @@ def main() -> int:
                 f"nprobe={r['nprobe']},overfetch={r['overfetch']}"] = {
                 "recall": r["recall"], "sec": r["sec"]}
         print(json.dumps({"summary": grid, "clustered": True}))
-        spark.stop()
-        return 0
-
-    if args.family == "corpus_stream":
-        mults = [int(m) for m in args.mults.split(",")]
-        results = run_corpus_stream(spark, args.base, mults)
-        summary = {}
-        for r in results:
-            summary[f"{r['mode']}_x{r['mult']}"] = {
-                "rows": r["rows"],
-                "first5_sec": r["first5_sec"],
-                "last5_sec": r["last5_sec"],
-                "late_vs_early": round(r["last5_sec"]
-                                       / max(r["first5_sec"], .01), 2),
-                "markers": r["markers"], "batch_dirs": r["batch_dirs"]}
-        print(json.dumps({"summary": summary}))
         spark.stop()
         return 0
 
