@@ -33,6 +33,7 @@ from ..functions.text import (
 from ..functions.determinism import (DEC_AVG_SQL, FOLD_SUM_SQL, dec_avg,
                                      fold_sum, spark_pct_sql)
 from ..functions.vectors import cosine_similarity, cosine_sql
+from ..functions import metrics as M
 from ..operators.clustering import (
     connected_components_star, min_label_sql, propagate_min_labels,
     DEFAULT_CC_ITERS)
@@ -1567,8 +1568,8 @@ def docs_length_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 1-ulp threshold drift below an integer would flip n_kept for
     every row sitting exactly at the band edge."""
     d = widen(load_table(spark, sf_dir, "documents"))
-    q = d.agg(F.percentile(F.col("n_chars").cast("double"), 0.05).alias("lo"),
-              F.percentile(F.col("n_chars").cast("double"), 0.95).alias("hi"))
+    lo, hi = M.percentiles(F.col("n_chars").cast("double"), 0.05, 0.95)
+    q = d.agg(lo.alias("lo"), hi.alias("hi"))
     j = d.crossJoin(F.broadcast(q))
     kept = ((F.col("n_chars") >= F.col("lo"))
             & (F.col("n_chars") <= F.col("hi"))).cast("int")

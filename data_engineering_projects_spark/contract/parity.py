@@ -41,15 +41,20 @@ def _tt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.withColumn("period", period_bucket(F.col("ts")))
 
 
+def _tt_pcts() -> list:
+    """p50/p85/p95 of value as ``tt50``/``tt85``/``tt95``, from one
+    Percentile aggregate (``M.percentiles``)."""
+    tt50, tt85, tt95 = M.percentiles("value", 0.5, 0.85, 0.95)
+    return [tt50.alias("tt50"), tt85.alias("tt85"), tt95.alias("tt95")]
+
+
 def _tti_per_key(spark, sf_dir, keys: list):
     """Shared: exact p50/p85/p95 of value per key set (1_AWS/README.md:95-103)."""
     return (
         _tt(spark, sf_dir)
         .filter(F.col("period").isNotNull())
         .groupBy(*keys)
-        .agg(F.percentile("value", 0.5).alias("tt50"),
-             F.percentile("value", 0.85).alias("tt85"),
-             F.percentile("value", 0.95).alias("tt95"))
+        .agg(*_tt_pcts())
         .withColumn("tti", M.tti(F.col("tt85"), F.col("tt50")))
         .withColumn("pti", M.pti(F.col("tt95"), F.col("tt50")))
     )
@@ -130,9 +135,7 @@ def azure_severity_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2_Azure/READ.md:62-82)."""
     ev = load_table(spark, sf_dir, "events")
     agg = (ev.groupBy("user_id")
-             .agg(F.percentile("value", 0.5).alias("tt50"),
-                  F.percentile("value", 0.85).alias("tt85"),
-                  F.percentile("value", 0.95).alias("tt95"))
+             .agg(*_tt_pcts())
              .withColumn("tti", M.tti(F.col("tt85"), F.col("tt50")))
              .withColumn("pti", M.pti(F.col("tt95"), F.col("tt50")))
              .withColumn("severity", M.severity(F.col("tti"), F.col("pti"))))
@@ -168,9 +171,7 @@ def azure_variability_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     per_week = (ev.withColumn("wk", F.weekofyear("ts"))
                   .groupBy("user_id", "wk")
-                  .agg(F.percentile("value", 0.5).alias("tt50"),
-                       F.percentile("value", 0.85).alias("tt85"),
-                       F.percentile("value", 0.95).alias("tt95"))
+                  .agg(*_tt_pcts())
                   .withColumn("variability",
                               M.variability(M.tti(F.col("tt85"), F.col("tt50")),
                                             M.pti(F.col("tt95"), F.col("tt50")))))
@@ -214,7 +215,7 @@ def bq_tti_trend_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
            .filter(F.col("period").isNotNull())
            .withColumn("day", F.to_date("ts"))
            .groupBy("user_id", "day", "period")
-           .agg((F.percentile("value", 0.85) / F.percentile("value", 0.5)).alias("tti"))
+           .agg(M.tti(*M.percentiles("value", 0.85, 0.5)).alias("tti"))
            # read twice (top-10 derivation + semi-join probe): persist the
            # small aggregated relation instead of re-running the exact-
            # percentile shuffle over the raw events
@@ -241,7 +242,7 @@ def bq_exceedance(spark: SparkSession, sf_dir: str) -> DataFrame:
            .filter(F.col("period").isNotNull())
            .withColumn("day", F.to_date("ts"))
            .groupBy("user_id", "day", "period")
-           .agg((F.percentile("value", 0.85) / F.percentile("value", 0.5)).alias("tti")))
+           .agg(M.tti(*M.percentiles("value", 0.85, 0.5)).alias("tti")))
     return (tti.groupBy("user_id", "period")
                .agg(F.round(F.avg(M.exceedance_flag(F.col("tti"))), 6).alias("exceed_rate"),
                     F.count(F.lit(1)).alias("n_days")))
@@ -275,7 +276,7 @@ def snowflake_lottr_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     lottr = (_tt(spark, sf_dir)
              .filter(F.col("period").isNotNull())
              .groupBy("user_id", "period")
-             .agg((F.percentile("value", 0.8) / F.percentile("value", 0.5)).alias("lottr")))
+             .agg(M.lottr(*M.percentiles("value", 0.8, 0.5)).alias("lottr")))
     piv = pivot_agg(lottr, ["user_id"], "period", ["amp", "mid", "pmp", "we"],
                     F.first("lottr"), fill=None)
     return piv.select("user_id",
@@ -325,7 +326,7 @@ def snowflake_lottr_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              .withColumn("day", F.to_date("ts"))
              .withColumn("bucket", F.col("user_id") % 64)
              .groupBy("day", "user_id", "bucket", "period")
-             .agg((F.percentile("value", 0.8) / F.percentile("value", 0.5)).alias("lottr")))
+             .agg(M.lottr(*M.percentiles("value", 0.8, 0.5)).alias("lottr")))
     buckets = (lottr.filter(F.col("lottr").isNotNull())
                .groupBy("day", "bucket")
                .agg(fold_sum(F.col("lottr")).alias("bsum"),

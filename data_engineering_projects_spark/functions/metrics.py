@@ -15,6 +15,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def percentiles(col, *ps: float) -> list[Column]:
+    """Exact percentiles of ``col`` at each of ``ps`` from ONE ``Percentile``
+    aggregate: ``F.percentile`` over the array of ``ps``, indexed. Use the
+    returned columns in one ``agg``; Spark keeps one buffer (one copy of
+    the group's value counts) for all of them, where a ``F.percentile``
+    per fraction keeps and shuffles one each. Each element runs the same
+    ``getPercentile`` as the scalar form, so values are bit-identical."""
+    pct = F.percentile(col, list(ps))
+    return [pct[i] for i in range(len(ps))]
+
+
 def tti(p85: Column, p50: Column) -> Column:
     """Travel Time Index = p85/p50 (1_AWS/README.md:101-103)."""
     return p85 / p50

@@ -29,10 +29,9 @@ def aws_monthly_tti(travel_times: DataFrame, tmc_shapes: DataFrame,
     tt = (travel_times
           .withColumn("period", period_bucket(F.col("measurement_tstamp")))
           .filter(F.col("period").isNotNull()))
+    tt50, tt85, tt95 = M.percentiles("travel_time_seconds", 0.5, 0.85, 0.95)
     agg = (tt.groupBy("tmc_code", "period")
-             .agg(F.percentile("travel_time_seconds", 0.5).alias("tt50"),
-                  F.percentile("travel_time_seconds", 0.85).alias("tt85"),
-                  F.percentile("travel_time_seconds", 0.95).alias("tt95"))
+             .agg(tt50.alias("tt50"), tt85.alias("tt85"), tt95.alias("tt95"))
              .withColumn("tti", M.tti(F.col("tt85"), F.col("tt50")))
              .withColumn("pti", M.pti(F.col("tt95"), F.col("tt50"))))
     enriched = (agg.join(F.broadcast(tmc_shapes), "tmc_code", "left")

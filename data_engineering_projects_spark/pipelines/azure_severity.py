@@ -24,10 +24,9 @@ def azure_yearly_severity(travel_times: DataFrame, tmc_shapes: DataFrame,
     Outputs (2_Azure/READ.md:98-107): severity_summary (top-k per year,
     appended), variability_summary (top-k cross-year averages, replaced).
     """
+    tt50, tt85, tt95 = M.percentiles("travel_time_seconds", 0.5, 0.85, 0.95)
     q = (travel_times.groupBy("tmc_code", "year")
-         .agg(F.percentile("travel_time_seconds", 0.5).alias("tt50"),
-              F.percentile("travel_time_seconds", 0.85).alias("tt85"),
-              F.percentile("travel_time_seconds", 0.95).alias("tt95"))
+         .agg(tt50.alias("tt50"), tt85.alias("tt85"), tt95.alias("tt95"))
          .withColumn("tti", M.tti(F.col("tt85"), F.col("tt50")))
          .withColumn("pti", M.pti(F.col("tt95"), F.col("tt50")))
          .withColumn("severity", M.severity(F.col("tti"), F.col("pti")))

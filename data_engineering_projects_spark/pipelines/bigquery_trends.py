@@ -28,9 +28,9 @@ def bigquery_tti_trends(travel_times: DataFrame, tmc_shapes: DataFrame,
     tt = (travel_times
           .withColumn("period", period_bucket(F.col("measurement_tstamp")))
           .filter(F.col("period").isNotNull()))
+    tt50, tt85 = M.percentiles("travel_time_seconds", 0.5, 0.85)
     tti = (tt.groupBy("tmc_code", "year", "period")
-             .agg(F.percentile("travel_time_seconds", 0.5).alias("tt50"),
-                  F.percentile("travel_time_seconds", 0.85).alias("tt85"))
+             .agg(tt50.alias("tt50"), tt85.alias("tt85"))
              .withColumn("tti", M.tti(F.col("tt85"), F.col("tt50"))))
     summary = (tti.join(F.broadcast(tmc_shapes), "tmc_code", "left")
                   .filter(F.col("county") == county)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.temporal import period_bucket
+from ..functions import metrics as M
 from ..operators.pivot import pivot_agg
 from ..operators.windows import pct_change
 
@@ -31,8 +32,8 @@ def snowflake_lottr(travel_times: DataFrame, tmc_shapes: DataFrame,
           .withColumn("period", period_bucket(F.col("measurement_tstamp")))
           .filter(F.col("period").isNotNull()))
     lottr = (tt.groupBy("tmc_code", "year", "period")
-               .agg((F.percentile("travel_time_seconds", 0.8)
-                     / F.percentile("travel_time_seconds", 0.5)).alias("lottr")))
+               .agg(M.lottr(*M.percentiles("travel_time_seconds", 0.8, 0.5))
+                    .alias("lottr")))
     lottr = (lottr.join(F.broadcast(tmc_shapes), "tmc_code", "left")
                   .filter(F.col("county") == county))
     lottr = lottr.cache()

@@ -40,10 +40,12 @@ def _staged(df: DataFrame, path: str, target_file_bytes: int,
             max_files: int):
     """Run ``df``'s plan exactly once: write it flat to a staging directory
     beside ``path`` on the destination filesystem and yield ``(staged,
-    n_files)`` — the stage re-read with ``df``'s schema, and the file count
-    that puts ~``target_file_bytes`` of its exact compressed size into each
-    output file (capped at ``max_files``). The stage is deleted on exit,
-    whether or not the write succeeded."""
+    n_files, stage)`` — the stage re-read with ``df``'s schema, the file
+    count that puts ~``target_file_bytes`` of its exact compressed size
+    into each output file (capped at ``max_files``), and the stage's
+    Hadoop ``Path``, which :func:`_rename_onto` can commit as the output.
+    Whatever is still at the stage is deleted on exit, whether or not the
+    write succeeded."""
     spark = df.sparkSession
     stage = f"{path.rstrip('/')}._staging-{uuid.uuid4().hex}"
     jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(stage)
@@ -52,9 +54,24 @@ def _staged(df: DataFrame, path: str, target_file_bytes: int,
         df.write.parquet(stage)
         size = fs.getContentSummary(jpath).getLength()
         yield (spark.read.schema(df.schema).parquet(stage),
-               max(1, min(max_files, math.ceil(size / target_file_bytes))))
+               max(1, min(max_files, math.ceil(size / target_file_bytes))),
+               jpath)
     finally:
         fs.delete(jpath, True)
+
+
+def _rename_onto(spark, stage, path: str) -> None:
+    """Commit the finished ``stage`` (a Hadoop ``Path``) as ``path`` without
+    a Spark job: delete ``path``, since ``rename`` onto an existing
+    directory would nest the stage inside it, then rename. Atomic on
+    HDFS; on S3A the rename copies the stage's files. Cached frames over
+    ``path`` are refreshed, as an overwrite through Spark would."""
+    dst = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = dst.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs.delete(dst, True)
+    if not fs.rename(stage, dst):
+        raise IOError(f"could not rename {stage.toString()} onto {path}")
+    spark.catalog.refreshByPath(path)
 
 
 def write_compacted(df: DataFrame, path: str,
@@ -78,7 +95,11 @@ def write_compacted(df: DataFrame, path: str,
     rewrite from the stage on the destination filesystem. At 100 TB that
     is one upstream pass plus one rewrite of the output, where sizing
     from a row count and a bytes/row sample re-ran the upstream plan
-    three times. The layout:
+    three times. When the stage already is the final layout — one
+    output file, the stage holds exactly one data file, no
+    ``layout_cols`` or ``partition_by``, ``mode="overwrite"`` — the
+    stage is renamed onto ``path`` (:func:`_rename_onto`) instead of
+    rewritten, which saves the rewrite's two Spark jobs. The layout:
 
     - ``layout_cols`` given → ``repartitionByRange`` + ``sortWithinPartitions``
       on those columns: every output file covers a disjoint key range, so
@@ -92,11 +113,15 @@ def write_compacted(df: DataFrame, path: str,
     the file count used, capped at ``max_files`` (a tiny target on a huge
     input should never schedule an absurd shuffle width).
     """
-    with _staged(df, path, target_file_bytes, max_files) as (staged, n_files):
-        out = (staged.repartitionByRange(n_files, *layout_cols) if layout_cols
-               else staged.repartition(n_files))
-        write_parquet(out, path, mode=mode, partition_by=partition_by,
-                      sort_within_partitions=layout_cols)
+    with _staged(df, path, target_file_bytes, max_files) as (staged, n_files, stage):
+        if (n_files == 1 and not layout_cols and not partition_by
+                and mode == "overwrite" and len(staged.inputFiles()) == 1):
+            _rename_onto(df.sparkSession, stage, path)
+        else:
+            out = (staged.repartitionByRange(n_files, *layout_cols) if layout_cols
+                   else staged.repartition(n_files))
+            write_parquet(out, path, mode=mode, partition_by=partition_by,
+                          sort_within_partitions=layout_cols)
     return n_files
 
 
@@ -244,7 +269,7 @@ def write_zordered(df: DataFrame, path: str, zorder_cols: list[str],
     or ``approxQuantile``) and the clustered rewrite — one full shuffle,
     the price of any clustering — both read the stage, not ``df``.
     """
-    with _staged(df, path, target_file_bytes, max_files) as (staged, n_files):
+    with _staged(df, path, target_file_bytes, max_files) as (staged, n_files, _):
         code, _ = zorder_code(staged, zorder_cols, bits=bits, rank=rank)
         (staged.withColumn("__zorder__", code)
                .repartitionByRange(n_files, "__zorder__")

@@ -1,7 +1,9 @@
-"""Declared-schema sources for the engine.
+"""Sources for the engine.
 
 Covers SURVEY.md §2.1 S1–S5: CSV scans (S3A path or local glob), parquet
 star-schema scans, temp-view registration (the dbt ``source()`` analog).
+A star-schema table is read under the schema of its own parquet footer,
+read on the driver, so a table read runs no Spark job.
 The XCom JSON exchange (S5) is deliberately eliminated: a single lazy plan
 spans all stages, so no data ever round-trips through the driver.
 
@@ -14,10 +16,12 @@ Reference parity notes (citations into /root/reference):
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import tune
 
@@ -32,18 +36,22 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema parquet table with deterministic types
-    (see :func:`_typed` for the ``events.ts`` fix). The session's first
-    read applies :func:`session.tune`; later reads write no conf."""
+    (see :func:`_typed` for the ``events.ts`` fix) under the schema of
+    its parquet footer (:func:`_footer_schema`), so the read runs no
+    Spark job. The session's first read applies :func:`session.tune`;
+    later reads write no conf."""
     tune(spark)
-    return _typed(spark.read.parquet(f"{sf_dir}/{name}.parquet"), name)
+    path = f"{sf_dir}/{name}.parquet"
+    schema, _ = _footer_schema(spark, path)
+    return _typed(spark.read.schema(schema).parquet(path), name)
 
 
 def table_and_stream(spark: SparkSession, sf_dir: str,
                      name: str) -> tuple[DataFrame, DataFrame]:
     """:func:`load_table`'s frame and its streaming twin — the same typed
     frame, as a parquet file stream over the table's own files (no
-    copy) — over one schema inference (a Spark job): the file stream
-    needs a declared schema, and it takes the batch read's. The batch
+    copy). Both read the schema of the table's parquet footer, which the
+    file stream needs declared, so neither runs a Spark job. The batch
     frame serves to count the rows the stream will admit.
 
     A directory table streams its directory. A single-file table streams
@@ -52,11 +60,50 @@ def table_and_stream(spark: SparkSession, sf_dir: str,
     directory"), and the filter keeps sibling files out."""
     tune(spark)
     path = f"{sf_dir}/{name}.parquet"
-    raw = spark.read.parquet(path)
-    reader = spark.readStream.schema(raw.schema)
-    if not _is_dir(spark, path):
-        reader, path = reader.option("pathGlobFilter", f"{name}.parquet"), sf_dir
-    return _typed(raw, name), _typed(reader.parquet(path), name)
+    schema, is_dir = _footer_schema(spark, path)
+    reader = spark.readStream.schema(schema)
+    stream_path = path
+    if not is_dir:
+        reader = reader.option("pathGlobFilter", f"{name}.parquet")
+        stream_path = sf_dir
+    return (_typed(spark.read.schema(schema).parquet(path), name),
+            _typed(reader.parquet(stream_path), name))
+
+
+def _footer_schema(spark: SparkSession, path: str) -> tuple[StructType, bool]:
+    """The schema Spark's parquet inference gives ``path``, read on the
+    driver from one footer instead of by inference's Spark job, and
+    whether ``path`` is a directory. Works on any Hadoop filesystem.
+
+    The conversion is the one the inference job runs per file
+    (``ParquetFileFormat.readSchemaFromFooter`` with the session's
+    ``ParquetToSparkSchemaConverter``), so session confs such as
+    ``nanosAsLong`` apply as they would there. Like inference with
+    ``mergeSchema`` off, a directory takes the footer of its first data
+    file in path order; a directory with no data file at its top level
+    (a partitioned or an empty table) falls back to inference."""
+    jvm = spark.sparkContext._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    status = fs.getFileStatus(p)
+    is_dir = status.isDirectory()
+    if is_dir:
+        data = sorted((s for s in fs.listStatus(p) if s.isFile()
+                       and not s.getPath().getName().startswith(("_", "."))),
+                      key=lambda s: s.getPath().toString())
+        if not data:
+            return spark.read.parquet(path).schema, True
+        status = data[0]
+    footer = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    converter = pq.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf())
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), footer), converter)
+    return StructType.fromJson(json.loads(schema.json())), is_dir
 
 
 def _typed(df: DataFrame, name: str) -> DataFrame:
@@ -157,14 +204,6 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(conf).exists(p)
-
-
-def _is_dir(spark: SparkSession, path: str) -> bool:
-    """True when the existing ``path`` is a directory, on any Hadoop
-    filesystem (local, s3a://, hdfs://)."""
-    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.getFileStatus(p).isDirectory()
 
 
 def read_jsonl(spark: SparkSession, paths: list[str] | str, schema=None,

@@ -122,6 +122,45 @@ def test_table_read_writes_no_session_conf(spark, sf_dir, monkeypatch):
         assert fresh.conf.get("spark.sql.adaptive.enabled") == "false"
 
 
+def _jobs_run(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+    sc, group = spark.sparkContext, f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_read_runs_no_job_and_keeps_the_inferred_schema(spark, sf_dir,
+                                                              tmp_path):
+    """A table read takes its schema from the parquet footer on the
+    driver: ``load_table`` and ``table_and_stream`` run no Spark job,
+    where inference runs one, and give the schema inference gives, for
+    every star table and for a Spark-written directory table."""
+    from data_engineering_projects_spark.sources import (
+        STAR_TABLES, _footer_schema, _typed)
+    import os
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    spark.read.parquet(f"{sf}/events.parquet").repartition(3) \
+        .write.parquet(str(tmp_path / "events.parquet"))
+    tables = [(sf, n) for n in STAR_TABLES] + [(str(tmp_path), "events")]
+    for sf_dir, name in tables:
+        path = f"{sf_dir}/{name}.parquet"
+        frames, inferred = [], []
+        assert _jobs_run(spark, lambda: frames.extend(
+            [load_table(spark, sf_dir, name),
+             *table_and_stream(spark, sf_dir, name)])) == 0, path
+        assert _jobs_run(spark, lambda: inferred.append(
+            spark.read.parquet(path))) >= 1
+        raw = spark.read.schema(_footer_schema(spark, path)[0]).parquet(path)
+        assert raw.schema == inferred[0].schema, path
+        want = _typed(inferred[0], name).schema
+        assert all(f.schema == want for f in frames), path
+
+
 def test_typed_props_view_parses_once_and_prunes(spark, sf_dir):
     """The typed event-props source: struct field equals the per-call JSON
     path extraction, and a query that never touches the struct carries no
@@ -366,6 +405,44 @@ def test_write_compacted_staging_contract(spark, tmp_path):
     with pytest.raises(Exception, match="udf failed"):
         write_compacted(bad, str(tmp_path / "bad"))
     assert stages() == []
+
+
+def test_write_compacted_commits_a_one_file_stage_by_rename(spark, tmp_path):
+    """A one-file overwrite whose stage holds one data file is renamed onto
+    ``path``: no job runs after the stage write, the old multi-file
+    directory leaves no stale file, and no stage is left behind. A stage
+    of two files, an ``append`` and a ``partition_by`` write still go
+    through the rewrite."""
+    import glob
+    import os
+    from data_engineering_projects_spark.sinks import write_compacted
+
+    out = str(tmp_path / "t")
+    spark.range(100, 200, 1, 4).write.parquet(out)
+    assert len(_parquet_files(out)) == 4
+    one = spark.range(0, 50, 1, 1)
+    assert _jobs_run(spark, lambda: one.write.mode("overwrite")
+                     .parquet(str(tmp_path / "probe"))) == 1
+    assert _jobs_run(spark, lambda: write_compacted(one, out)) == 1
+    assert len(_parquet_files(out)) == 1
+    assert glob.glob(str(tmp_path / "*._staging-*")) == []
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) \
+        == list(range(50))
+
+    # two staged files: rewritten into the one output file
+    assert _jobs_run(spark, lambda: write_compacted(
+        spark.range(0, 50, 1, 2), out)) > 1
+    assert len(_parquet_files(out)) == 1
+    assert _jobs_run(spark, lambda: write_compacted(one, out, mode="append")) > 1
+    assert spark.read.parquet(out).count() == 100
+    assert len(_parquet_files(out)) == 2
+    parts = str(tmp_path / "parts")
+    assert _jobs_run(spark, lambda: write_compacted(
+        one.withColumn("p", F.col("id") % 2), parts, partition_by=["p"])) > 1
+    assert sorted(glob.glob(f"{parts}/p=*/*.parquet")) == _parquet_files(parts)
+    assert {os.path.basename(os.path.dirname(f)) for f in _parquet_files(parts)} \
+        == {"p=0", "p=1"}
+    assert glob.glob(str(tmp_path / "*._staging-*")) == []
 
 
 def test_write_compacted_range_layout_gives_disjoint_file_ranges(spark, tmp_path):

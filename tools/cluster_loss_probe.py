@@ -32,6 +32,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
+from executors import exec_pids, wait_executors  # noqa: E402
+
 
 def _words(n: int, tag: str) -> str:
     return " ".join(f"{tag}{i}" for i in range(n))
@@ -50,29 +52,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
-    def exec_pids() -> list[int]:
-        out = []
-        for p in os.listdir("/proc"):
-            if not p.isdigit():
-                continue
-            try:
-                with open(f"/proc/{p}/cmdline", "rb") as f:
-                    cmd = f.read().replace(b"\0", b" ").decode(
-                        errors="ignore")
-            except OSError:
-                continue
-            if "CoarseGrainedExecutorBackend" in cmd and app_id in cmd:
-                out.append(int(p))
-        return sorted(out)
-
-    def wait_executors(n: int = 2, timeout: float = 90.0) -> None:
-        deadline = time.time() + timeout
-        while len(seen := exec_pids()) < n:
-            if time.time() >= deadline:
-                raise RuntimeError(
-                    f"{len(seen)} of {n} executors up after {timeout:.0f}s")
-            time.sleep(0.5)
-
     def make_inputs():
         corpus_raw = spark.createDataFrame(
             [(1, _words(60, "alpha"), "web", "en"),
@@ -87,7 +66,7 @@ def main() -> None:
             "doc_id long, text string, source string, lang string")
         return corpus_raw, new
 
-    wait_executors()
+    wait_executors(app_id)
     corpus_raw, new = make_inputs()
 
     # undisturbed reference run (default barriers, no kills)
@@ -105,7 +84,7 @@ def main() -> None:
         out = real_barrier(df, reliable)
         if state["armed"]:
             state["armed"] = False
-            for pid in exec_pids():
+            for pid in exec_pids(app_id):
                 os.kill(pid, signal.SIGKILL)
                 state["kills"] += 1
             time.sleep(1.0)
@@ -120,7 +99,7 @@ def main() -> None:
         C.extend_corpus(corpus_raw, new).docs.collect()
     except Exception:
         local_failed = True
-    wait_executors()
+    wait_executors(app_id)
 
     # leg 2: reliable barriers must complete with identical admissions
     spark.sparkContext.setCheckpointDir("/tmp/cluster_loss_probe_ckpt")

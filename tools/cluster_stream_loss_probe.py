@@ -58,6 +58,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
+from executors import exec_pids, wait_executors  # noqa: E402
+
 N_FILES = 18                 # real data files (one microbatch each)
 ROWS_PER_FILE = 40
 DUP_ROWS = 10                # odd files repeat 10 exact rows of file b-1
@@ -89,29 +91,6 @@ def main() -> None:
              .appName("cluster-stream-loss-probe").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
-
-    def exec_pids() -> list[int]:
-        out = []
-        for p in os.listdir("/proc"):
-            if not p.isdigit():
-                continue
-            try:
-                with open(f"/proc/{p}/cmdline", "rb") as f:
-                    cmd = f.read().replace(b"\0", b" ").decode(
-                        errors="ignore")
-            except OSError:
-                continue
-            if "CoarseGrainedExecutorBackend" in cmd and app_id in cmd:
-                out.append(int(p))
-        return sorted(out)
-
-    def wait_executors(n: int = 2, timeout: float = 90.0) -> None:
-        deadline = time.time() + timeout
-        while len(seen := exec_pids()) < n:
-            if time.time() >= deadline:
-                raise RuntimeError(
-                    f"{len(seen)} of {n} executors up after {timeout:.0f}s")
-            time.sleep(0.5)
 
     schema = StructType([
         StructField("ts", TimestampType()),
@@ -192,7 +171,7 @@ def main() -> None:
                             if bid >= kb and kb not in fired:
                                 fired.add(kb)
                                 time.sleep(0.2)  # land mid-next-batch
-                                for pid in exec_pids():
+                                for pid in exec_pids(app_id):
                                     try:
                                         os.kill(pid, signal.SIGKILL)
                                         leg_kills["n"] += 1
@@ -207,7 +186,7 @@ def main() -> None:
         q.awaitTermination()
         prog = q.lastProgress
         batches = (prog.get("batchId", -1) + 1) if prog else 0
-        wait_executors()
+        wait_executors(app_id)
 
         out = spark.read.parquet(sink)   # metadata-aware: committed only
         rows = sorted(tuple(r) for r in out.collect())
@@ -218,7 +197,7 @@ def main() -> None:
                 "kills": leg_kills["n"], "disk_files": disk,
                 "committed_files": committed}
 
-    wait_executors()
+    wait_executors(app_id)
     root = tempfile.mkdtemp(prefix="stream_loss_")
     legs, refs = [], {}
     for job in JOBS:
